@@ -157,14 +157,15 @@ object CacheIO {
   }
 
   /** Cache lookup: metadata file present AND table present => re-read
-    * (reference `core_caching.py:409-471`). Returns None on miss. */
+    * (reference `core_caching.py:409-471`). Returns None on miss, and for
+    * a plan that cannot be rendered (it has no fingerprint). */
   def readCacheIfExist(
       df: DataFrame,
       queryPlan: Option[String] = None,
       inputDirModDatetime: Option[ListMap[String, String]] = None): Option[DataFrame] = {
     val spark = df.sparkSession
+    val plan = queryPlan.orElse(PlanFingerprint.queryPlan(df)).getOrElse(return None)
     val sources = inputDirModDatetime.getOrElse(Freshness.inputDirModTimes(df))
-    val plan = queryPlan.getOrElse(PlanFingerprint.getQueryPlan(df))
     val (hashName, _, metadataFilePath, _) =
       CacheMetadata.tableCacheInfo(sources, plan)
     val tableName = CacheConfig.current.tableNameFromHash(hashName)
@@ -184,7 +185,8 @@ object CacheIO {
   /** Materialize to the cache and return the table-backed DataFrame when
     * `replace` (reference `core_caching.py:474-516`): the caller's lineage
     * is replaced by a plain table scan, so downstream plans hash against
-    * the cache table. */
+    * the cache table. Throws IllegalArgumentException, writing nothing,
+    * when no `queryPlan` is given and the plan cannot be rendered. */
   def writeCache(
       df: DataFrame,
       replace: Boolean = true,
@@ -194,8 +196,8 @@ object CacheIO {
       cachePath: Option[String] = None,
       partitionBy: Seq[String] = Nil,
       bucketBy: Option[(Int, Seq[String])] = None): DataFrame = {
-    val sources = inputDirModDatetime.getOrElse(Freshness.inputDirModTimes(df))
     val plan = if (queryPlan.nonEmpty) queryPlan else PlanFingerprint.getQueryPlan(df)
+    val sources = inputDirModDatetime.getOrElse(Freshness.inputDirModTimes(df))
     val (finalHash, _, metadataFilePath, metadataTxt) =
       CacheMetadata.tableCacheInfo(sources, plan, hashName, cachePath)
     val tableName = CacheConfig.current.tableNameFromHash(finalHash)
@@ -255,7 +257,8 @@ object CacheIO {
   /** Hash cascade for a DataFrame (reference `core_caching.py:527-571`):
     * direct-data registry tag, then a pure scan of a `data_*` table, then
     * a cache-table hash extracted from the plan text, else
-    * `MD5(metadata)`. */
+    * `MD5(metadata)`. Throws IllegalArgumentException when the plan cannot
+    * be rendered: such a DataFrame has no hash. */
   def tableHash(df: DataFrame): String = {
     val cfg = CacheConfig.current
     val plan = PlanFingerprint.getQueryPlan(df)

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** Plan-derived compute-cost model.
@@ -46,54 +47,22 @@ object Complexity {
     val distinctN = countOcc(p, "distinct") + countOcc(p, "distinct ")
     val udfN = countOcc(p, "udf")
 
-    var multiplier = MultiplierBase
-    def apply(f: Factor, n: Int): Unit =
-      if (n > 0) multiplier *= f.base * math.pow(f.inc, (n - 1).toDouble)
-
-    apply(Join, joinN)
-    apply(WindowF, windowN)
-    apply(Sort, sortN)
-    apply(Distinct, distinctN)
-    apply(Udf, udfN)
-
     // Simple vs complex aggregate split (reference qce.py:142-146):
     // complex when the plan carries grouping expressions or >1 "agg".
     val isComplexStructure =
       p.contains("groupingexpressions") || countOcc(p, "agg") > 1
-    if (aggregateN > 0) {
-      val f = if (isComplexStructure) AggComplex else AggSimple
-      apply(f, aggregateN)
-    }
+    val multiplier = multiply(Join -> joinN, WindowF -> windowN, Sort -> sortN,
+      Distinct -> distinctN, Udf -> udfN,
+      (if (isComplexStructure) AggComplex else AggSimple) -> aggregateN)
     (totalSizeGb * multiplier, multiplier)
   }
 
-  /** Per-input-file sizes in GB (reference `qce.py:17-83`).
-    *
-    * Unlike the reference's one-`getFileStatus`-RPC-per-file loop, files
-    * are grouped by parent directory and sized with ONE `listStatus` per
-    * directory — at 100 TB / 1M files the reference pattern is ~1M
-    * sequential driver RPCs inside every cache decision; this is
-    * O(directories). Files missing from a listing (moved mid-probe) fall
-    * back to an individual probe. */
-  def inputFileSizesGb(df: DataFrame): Seq[Double] = {
-    val files = try df.inputFiles.toSeq catch { case _: Throwable => Seq.empty }
-    if (files.isEmpty) return Seq.empty
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val byDir = files.map(new Path(_)).groupBy(_.getParent)
-    byDir.toSeq.flatMap { case (dir, paths) =>
-      val listed: Map[String, Long] =
-        try {
-          val fs = dir.getFileSystem(conf)
-          fs.listStatus(dir).map(st => st.getPath.getName -> st.getLen).toMap
-        } catch { case _: Throwable => Map.empty }
-      paths.flatMap { p =>
-        listed.get(p.getName).orElse {
-          try Some(p.getFileSystem(conf).getFileStatus(p).getLen)
-          catch { case _: Throwable => None }
-        }.map(_.toDouble / (1024.0 * 1024 * 1024))
-      }
+  /** The base multiplier times each present factor's base and per-repeat
+    * increments, applied in the given order. */
+  private def multiply(counts: (Factor, Int)*): Double =
+    counts.foldLeft(MultiplierBase) { case (m, (f, n)) =>
+      if (n > 0) m * (f.base * math.pow(f.inc, (n - 1).toDouble)) else m
     }
-  }
 
   /** Structured estimator (config `useTreeEstimator`): count operator
     * NODES in the optimized logical plan instead of keywords in the
@@ -125,39 +94,28 @@ object Complexity {
       case p => p.expressions.map(_.collect { case _: ScalaUDF => 1 }.sum).sum
     }.sum
 
-    var multiplier = MultiplierBase
-    def apply(f: Factor, n: Int): Unit =
-      if (n > 0) multiplier *= f.base * math.pow(f.inc, (n - 1).toDouble)
-    apply(Join, joinN)
-    apply(WindowF, windowN)
-    apply(Sort, sortN)
-    apply(Distinct, distinctN)
-    apply(Udf, udfN)
-    apply(AggComplex, aggComplexN)
-    apply(AggSimple, aggSimpleN)
-    multiplier
+    multiply(Join -> joinN, WindowF -> windowN, Sort -> sortN, Distinct -> distinctN,
+      Udf -> udfN, AggComplex -> aggComplexN, AggSimple -> aggSimpleN)
   }
 
   /** (complexity, multiplier, totalSizeGb) for a DataFrame (reference
     * `qce.py:202-257`): zero input size still yields a plan multiplier;
     * an unreadable plan degrades to multiplier 1.0. */
-  def estimate(df: DataFrame): (Double, Double, Double) = {
-    val totalSize = inputFileSizesGb(df).sum
-    if (CacheConfig.current.useTreeEstimator) {
-      val m = try multiplierFromTree(df) catch { case _: Throwable => 1.0 }
-      return (totalSize * m, m, totalSize)
-    }
-    val plan = PlanFingerprint.extendedPlanText(df).toLowerCase
-    if (totalSize == 0.0) {
-      if (plan.startsWith("error:")) (0.0, 1.0, 0.0)
+  def estimate(df: DataFrame): (Double, Double, Double) =
+    estimate(df, Freshness.snapshot(df))
+
+  /** [[estimate]] with the input size taken from the decision's source
+    * snapshot: the summed lengths Spark's FileIndex already holds, where
+    * the reference stats every input file (`qce.py:17-83`). */
+  def estimate(df: DataFrame, sources: SourceSnapshot): (Double, Double, Double) = {
+    val totalSize = sources.totalBytes / (1024.0 * 1024 * 1024)
+    val m =
+      if (CacheConfig.current.useTreeEstimator)
+        try multiplierFromTree(df) catch { case NonFatal(_) => 1.0 }
       else {
-        val (_, m) = calculateFromPlan(plan, 0.0)
-        (0.0, m, 0.0)
+        val plan = PlanFingerprint.extendedPlanText(df).toLowerCase
+        if (plan.startsWith("error:")) 1.0 else calculateFromPlan(plan, totalSize)._2
       }
-    } else if (plan.startsWith("error:")) (totalSize, 1.0, totalSize)
-    else {
-      val (c, m) = calculateFromPlan(plan, totalSize)
-      (c, m, totalSize)
-    }
+    (totalSize * m, m, totalSize)
   }
 }

@@ -1,26 +1,55 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDateTime, ZoneOffset}
 
 import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
 
-/** Input-source freshness probe.
+/** What one cache decision knows about its inputs, taken once.
   *
-  * The newest modification time of every input directory is baked into the
-  * cache fingerprint, so a data change produces a new hash and therefore a
-  * cache miss (reference `dbfs_spark_cache/core_caching.py:212-297`).
-  * Probes are per *directory*, not per file — one `listStatus` per input
-  * dir regardless of file count, which is what keeps this viable against
-  * 100 TB sources with millions of files.
+  * @param freshness  the source lines hashed into the fingerprint
+  *                   ([[Freshness.inputDirModTimes]])
+  * @param totalBytes summed length of every file the plan scans, cache
+  *                   tables included — the cost model's input size
+  */
+final case class SourceSnapshot(freshness: ListMap[String, String], totalBytes: Long)
+
+/** Input-source freshness.
+  *
+  * The reference bakes the newest modification time of every input
+  * directory into the cache fingerprint, listing each directory on every
+  * call (`dbfs_spark_cache/core_caching.py:212-297`). That misses a
+  * deleted file that was not the newest and a rewrite within the same
+  * second, and it costs one listing per directory, O(files) in total.
+  *
+  * Here the inputs come from what Spark already holds: each file relation's
+  * `FileIndex` carries every file's path, length and mtime. For an
+  * `InMemoryFileIndex` (any path-based read or unpartitioned table) a
+  * snapshot lists nothing; a partitioned catalog table's index lists its
+  * partitions once, as its scan would. The snapshot is the file list the
+  * DataFrame will scan (before partition pruning), as Spark listed it when
+  * the relation was created — the same contract as Spark's own scans and
+  * `REFRESH TABLE`. A DataFrame re-read with `spark.read` after a source
+  * change lists again and so gets a new fingerprint; a DataFrame built
+  * before the change keeps its old files and its old fingerprint.
   */
 object Freshness {
 
   val SchemaChangedPlaceholder = "<schema_changed_placeholder>"
-  val DirectDataCacheMarker = "<direct_data_cache>"
+
+  /** Reserved source key whose value is the MD5 of the sorted
+    * `(path, length, mtime-millis)` triples of every scanned file: the
+    * part of the fingerprint that makes invalidation exact. */
+  val InputFilesDigestKey = "<input_files_md5>"
 
   /** Timestamp format used in metadata text (reference
     * `core_caching.py:378`: `%Y-%m-%d %H:%M:%S`). */
@@ -32,36 +61,63 @@ object Freshness {
       .ofInstant(Instant.ofEpochMilli(millis), ZoneOffset.UTC)
       .format(TsFormat)
 
-  /** Max modification time per input directory, formatted, in sorted dir
-    * order (reference `core_caching.py:212-297`). Special results:
-    *  - empty map: reads a catalog `data_*` table, or no file inputs
-    *  - `Map(SchemaChangedPlaceholder -> now)`: analysis-time schema change
+  /** The source lines of `df`'s fingerprint; see the `LogicalPlan`
+    * overload. */
+  def inputDirModTimes(df: DataFrame): ListMap[String, String] =
+    snapshot(df).freshness
+
+  /** Source lines of a plan's fingerprint:
+    *  - per input directory, the newest mtime of its scanned files, in
+    *    sorted directory order (reference parity, `core_caching.py:212-297`);
+    *  - then [[InputFilesDigestKey]] with the digest of every scanned file.
     *
-    * Skips `_delta_log/` entries and standard cache dirs
-    * (`^<cacheDir>/<32hex>/?$`, reference `:289-293`) so cache-on-cache
-    * reads don't self-invalidate.
+    * Special results:
+    *  - empty map: no file relation outside the cache database (in-memory
+    *    data, or a read of cache or `data_` tables only — cache-on-cache
+    *    reads must not invalidate themselves);
+    *  - `Map(SchemaChangedPlaceholder -> now)`: analysis-time schema change.
     */
-  def inputDirModTimes(df: DataFrame): ListMap[String, String] = {
-    val cfg = CacheConfig.current
-    val plan = PlanFingerprint.getQueryPlan(df)
+  def inputDirModTimes(plan: LogicalPlan): ListMap[String, String] =
+    snapshot(plan).freshness
 
-    // Reading a catalog data_* table => standard caching logic, no sources
-    // (reference core_caching.py:244-250).
-    if (PlanFingerprint
-        .findCatalogTablePattern(plan, cfg.cacheDatabase, "data_")
-        .isDefined) return ListMap.empty
+  def snapshot(df: DataFrame): SourceSnapshot = snapshot(df.queryExecution.analyzed)
 
-    val inputFiles: Array[String] = inputFilesSafe(df.inputFiles) match {
-      case Left(special) => return special
-      case Right(files) => files
+  def snapshot(plan: LogicalPlan): SourceSnapshot =
+    inputFilesSafe(scannedFiles(plan)) match {
+      case Left(special) => SourceSnapshot(special, 0L)
+      case Right(relations) =>
+        val sources = relations.collect { case (false, files) => files }.flatten
+        val total = relations.iterator.flatMap(_._2).map(_.getLen).sum
+        SourceSnapshot(if (sources.isEmpty) ListMap.empty else render(sources), total)
     }
-    if (inputFiles.isEmpty) return ListMap.empty
 
-    dirModTimesForFiles(inputFiles,
-      df.sparkSession.sparkContext.hadoopConfiguration)
+  /** Per file relation of `plan` (subqueries included): whether it is a
+    * table of the cache database, and its files. */
+  private def scannedFiles(plan: LogicalPlan): Seq[(Boolean, Seq[FileStatus])] = {
+    val cacheDb = CacheConfig.current.cacheDatabase
+    def files(index: FileIndex): Seq[FileStatus] =
+      index.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+    plan.collectWithSubqueries {
+      case LogicalRelation(h: HadoopFsRelation, _, table, _, _) =>
+        (table.exists(_.identifier.database.exists(_.equalsIgnoreCase(cacheDb))),
+          files(h.location))
+      case DataSourceV2Relation(t: FileTable, _, _, _, _, _) => (false, files(t.fileIndex))
+    }
   }
 
-  /** `inputFiles` fetch with the reference's error contract
+  private def render(files: Seq[FileStatus]): ListMap[String, String] = {
+    val byPath = files.map(f => (f.getPath.toString, f)).sortBy(_._1)
+    val md5 = MessageDigest.getInstance("MD5")
+    byPath.foreach { case (p, f) =>
+      md5.update(s"$p\t${f.getLen}\t${f.getModificationTime}\n".getBytes(StandardCharsets.UTF_8))
+    }
+    val dirs = byPath.groupMapReduce { case (p, _) => p.substring(0, p.lastIndexOf('/').max(0)) }(
+      _._2.getModificationTime)(math.max)
+    ListMap(dirs.toSeq.sortBy(_._1).map { case (d, t) => d -> formatMillis(t) }: _*) +
+      (InputFilesDigestKey -> PlanFingerprint.hex(md5.digest()))
+  }
+
+  /** Source fetch with the reference's error contract
     * (`core_caching.py:258-269`): a Delta-style "schema changed since
     * analysis" error maps to `Left(Map(SchemaChangedPlaceholder → now))`
     * — a freshness value no cache entry can ever match, forcing
@@ -70,52 +126,14 @@ object Freshness {
     * build with no Delta jar (`FreshnessSpec` pins all three outcomes);
     * the error-code match is on the message substring, exactly what
     * `DELTA_SCHEMA_CHANGE_SINCE_ANALYSIS` carries on a real cluster. */
-  private[graft] def inputFilesSafe(
-      fetch: => Array[String]): Either[ListMap[String, String], Array[String]] =
+  private[graft] def inputFilesSafe[T](fetch: => T): Either[ListMap[String, String], T] =
     try Right(fetch)
     catch {
-      case e: Throwable if Option(e.getMessage)
-            .exists(_.contains("SCHEMA_CHANGE")) =>
+      case NonFatal(e) if Option(e.getMessage).exists(_.contains("SCHEMA_CHANGE")) =>
         Left(ListMap(
           SchemaChangedPlaceholder -> LocalDateTime
             .now(ZoneOffset.UTC)
             .format(TsFormat)))
-      case _: Throwable => Left(ListMap.empty)
+      case NonFatal(_) => Left(ListMap.empty)
     }
-
-  /** Dir-level mod-time map for an explicit file list — the core of
-    * [[inputDirModTimes]], also used when fingerprinting logical-plan
-    * subtrees (auto-substitution) where no DataFrame exists. */
-  def dirModTimesForFiles(
-      inputFiles: Array[String],
-      hadoopConf: org.apache.hadoop.conf.Configuration): ListMap[String, String] = {
-    val cfg = CacheConfig.current
-    val cacheDirBase = cfg.cacheDirSlash.stripSuffix("/")
-    val cacheDirRe =
-      ("^" + java.util.regex.Pattern.quote(cacheDirBase) +
-        "/[a-f0-9]{32}/?$").r
-
-    val dirs = inputFiles.map(f => new Path(f).getParent.toString).distinct
-    val entries = dirs.sorted.flatMap { d =>
-      if (cacheDirRe.findFirstIn(stripScheme(d)).isDefined) None
-      else lastModTimeOfDir(d, hadoopConf).map(d -> _)
-    }
-    ListMap(entries.toIndexedSeq: _*)
-  }
-
-  private def stripScheme(p: String): String =
-    p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:(//)?", "")
-
-  /** Newest mod time among a dir's non-`_delta_log` children, falling back
-    * to the dir's own mod time (reference `core_caching.py:217-240`). */
-  private def lastModTimeOfDir(
-      dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[String] =
-    try {
-      val path = new Path(dir)
-      val fs = path.getFileSystem(conf)
-      val listed = fs.listStatus(path).filterNot(_.getPath.getName == "_delta_log")
-      if (listed.isEmpty) Some(formatMillis(fs.getFileStatus(path).getModificationTime))
-      else Some(formatMillis(listed.map(_.getModificationTime).max))
-    } catch { case _: Throwable => None }
 }

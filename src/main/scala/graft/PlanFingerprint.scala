@@ -2,6 +2,8 @@ package graft
 
 import java.security.MessageDigest
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExtendedMode
 
@@ -91,15 +93,13 @@ object PlanFingerprint {
     })
   }
 
-  /** Apply the fingerprint cleaning to arbitrary plan text (used when
+  /** Apply the fingerprint cleaning to arbitrary plan text (also used when
     * fingerprinting logical-plan subtrees for auto-substitution). */
-  private[graft] def cleanPlanText(raw: String): String = clean(raw)
-
-  private def clean(raw: String): String = {
+  private[graft] def cleanPlanText(raw: String): String = {
     // The replacer's return value is a replacement TEMPLATE: a literal
     // `$` in the captured class name (legal in Scala object/inner-class
-    // toStrings like `Foo$@1a2b3c`) would throw and collapse different
-    // queries onto one "Error: ..." fingerprint — a silent wrong hit.
+    // toStrings like `Foo$@1a2b3c`) would throw and leave every such
+    // query without a fingerprint, i.e. uncacheable.
     val noAddr = objAddrRe.replaceAllIn(
       raw, m => scala.util.matching.Regex.quoteReplacement(m.group(1)))
     val noIds = Seq(exprIdRe, planIdRe, cteIdRe)
@@ -107,7 +107,8 @@ object PlanFingerprint {
     wsRe.replaceAllIn(canonicalizeLambdaVars(noIds), " ").trim
   }
 
-  /** Cache-fingerprint plan text: the cleaned ANALYZED logical plan.
+  /** Cache-fingerprint plan text: the cleaned ANALYZED logical plan, or
+    * None when it cannot be rendered.
     *
     * The reference hashes `explain(extended)` (`core_caching.py:300-325`),
     * but that text includes the optimized/physical sections, which are
@@ -118,19 +119,35 @@ object PlanFingerprint {
     * computed before cache substitution, fully captures query semantics
     * (sources, projections, literals), and is cache-state-invariant.
     * Input *paths* are covered by the freshness map that is hashed
-    * alongside this text (`CacheMetadata.render`). Returns an
-    * `Error: ...` string instead of throwing, as the reference does.
+    * alongside this text (`CacheMetadata.render`).
+    *
+    * Fails closed: the reference hashes an `Error: ...` string in place of
+    * the plan, so two unrenderable plans would share one entry. Here such
+    * a plan has no fingerprint and is uncacheable.
     */
-  def getQueryPlan(df: DataFrame): String =
-    try {
+  def queryPlan(df: DataFrame): Option[String] =
+    renderSafe {
       // `toString` truncates node field lists at
       // spark.sql.debug.maxToStringFields (default 25): two distinct
       // wide plans sharing a 25-column prefix would render as
       // `... N more fields` and hash EQUAL — a silent wrong cache hit.
       // Render with an explicit non-truncating maxFields instead.
-      val raw = df.queryExecution.analyzed.treeString(
+      df.queryExecution.analyzed.treeString(
         verbose = true, addSuffix = false, maxFields = Int.MaxValue,
         printOperatorId = false)
+    }
+
+  /** [[queryPlan]] for callers that cannot go on without a fingerprint:
+    * throws instead of returning text that would be hashed. */
+  def getQueryPlan(df: DataFrame): String =
+    queryPlan(df).getOrElse(throw new IllegalArgumentException(
+      "query plan cannot be rendered, so the DataFrame has no cache fingerprint"))
+
+  /** Clean a rendered plan, or None (logged) when rendering or cleaning
+    * throws. Takes the render as a thunk so the failure path is testable. */
+  private[graft] def renderSafe(render: => String): Option[String] =
+    try {
+      val raw = render
       if (raw.contains("UDF"))
         log(
           "UDF detected in query plan, cache invalidation for UDF code " +
@@ -142,9 +159,11 @@ object PlanFingerprint {
       // inspection, pinned by PlanStabilitySpec on synthetic plan text.
       photonNote(raw).foreach(note =>
         log(s"Photon limitations might affect caching:\n$note"))
-      clean(raw)
+      Some(cleanPlanText(raw))
     } catch {
-      case e: Throwable => s"Error: ${e.getMessage}"
+      case NonFatal(e) =>
+        log(s"Query plan cannot be rendered, not caching: ${e.getMessage}")
+        None
     }
 
   /** The Photon "not fully supported" explanation embedded in a plan
@@ -159,16 +178,16 @@ object PlanFingerprint {
   /** Cleaned extended-explain text (all four sections) — the input to
     * the keyword cost model, which the reference counts over the full
     * extended output (`query_complexity_estimation.py:127-135`). Not
-    * used for fingerprinting (see [[getQueryPlan]]). */
+    * used for fingerprinting (see [[queryPlan]]). */
   def extendedPlanText(df: DataFrame): String =
-    try clean(df.queryExecution.explainString(ExtendedMode))
-    catch { case e: Throwable => s"Error: ${e.getMessage}" }
+    try cleanPlanText(df.queryExecution.explainString(ExtendedMode))
+    catch { case NonFatal(e) => s"Error: ${e.getMessage}" }
 
   /** MD5 hex digest over UTF-8 bytes (reference `core_caching.py:399`). */
-  def md5Hex(s: String): String = {
-    val d = MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-    d.map(b => f"$b%02x").mkString
-  }
+  def md5Hex(s: String): String =
+    hex(MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")))
+
+  private[graft] def hex(bytes: Array[Byte]): String = bytes.map(b => f"$b%02x").mkString
 
   /** Find `hive_metastore.{db}.{prefix}<32hex>` or
     * `spark_catalog.{db}.{prefix}<32hex>` in plan/metadata text and return

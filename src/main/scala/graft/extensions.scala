@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 
@@ -56,7 +58,8 @@ object extensions {
         cachePath: Option[String] = None,
         partitionBy: Seq[String] = Nil,
         bucketBy: Option[(Int, Seq[String])] = None): DataFrame = {
-      val plan = PlanFingerprint.getQueryPlan(df)
+      // No fingerprint, no cache: an unrenderable plan passes through.
+      val plan = PlanFingerprint.queryPlan(df).getOrElse(return df)
       if (isUncacheableSource(plan)) return df
       // A pure direct-data cache read is already materialized — bypass
       // (reference dataframe_extensions.py:54-56).
@@ -68,7 +71,10 @@ object extensions {
         return df
       }
 
-      val inputInfo = Freshness.inputDirModTimes(df)
+      // One source snapshot serves the fingerprint, the lookup and, on a
+      // miss, the cost model's input size.
+      val sources = Freshness.snapshot(df)
+      val inputInfo = sources.freshness
       CacheIO.readCacheIfExist(df, Some(plan), Some(inputInfo)) match {
         case Some(hit) =>
           PlanFingerprint.log("Returning existing cache.")
@@ -81,7 +87,7 @@ object extensions {
         case None => ()
       }
 
-      val (complexity, multiplier, _) = Complexity.estimate(df)
+      val (complexity, multiplier, _) = Complexity.estimate(df, sources)
       val skipComplexity = dbfsCacheComplexityThreshold.exists(t =>
         t > 0 && complexity < t)
       val skipMultiplier = dbfsCacheMultiplierThreshold.exists(t =>
@@ -171,7 +177,7 @@ object extensions {
     val ordered =
       if (processInReverseOrder) specificDfs.reverse else specificDfs
     val eligible = ordered.filter { d =>
-      val h = try CacheIO.tableHash(d) catch { case _: Throwable => "" }
+      val h = try CacheIO.tableHash(d) catch { case NonFatal(_) => "" }
       if (h.startsWith("data_")) false
       else if (minComplexityThreshold.isEmpty && minMultiplierThreshold.isEmpty) true
       else
@@ -180,7 +186,7 @@ object extensions {
           val multOk = minMultiplierThreshold.forall(mult >= _)
           val valueOk = minComplexityThreshold.forall(value > _)
           multOk && valueOk
-        } catch { case _: Throwable => true } // inconclusive => include
+        } catch { case NonFatal(_) => true } // inconclusive => include
     }
     eligible.flatMap { d =>
       try {
@@ -188,7 +194,7 @@ object extensions {
         if (unpersistAfterBackup) d.unpersist()
         Some(d)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           PlanFingerprint.log(s"Backup failed: ${e.getMessage}")
           None
       }

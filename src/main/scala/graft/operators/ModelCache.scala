@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * seed) — refitting it on every query execution repeats a full
   * distributed pass (KMeans) or a schema-probe job + plane draw (LSH)
   * for a bit-identical result. Keyed on the input's ANALYZED-PLAN
-  * fingerprint ([[graft.PlanFingerprint.getQueryPlan]] — stable across
+  * fingerprint ([[graft.PlanFingerprint.queryPlan]] — stable across
   * re-created DataFrames over the same source, insensitive to expression
   * ids) plus every parameter that feeds the fit.
   *
@@ -47,18 +47,16 @@ object ModelCache {
     * mod-times matter for the same reason they drive table-cache
     * invalidation ([[graft.Freshness.inputDirModTimes]], hashed into
     * `CacheMetadata.render`): overwriting a source path in-session must
-    * refit, not serve the stale model. The freshness probe is one
-    * `listStatus` per input directory — noise next to the distributed
-    * fit job it guards. */
-  def inputKey(df: DataFrame): String = {
-    val freshness =
-      try graft.Freshness.inputDirModTimes(df)
+    * refit, not serve the stale model. The freshness probe reads the
+    * file lists Spark's FileIndex already holds — it lists no directory.
+    * None when the plan cannot be rendered: such an input has no key. */
+  def inputKey(df: DataFrame): Option[String] =
+    graft.PlanFingerprint.queryPlan(df).map { plan =>
+      val freshness = graft.Freshness.inputDirModTimes(df)
         .map { case (d, t) => s"$d=$t" }.mkString(",")
-      catch { case _: Throwable => "" }
-    graft.PlanFingerprint.md5Hex(
-      graft.PlanFingerprint.getQueryPlan(df) + "|" +
-        inputDirs(df).mkString(",") + "|" + freshness)
-  }
+      graft.PlanFingerprint.md5Hex(
+        plan + "|" + inputDirs(df).mkString(",") + "|" + freshness)
+    }
 
   /** Return the cached model for `key`, or run `fit` once and cache it.
     * With `spark.graft.modelCache=false` always refits (and does not
@@ -77,9 +75,9 @@ object ModelCache {
   def getOrFit[M <: AnyRef](df: DataFrame, params: String)(fit: => M): M = {
     val enabled =
       df.sparkSession.conf.get(ConfKey, "true").equalsIgnoreCase("true")
-    if (!enabled || inputDirs(df).isEmpty) fit
-    else {
-      val key = inputKey(df) + "|" + params
+    val keyed = if (enabled && inputDirs(df).nonEmpty) inputKey(df) else None
+    keyed.fold(fit) { k =>
+      val key = k + "|" + params
       val existing = cache.get(key)
       if (existing != null) existing.asInstanceOf[M]
       else {

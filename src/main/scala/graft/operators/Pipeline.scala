@@ -105,16 +105,17 @@ object Pipeline {
       // Overridable only so specs can pin the invalidation contract
       // (new version ⇒ old entries miss ⇒ stages recompute).
       version: Int = ReleasePipelineVersion): DataFrame = {
-    val rawPlan = graft.PlanFingerprint.getQueryPlan(docs)
+    // An unrenderable corpus plan has no fingerprint: every stage computes.
+    val rawPlan = graft.PlanFingerprint.queryPlan(docs)
     val inputInfo = graft.Freshness.inputDirModTimes(docs)
-    def stage(descriptor: String)(compute: => DataFrame): DataFrame = {
-      val keyPlan =
-        s"$rawPlan\n-- graft.release v$version stage: $descriptor"
-      graft.CacheIO
-        .readCacheIfExist(docs, Some(keyPlan), Some(inputInfo))
-        .getOrElse(graft.CacheIO.writeCache(compute, replace = true,
-          queryPlan = keyPlan, inputDirModDatetime = Some(inputInfo)))
-    }
+    def stage(descriptor: String)(compute: => DataFrame): DataFrame =
+      rawPlan.fold(compute) { raw =>
+        val keyPlan = s"$raw\n-- graft.release v$version stage: $descriptor"
+        graft.CacheIO
+          .readCacheIfExist(docs, Some(keyPlan), Some(inputInfo))
+          .getOrElse(graft.CacheIO.writeCache(compute, replace = true,
+            queryPlan = keyPlan, inputDirModDatetime = Some(inputInfo)))
+      }
     stage(s"manifest(id=$idCol,text=$textCol,window=$windowLen,bpe=$bpeRounds)") {
       releaseManifest(docs, idCol, textCol, windowLen, bpeRounds,
         materialize = th =>

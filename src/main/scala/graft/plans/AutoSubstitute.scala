@@ -25,10 +25,12 @@ import graft.{CacheConfig, CacheIO, CacheMetadata, Freshness, PlanFingerprint}
   * subtree boundary), and the same fingerprint pipeline as the API
   * layer, so entries written by either path are visible to both.
   *
-  * Cost control: fingerprinting probes the filesystem (freshness), so
-  * subtrees are pre-filtered against an in-memory index of plan-text
-  * hashes harvested from the cache metadata dir — non-matching subtrees
-  * cost one string render + MD5, no I/O.
+  * Cost control: subtrees are pre-filtered against an in-memory index of
+  * plan-text hashes harvested from the cache metadata dir — non-matching
+  * subtrees cost one string render + MD5, no I/O. A matching subtree is
+  * fingerprinted from the file lists its relations' FileIndexes already
+  * hold ([[graft.Freshness.inputDirModTimes]]), so it lists no directory
+  * either; only the metadata-file and catalog lookups touch storage.
   *
   * Gate: `spark.graft.autoSubstitute` via `CacheConfig.autoSubstitute`
   * (default off — parity with the reference requires API-layer-only
@@ -72,18 +74,14 @@ object AutoSubstitute {
     }
   }
 
-  /** Input files of a subtree (file-backed relations only). */
-  private def subtreeFiles(plan: LogicalPlan): Option[Array[String]] = {
-    var ok = true
-    val files = plan.collect {
-      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location.inputFiles
-      case l: LeafNode if !l.isInstanceOf[LogicalRelation] =>
-        // catalog/local/stream relations: freshness semantics differ —
-        // leave those subtrees to the API layer.
-        ok = false; Array.empty[String]
+  /** Whether every leaf of a subtree is a file-backed relation:
+    * catalog/local/stream relations have other freshness semantics, so
+    * those subtrees are left to the API layer. */
+  private def fileBacked(plan: LogicalPlan): Boolean =
+    plan.collectLeaves().forall {
+      case LogicalRelation(_: HadoopFsRelation, _, _, _, _) => true
+      case _ => false
     }
-    if (ok && files.nonEmpty) Some(files.flatten.toArray) else None
-  }
 
   final case class SubstituteCachedPlans(spark: SparkSession)
       extends Rule[LogicalPlan] {
@@ -105,11 +103,9 @@ object AutoSubstitute {
       // cache-on-cache re-entrancy; such plans need no substitution).
       if (planText.contains(CacheConfig.current.cacheDatabase + ".")) return None
       if (!index.contains(PlanFingerprint.md5Hex(planText))) return None
-      val files = subtreeFiles(sub).getOrElse(return None)
-      val sources = Freshness.dirModTimesForFiles(
-        files, spark.sparkContext.hadoopConfiguration)
+      if (!fileBacked(sub)) return None
       val (hash, _, metadataFilePath, _) =
-        CacheMetadata.tableCacheInfo(sources, planText)
+        CacheMetadata.tableCacheInfo(Freshness.inputDirModTimes(sub), planText)
       val tableName = CacheConfig.current.tableNameFromHash(hash)
       if (!CacheIO.exists(metadataFilePath, spark.sparkContext.hadoopConfiguration))
         return None

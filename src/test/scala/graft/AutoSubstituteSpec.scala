@@ -104,7 +104,6 @@ class AutoSubstituteSpec extends AnyFunSuite {
       assert(rq().filter(col("count") >= 0).queryExecution.analyzed.toString
         .contains(CacheConfig.current.cacheDatabase + "."), "hits while fresh")
     }
-    Thread.sleep(1100)
     spark.read.parquet(s"${TestSpark.sf0001}/region.parquet")
       .write.mode("overwrite").parquet(s"$d/r")
     withAutoSub {

@@ -1,9 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.DataType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extensions._
@@ -65,13 +69,96 @@ class CacheBehaviorSpec extends AnyFunSuite {
 
   test("data change invalidates: overwritten source yields a new hash") {
     val h0 = CacheIO.tableHash(ordersAgg())
-    Thread.sleep(1100) // mod-time resolution is 1s in the metadata format
     spark.read
       .parquet(s"${TestSpark.sf0001}/orders.parquet")
       .write.mode("overwrite").parquet(s"$srcDir/orders")
     val h1 = CacheIO.tableHash(ordersAgg())
     assert(h0 != h1, "source overwrite must change the fingerprint")
     assert(CacheIO.readCacheIfExist(ordersAgg()).isEmpty)
+  }
+
+  /** range(0, 1000) as 4 parquet parts (ids 0-249 in part 0), every
+    * file's mtime pinned to one whole second a minute ago. */
+  private def fourParts(): (String, Long) = {
+    val d = Files.createTempDirectory("graft-exact").toString + "/t"
+    spark.range(0, 1000, 1, 4).write.parquet(d)
+    val second = (System.currentTimeMillis() / 1000 - 60) * 1000
+    new java.io.File(d).listFiles().foreach(_.setLastModified(second))
+    (d, second)
+  }
+
+  /** The first data part and its checksum sidecar. */
+  private def firstPart(d: String): (java.io.File, java.io.File) = {
+    val part = new java.io.File(d).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .minBy(_.getName)
+    (part, new java.io.File(d, s".${part.getName}.crc"))
+  }
+
+  private def countSum(d: String): DataFrame =
+    spark.read.parquet(d).agg(count("*").as("n"), sum("id").as("s"))
+
+  private def rows(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+
+  test("deleting a part that is not the newest invalidates") {
+    val (d, _) = fourParts()
+    assert(rows(cacheIt(countSum(d))) == Seq((1000L, 499500L)))
+    val (part, crc) = firstPart(d)
+    assert(part.delete() && crc.delete())
+    assert(rows(cacheIt(countSum(d))) == Seq((750L, 468375L)),
+      "a deleted part must not be served from the old entry")
+  }
+
+  test("rewriting a file in place within the same second invalidates") {
+    val (d, second) = fourParts()
+    assert(rows(cacheIt(countSum(d))) == Seq((1000L, 499500L)))
+    // ids 0-9 replace ids 0-249: a shorter file under the same name,
+    // stamped within the same second as every other file.
+    val small = Files.createTempDirectory("graft-small").toString + "/t"
+    spark.range(0, 10, 1, 1).write.parquet(small)
+    val (part, crc) = firstPart(d)
+    val (srcPart, srcCrc) = firstPart(small)
+    assert(srcPart.length != part.length)
+    Files.copy(srcPart.toPath, part.toPath, StandardCopyOption.REPLACE_EXISTING)
+    Files.copy(srcCrc.toPath, crc.toPath, StandardCopyOption.REPLACE_EXISTING)
+    Seq(part, crc).foreach(_.setLastModified(second + 500))
+    assert(rows(cacheIt(countSum(d))) == Seq((760L, 468420L)),
+      "a same-second rewrite must not be served from the old entry")
+  }
+
+  test("a direct-data dimension joined to a changed file source invalidates") {
+    val (d, _) = fourParts()
+    val dim = spark.createCachedDataFrame(
+      Seq(org.apache.spark.sql.Row(0L, "even"), org.apache.spark.sql.Row(1L, "odd")),
+      "k BIGINT, label STRING")
+    def q(): DataFrame = spark.read.parquet(d)
+      .join(dim, col("id") % 2 === col("k"))
+      .groupBy("label").agg(count("*").as("n"), sum("id").as("s"))
+      .orderBy("label").select("n", "s")
+    assert(rows(cacheIt(q())) == Seq((500L, 249500L), (500L, 250000L)))
+    spark.range(0, 10, 1, 1).write.mode("overwrite").parquet(d)
+    assert(rows(cacheIt(q())) == Seq((5L, 20L), (5L, 25L)),
+      "a file change under a direct-data join must not be served from the old entry")
+  }
+
+  test("an unrenderable plan fails closed: uncacheable, never hashed") {
+    // The render is a thunk: a throwing render yields no fingerprint.
+    assert(PlanFingerprint.renderSafe(throw new IllegalStateException("boom")).isEmpty)
+    assert(PlanFingerprint.renderSafe("Project [a#12]").contains("Project [a]"))
+    // End to end: a plan whose text cannot be rendered passes through.
+    val df = ordersAgg().select(
+      Bridge.column(CacheBehaviorSpec.Unrenderable(Bridge.expression(col("n")))).as("v"))
+    assert(PlanFingerprint.queryPlan(df).isEmpty)
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${CacheConfig.current.cacheDatabase}")
+    val nTables = spark.catalog
+      .listTables(CacheConfig.current.cacheDatabase).collect().length
+    assert(cacheIt(df) eq df, "cacheToDbfs must return the DataFrame untouched")
+    assert(CacheIO.readCacheIfExist(df).isEmpty)
+    intercept[IllegalArgumentException](CacheIO.tableHash(df))
+    intercept[IllegalArgumentException](CacheIO.writeCache(df))
+    assert(spark.catalog.listTables(CacheConfig.current.cacheDatabase)
+      .collect().length == nTables, "nothing may be written for it")
   }
 
   test("plan change invalidates: added column yields a new hash") {
@@ -387,5 +474,16 @@ class CacheBehaviorSpec extends AnyFunSuite {
     // explicit zero thresholds cache.
     assert(!spark.catalog.tableExists(CacheConfig.current.tableNameFromHash(h)))
     assert(out.count() == df.count())
+  }
+}
+
+object CacheBehaviorSpec {
+
+  /** Evaluates to its child, but its text cannot be rendered. */
+  final case class Unrenderable(child: Expression) extends UnaryExpression with CodegenFallback {
+    override def dataType: DataType = child.dataType
+    override protected def nullSafeEval(input: Any): Any = input
+    override def toString: String = throw new IllegalStateException("unrenderable")
+    override protected def withNewChildInternal(c: Expression): Unrenderable = copy(child = c)
   }
 }

@@ -2,25 +2,33 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extensions._
 
-/** Freshness-probe edge cases (reference `core_caching.py:212-297`). */
+/** Freshness edge cases (reference `core_caching.py:212-297`) and the
+  * source snapshot's contract. */
 class FreshnessSpec extends AnyFunSuite {
 
   private def spark = TestSpark.spark
 
+  /** The per-directory lines of a freshness map, without the digest. */
+  private def dirLines(m: ListMap[String, String]) = m - Freshness.InputFilesDigestKey
+
   test("one entry per input directory with its newest child mtime") {
-    // nation.parquet is a single FILE, so the probed dir is its parent —
-    // dir-level granularity (one listStatus per dir) like the reference.
+    // The directory lines are followed by the digest of every scanned
+    // file. nation.parquet is a single FILE, so its directory is its parent.
     val df = spark.read.parquet(s"${TestSpark.sf0001}/nation.parquet")
     val m = Freshness.inputDirModTimes(df)
-    assert(m.size == 1)
+    assert(m.size == 2)
     val (dir, ts) = m.head
     assert(dir.endsWith("sf0.001"))
     assert(ts.matches("\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}"))
+    assert(m.last._1 == Freshness.InputFilesDigestKey)
+    assert(m.last._2.matches("[0-9a-f]{32}"))
   }
 
   test("_delta_log children are excluded from the freshness probe") {
@@ -28,7 +36,6 @@ class FreshnessSpec extends AnyFunSuite {
     spark.read.parquet(s"${TestSpark.sf0001}/nation.parquet")
       .write.mode("overwrite").parquet(s"$d/t")
     val before = Freshness.inputDirModTimes(spark.read.parquet(s"$d/t"))
-    Thread.sleep(1100)
     // a delta-log write must NOT invalidate
     Files.createDirectory(Paths.get(s"$d/t/_delta_log"))
     val after = Freshness.inputDirModTimes(spark.read.parquet(s"$d/t"))
@@ -54,17 +61,17 @@ class FreshnessSpec extends AnyFunSuite {
     // both single-file tables share the sf0.001 parent => one dir entry
     val a = spark.read.parquet(s"${TestSpark.sf0001}/nation.parquet")
     val b = spark.read.parquet(s"${TestSpark.sf0001}/region.parquet")
-    val m = Freshness.inputDirModTimes(
-      a.join(b, col("n_regionkey") === col("r_regionkey")))
+    val m = dirLines(Freshness.inputDirModTimes(
+      a.join(b, col("n_regionkey") === col("r_regionkey"))))
     assert(m.size == 1 && m.keys.head.endsWith("sf0.001"))
     // genuinely distinct parents (directory-style tables) stay separate
     val d = Files.createTempDirectory("graft-fresh2").toString
     a.write.mode("overwrite").parquet(s"$d/na")
     b.write.mode("overwrite").parquet(s"$d/re")
-    val m2 = Freshness.inputDirModTimes(
+    val m2 = dirLines(Freshness.inputDirModTimes(
       spark.read.parquet(s"$d/na").join(
         spark.read.parquet(s"$d/re"),
-        col("n_regionkey") === col("r_regionkey")))
+        col("n_regionkey") === col("r_regionkey"))))
     assert(m2.size == 2)
     assert(m2.keys.toSeq == m2.keys.toSeq.sorted)
   }
@@ -91,8 +98,32 @@ class FreshnessSpec extends AnyFunSuite {
     val other = Freshness.inputFilesSafe(
       throw new RuntimeException("FileNotFoundException: gone"))
     assert(other == Left(scala.collection.immutable.ListMap.empty))
-    // Success passes the file list through untouched.
+    // Success passes the fetched value through untouched.
     assert(Freshness.inputFilesSafe(Array("f1", "f2")) == Right(Array("f1", "f2")) ||
       Freshness.inputFilesSafe(Array("f1", "f2")).toOption.get.toList == List("f1", "f2"))
+  }
+
+  test("the snapshot is the file list the DataFrame scans, as Spark listed it") {
+    // Pinned contract (the same as Spark's own scans and REFRESH TABLE):
+    // the files are those the relation's FileIndex listed when the
+    // DataFrame was created. Taking the snapshot lists nothing, so it
+    // survives the directory's removal; a DataFrame re-read after a
+    // source change lists again and gets a new fingerprint.
+    val d = Files.createTempDirectory("graft-snap").toString + "/t"
+    spark.range(0, 100, 1, 2).write.parquet(d)
+    val held = spark.read.parquet(d)
+    val m0 = Freshness.inputDirModTimes(held)
+    val bytes0 = Freshness.snapshot(held).totalBytes
+    assert(bytes0 > 0)
+    spark.range(0, 50, 1, 1).write.mode("append").parquet(d)
+    assert(Freshness.inputDirModTimes(held) == m0,
+      "a held DataFrame keeps the files it was created with")
+    val reread = spark.read.parquet(d)
+    assert(Freshness.inputDirModTimes(reread) != m0, "a re-read sees the new file")
+    assert(Freshness.snapshot(reread).totalBytes > bytes0)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
+    assert(Freshness.inputDirModTimes(held) == m0, "the snapshot lists no directory")
+    assert(Complexity.estimate(held)._3 == bytes0 / (1024.0 * 1024 * 1024),
+      "the cost model sizes inputs from the same snapshot")
   }
 }

@@ -32,7 +32,6 @@ class SourcesSpec extends AnyFunSuite {
     val h0 = CacheIO.tableHash(q())
     assert(CacheIO.readCacheIfExist(q()).isDefined, "identical JSON query hits")
 
-    Thread.sleep(1100)
     spark.read.parquet(s"${TestSpark.sf0001}/nation.parquet")
       .write.mode("overwrite").json(s"$d/nation")
     assert(CacheIO.tableHash(q()) != h0, "JSON overwrite must invalidate")
