@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Link-graph analytics over a crawl's edge list — the ranking signal a
   * frontier scheduler consumes ([[Crawl.frontierPlan]]'s `priority`
@@ -37,12 +40,6 @@ object LinkGraph {
     else if (n >= AutoPinVertices) 1
     else 4
 
-  /** [[pageRankConverged]]'s small-graph inner cadence (AUTO below
-    * [[AutoPinVertices]], and the long-segment fallback): every 2,
-    * the 5k winner in the r13 A/B (SCALE.md — 13.2 s vs 14.2 lazy
-    * vs 19.6 pin-every-1). */
-  private[graft] val ConvergedSmallCadence = 2
-
   /** The static per-graph frames every iteration reuses. */
   private case class GraphFrames(
       edges: DataFrame, verts: DataFrame, outdeg: DataFrame)
@@ -59,40 +56,14 @@ object LinkGraph {
     GraphFrames(edges, verts, outdeg)
   }
 
-  /** Pin the STATIC frames once: every materialization job of an
-    * iterative loop otherwise re-derives the edge list (source scan +
-    * synthesis), the vertex distinct, and the out-degree aggregate
-    * from scratch — k checkpointed iterations pay those exchanges k
-    * times over. One O(E) + 2·O(V) local write buys every later job a
-    * block read instead. Measured at 200k vertices / 300k edges
-    * (SCALE.md r13 statics table): pageRank 8-it 11.3→9.0 s, PPR 8-it
-    * 11.0→9.8 s, hits 4-it 11.2→8.3 s; the 5k convergence loop
-    * 13.2→10.7 s. Values untouched — checkpoint is value-transparent,
-    * and the existing oracles gate it cross-engine. Callers skip the
-    * pin when no mid-loop materialization will happen (lazy runs,
-    * short loops): ONE job computes the statics once via exchange
-    * reuse anyway, and there the pin consistently LOSES — the
-    * checkpoint scans break whole-stage codegen at the source while
-    * the recompute stays fused (A/B'd on the lazy convergence loop at
-    * 200k: pinned 26.6-27.4 s vs unpinned 21.1-25.9 s). */
-  private def pinnedFrames(g: GraphFrames): GraphFrames = {
-    val e = Materialize.checkpoint(g.edges)
-    val v = Materialize.checkpoint(
-      e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct())
-    val o = Materialize.checkpoint(
-      e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
-    GraphFrames(e, v, o)
-  }
-
   /** The static per-vertex PageRank base `(id, outdeg)` (null outdeg =
     * dangling), LAZILY pinned — counting it is the one driver scalar
     * every PageRank entry point needs anyway (|V|: vbase has exactly
     * one row per vertex), so the count job materializes the pin as a
     * side effect: zero extra jobs, and every iteration (plus every
-    * mid-loop checkpoint and every convergence segment) reads O(V)
-    * pinned blocks instead of carrying the vertex-distinct + outdeg
-    * aggregate + join subtree inside its 2^k-replicated lineage (r18;
+    * mid-loop checkpoint) reads O(V) pinned blocks instead of carrying
+    * the vertex-distinct + outdeg aggregate + join subtree inside its
+    * 2^k-replicated lineage (r18;
     * the r17 carry-outdeg rewrite moved the joins out of the
     * iteration, this moves the derivation out of the plan). */
   private def pinnedVBase(g: GraphFrames): DataFrame =
@@ -133,10 +104,7 @@ object LinkGraph {
     * iteration counts — the same checkpoint-vs-lineage discipline as
     * [[Dedup]]'s pointer-jumping.
     *
-    * Returns `(id, rank_fp)` — `rank_fp/scale` is the rank as a
-    * fraction of total mass.
-    */
-  /** `initial` warm-starts the iteration from a prior run's
+    * `initial` warm-starts the iteration from a prior run's
     * `(id, rank_fp)` frame — the recrawl shape: last month's converged
     * ranks seed this month's graph, so a handful of iterations absorb
     * the delta instead of re-converging from uniform. Vertices absent
@@ -150,31 +118,24 @@ object LinkGraph {
     * `initial` self-corrects: the update is a contraction that
     * re-approaches total mass `scale` at rate num/den per iteration.
     *
-    * `materializeEvery` is the checkpoint-vs-lineage discipline the
-    * scaladoc above demands, as a parameter instead of prose: every k
+    * `materializeEvery` is that discipline as a parameter: every k
     * iterations `ranks` routes through [[Materialize.checkpoint]],
-    * bounding the plan at 2^k copies of the base per segment instead
-    * of 2^iterations total (the doubling comes from the two `ranks`
-    * references per iteration — see the lineage note above; measured
-    * in `tools/scale_probe_r12.scala`). The doubling is EXECUTION
-    * work, not just plan size — Spark shares no common subtrees
-    * across the two references, so every unpinned iteration's work is
-    * re-run by the next iteration's second branch: measured at 200k
-    * vertices / 300k edges, 8 iterations, the pinned-every-4 /
-    * every-2 / every-1 runs cost 44.7 / 18.2 / 14.7 s. On a SMALL
-    * graph the trade flips — each eager checkpoint is a full job
-    * launch, and at 5k vertices the per-job fixed latency dominates
-    * the (cheap) recompute: pin-every-1 measured 2× SLOWER than lazy
-    * segments in-sweep. Hence the default is AUTO (`-1`): pin every
-    * iteration when the vertex count — already on the driver for the
-    * uniform init — reaches [[LinkGraph.AutoPinVertices]], else every
-    * 4 (16 bounded base copies, zero mid-loop jobs). The crossover
-    * sits between those two measurements; 50k splits the band.
-    * Because every rank is a fixed-point Long, ANY cadence is
-    * BIT-IDENTICAL (spec-pinned in LinkGraphSpec, driver-gated by
-    * q_pagerank_pinned) — materialization is purely a physical
-    * decision, exactly like [[Dedup.nearDupComponents]]' per-round
-    * pinning. 0 disables (lazy — right only for 1-2 iterations). */
+    * bounding the plan at 2^k copies of the base. The doubling is
+    * EXECUTION work too — Spark shares no subtrees across the two
+    * references — so at 200k vertices / 300k edges, 8 iterations,
+    * pinning every 4 / 2 / 1 cost 44.7 / 18.2 / 14.7 s; at 5k vertices
+    * the per-job latency of each eager checkpoint dominates instead,
+    * and pin-every-1 measured 2× SLOWER than lazy segments. Hence AUTO
+    * (`-1`): every iteration from [[LinkGraph.AutoPinVertices]]
+    * vertices (the count is on the driver anyway), else every 4. Any
+    * cadence is BIT-IDENTICAL (fixed-point Longs; spec-pinned, and
+    * driver-gated by q_pagerank_pinned). 0 disables the mid-loop pins
+    * (right only for 1-2 iterations); the static base is pinned at
+    * every cadence — the |V| count writes it as a side effect, one
+    * O(V) block write and no extra job.
+    *
+    * Returns `(id, rank_fp)` — `rank_fp/scale` is the rank as a
+    * fraction of total mass. */
   def pageRank(
       edgesIn: DataFrame,
       srcCol: String,
@@ -195,56 +156,21 @@ object LinkGraph {
     val cadence = resolveCadence(materializeEvery, n)
     // Pin the EDGES only when the loop materializes MID-STREAM: then
     // ≥ 2 jobs (checkpoints + the final consumption) would each
-    // re-derive them. A lazy or single-segment run keeps the zero-
-    // extra-setup-jobs construction property instead. The vertex and
-    // out-degree statics no longer need their own pins at all — the
+    // re-derive them. A lazy or single-segment run skips that pin. The
+    // vertex and out-degree statics need no pins of their own — the
     // loop reads them off the already-materialized vbase.
-    val g =
-      if (cadence > 0 && iterations > cadence)
-        g0.copy(edges = Materialize.checkpoint(g0.edges))
-      else g0
-    pageRankLoop(g, n, iterations, dampingNum, dampingDen, scale,
-      initial, cadence, vbaseOverride = Some(vbase))
-  }
-
-  /** The iteration core over prebuilt [[GraphFrames]] — shared by
-    * [[pageRank]] (which derives the frames) and [[pageRankConverged]]
-    * (which derives AND pins them ONCE across all segments). */
-  private def pageRankLoop(
-      g: GraphFrames,
-      n: Long,
-      iterations: Int,
-      dampingNum: Long,
-      dampingDen: Long,
-      scale: Long,
-      initial: Option[DataFrame],
-      cadence: Int,
-      // The static per-vertex base (id, outdeg; null outdeg =
-      // dangling), carried ON the rank frame so every iteration drops
-      // two joins (r17 optimization, guide §2.4): contribs reads
-      // `outdeg` off the rank row instead of joining outdeg per
-      // iteration, and the dangling total is a FILTER over the rank
-      // frame instead of a left-anti join. The rank frame still has
-      // exactly TWO consumers per iteration (contribs, dangling) —
-      // lineage growth is unchanged at 2^k per unpinned segment.
-      // `vbaseOverride` (r18): single-shot callers pass the
-      // lazily-pinned base ([[pinnedVBase]], already materialized by
-      // their |V| count) so the derivation drops out of the
-      // 2^k-replicated lineage entirely; the segmented convergence
-      // loop passes None and keeps the per-segment derive-and-pin —
-      // the shared-override form was A/B'd there and LOST (solo
-      // q_pagerank_conv 4.9 → 5.9 s, jobs 177 → 212, cpu 1.4 → 2.8:
-      // more AQE shuffle sub-jobs per segment than the one saved
-      // checkpoint job).
-      vbaseOverride: Option[DataFrame] = None): DataFrame = {
+    val edges =
+      if (cadence > 0 && iterations > cadence) Materialize.checkpoint(g0.edges)
+      else g0.edges
     val init = scale / n
     val base = ((dampingDen - dampingNum) * init) / dampingDen
-    val vbase = vbaseOverride.getOrElse {
-      val vbase0 = g.verts
-        .join(g.outdeg.withColumnRenamed("src", "id"), Seq("id"), "left")
-      if (cadence > 0 && iterations > cadence) Materialize.checkpoint(vbase0)
-      else vbase0
-    }
+    // The static per-vertex base (id, outdeg; null outdeg = dangling)
+    // rides ON the rank frame, so every iteration drops two joins (r17):
+    // contribs reads `outdeg` off the rank row instead of joining
+    // outdeg per iteration, and the dangling total is a FILTER over the
+    // rank frame instead of a left-anti join. The rank frame still has
+    // exactly TWO consumers per iteration (contribs, dangling) —
+    // lineage growth is unchanged at 2^k per unpinned segment.
     var ranks = initial match {
       case None =>
         vbase.select(col("id"), col("outdeg"), lit(init).as("rank_fp"))
@@ -260,7 +186,7 @@ object LinkGraph {
       // NAMES (unique by construction), never dataset-qualified refs —
       // qualified attributes are ambiguous under Spark's self-join
       // dedup once the lineages share a scan.
-      val contribs = g.edges
+      val contribs = edges
         .join(ranks.withColumnRenamed("id", "src"), "src")
         .select(col("dst"), expr("rank_fp div outdeg").as("contrib"))
         .groupBy(col("dst"))
@@ -343,35 +269,26 @@ object LinkGraph {
 
   /** PageRank TO CONVERGENCE — the production loop: nobody knows the
     * right iteration count up front, so iterate in SEGMENTS of
-    * `segment` iterations, materialize the segment boundary, and stop
-    * when the L1 rank delta across the last segment drops to
-    * `tolFp` fixed-point units (or `maxIterations` is hit — loudly
-    * fine, the ranks are still exact for the iterations run).
+    * `segment` iterations and stop when the L1 rank delta across a
+    * segment drops to `tolFp` fixed-point units, or at `maxIterations`
+    * (the last segment is clamped; the first is never measured).
+    * Semantics are [[pageRank]]'s — a null endpoint is one more,
+    * dangling, vertex; overflow throws — and the result is
+    * BIT-IDENTICAL to `pageRank(iterationsRun)` (spec-pinned;
+    * driver-gated by q_pagerank_conv's exact oracle).
     *
-    * Driver traffic is one scalar per SEGMENT (the L1 aggregate),
-    * never per iteration, and the segment boundary is checkpointed
-    * anyway (the lineage discipline), so the convergence test rides
-    * the materialization it already needed. Warm-start exactness
-    * (`pageRank(k1)` then k2 more ≡ `pageRank(k1+k2)`, spec-pinned)
-    * is what makes the segmented loop BIT-IDENTICAL to a straight
-    * run of the same total iteration count — driver-gated by
-    * q_pagerank_conv's exact fixed-point oracle.
-    *
-    * `materializeEvery` is the INNER cadence (within a segment; the
-    * segment boundary ALWAYS pins — the L1 test needs it). AUTO
-    * (`-1`) INVERTS [[pageRank]]'s rule, because the boundary pin is
-    * already paid: it bounds lineage at 2^segment copies per segment
-    * regardless, and Spark's exchange reuse dedups the duplicated
-    * subtrees inside the one boundary job — so extra inner pins buy
-    * little recompute and cost one O(V) checkpoint write + job each.
-    * A/B'd at 5k and 200k vertices, segment 4, to the exact fixed
-    * point (tools/scale_probe_r13.scala, SCALE.md): inner cadence
-    * 0/1/2 cost 14.2/19.6/13.2 s at 5k and 23.9/29.2/26.1 s at 200k —
-    * pin-every-1 loses at BOTH sizes, lazy wins large (the O(V)
-    * writes dominate), every-2 wins small (job latency vs Catalyst
-    * mix). AUTO: fully lazy at ≥ [[AutoPinVertices]] when the segment
-    * is short enough for Catalyst (≤ 6), else every 2. Bit-identical
-    * at any cadence (spec-pinned).
+    * The loop is eager (one driver scalar per segment), so it runs on
+    * RDDs co-partitioned the GraphX way (Gonzalez et al., OSDI 2014)
+    * instead of a growing DataFrame plan: one CSR adjacency block and
+    * one rank array per hash partition of `spark.sql.shuffle.partitions`,
+    * in the same vertex order. An iteration is ONE job — the
+    * contributions summed by `reduceByKey` (the only shuffle), then the
+    * update zipped against the adjacency with the dangling total as a
+    * literal; the action returns the next dangling total and, at a
+    * measured segment end, the L1. States persist at
+    * [[Materialize.storageLevel]] until superseded; segment ends go
+    * through [[Materialize.checkpoint]], which bounds the lineage, and
+    * the returned frame reads the last one's pin.
     *
     * Returns (ranks, iterationsRun). */
   def pageRankConverged(
@@ -383,63 +300,172 @@ object LinkGraph {
       segment: Int = 4,
       dampingNum: Long = 85L,
       dampingDen: Long = 100L,
-      scale: Long = 1000000000L,
-      materializeEvery: Int = -1): (DataFrame, Int) = {
+      scale: Long = 1000000000L): (DataFrame, Int) = {
     require(tolFp >= 0, "tolerance must be non-negative")
     require(segment >= 1 && maxIterations >= segment,
       s"need 1 <= segment <= maxIterations, got $segment/$maxIterations")
-    val g0 = graphFrames(edgesIn, srcCol, dstCol)
-    val n = g0.verts.count()
-    require(n > 0, "pageRankConverged needs a non-empty edge list")
-    val inner =
-      if (materializeEvery >= 0) materializeEvery
-      else {
-        // Lazy segments need Catalyst to chew 2^segment plan copies at
-        // each boundary — fine at the default 4, a stall past ~6 (the
-        // r12 knee measurements), hence the segment guard.
-        if (n >= AutoPinVertices && segment <= 6) 0
-        else ConvergedSmallCadence
+    val spark = edgesIn.sparkSession
+    val sc = spark.sparkContext
+    val edges = edgesIn.select(
+      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+    val idNullable = edges.schema.fields.exists(_.nullable)
+    val part = new HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val level = Materialize.storageLevel(spark)
+    // Every RDD persisted here until released; on the way out all but
+    // the returned state go, on failure too.
+    val held = scala.collection.mutable.LinkedHashSet.empty[RDD[_]]
+    def release(r: RDD[_]): Unit =
+      if (held.remove(r)) r.unpersist(blocking = false)
+    var result: RDD[RankBlock] = null
+    try {
+      val adj = edges.rdd.flatMap(linkRecords).groupByKey(part)
+        .mapPartitions(it => Iterator.single(AdjBlock(it))).persist(level)
+      held += adj
+      val sizes = sc.runJob(adj, (it: Iterator[AdjBlock]) => {
+        val a = it.next(); (a.size.toLong, a.outdeg.count(_ == 0).toLong)
+      })
+      val n = sizes.map(_._1).sum
+      require(n > 0, "pageRankConverged needs a non-empty edge list")
+      val init = scale / n
+      val base = ((dampingDen - dampingNum) * init) / dampingDen
+
+      var state: RDD[RankBlock] =
+        adj.map(a => RankBlock(a.ids, Array.fill(a.size)(init), 0L, 0L))
+      var dang = Math.multiplyExact(init, sizes.map(_._2).sum)
+      var start = state // the last segment end, pinned
+      // Runs `steps` iterations; the last one is pinned as the new
+      // segment end and, when `measure`, also returns its L1 from `start`.
+      def advance(steps: Int, measure: Boolean): Long = {
+        var l1 = 0L
+        for (i <- 1 to steps) {
+          val end = i == steps
+          val insum = adj.zipPartitions(state)((ai, si) =>
+            ai.next().contributions(si.next()))
+            .reduceByKey(part, (a: Long, b: Long) => Math.addExact(a, b))
+          val lift = dang / n
+          val next =
+            if (measure && end)
+              adj.zipPartitions(insum, start) { (ai, ci, si) =>
+                Iterator.single(ai.next().update(
+                  ci, base, dampingNum, dampingDen, lift, si.next()))
+              }
+            else
+              adj.zipPartitions(insum) { (ai, ci) =>
+                Iterator.single(ai.next().update(
+                  ci, base, dampingNum, dampingDen, lift, null))
+              }
+          held += (if (end) Materialize.checkpoint(next, spark)
+            else next.persist(level))
+          val totals = sc.runJob(next,
+            (it: Iterator[RankBlock]) => { val r = it.next(); (r.dang, r.l1) })
+          dang = totals.map(_._1).reduce(Math.addExact(_, _))
+          l1 = totals.map(_._2).reduce(Math.addExact(_, _))
+          if (state ne start) release(state)
+          state = next
+        }
+        release(start)
+        start = state
+        l1
       }
-    // Statics pinned across segments ONLY when the inner cadence pins
-    // (several jobs per segment re-derive them). A lazy segment is ONE
-    // boundary job, and exchange reuse inside it computes the statics
-    // once anyway — there the pin consistently LOSES (A/B'd at 200k
-    // vertices: pinned 26.6-27.4 s vs unpinned 21.1-25.9 s across 3
-    // runs each; the checkpoint scans break whole-stage codegen at the
-    // source while the recompute stays fused). The per-segment
-    // derive-and-pin of the (id, outdeg) base stays — hoisting ONE
-    // shared vbase across segments was A/B'd (r18) and LOST (see
-    // [[pageRankLoop]]'s vbaseOverride note).
-    val g = if (inner > 0) pinnedFrames(g0) else g0
-    var prev = Materialize.checkpoint(pageRankLoop(
-      g, n, iterations = segment, dampingNum, dampingDen, scale,
-      initial = None, cadence = inner))
-    var iters = segment
-    var done = false
-    while (!done && iters < maxIterations) {
-      // Clamp the last segment so the loop NEVER overruns
-      // maxIterations (segment=4, maxIterations=6 runs 4 then 2, not
-      // 4 then 4) — the "or maxIterations is hit" contract is exact.
-      val step = math.min(segment, maxIterations - iters)
-      // (r18 note: folding the L1 read INTO the boundary checkpoint —
-      // pinning next ⋈ prev and aggregating the pinned blocks — was
-      // measured and REVERTED: isolated q_pagerank_conv 5.0 → 5.6 s,
-      // jobs 180 → 209, cpu +0.8 s. The join inside the boundary job
-      // shuffles both O(V) sides before the write, while the separate
-      // L1 job below joins two ALREADY-PINNED frames — cheaper in
-      // this AQE shape despite the extra action.)
-      val next = Materialize.checkpoint(pageRankLoop(
-        g, n, iterations = step, dampingNum, dampingDen, scale,
-        initial = Some(prev), cadence = inner))
-      val l1 = next.withColumnRenamed("rank_fp", "__new")
-        .join(prev.withColumnRenamed("rank_fp", "__old"), Seq("id"))
-        .agg(sum(abs(col("__new") - col("__old"))).as("l1"))
-        .collect()(0).getLong(0) // the one driver scalar per segment
-      prev = next
-      iters += step
-      done = l1 <= tolFp
+
+      advance(segment, measure = false)
+      var iters = segment
+      var done = false
+      while (!done && iters < maxIterations) {
+        val step = math.min(segment, maxIterations - iters)
+        done = advance(step, measure = true) <= tolFp
+        iters += step
+      }
+      result = state
+      (spark.createDataFrame(result.flatMap(_.rows), StructType(Seq(
+        StructField("id", LongType, idNullable),
+        StructField("rank_fp", LongType)))), iters)
+    } finally held.toList.filter(_ ne result).foreach(release)
+  }
+
+  /** One edge's records for the adjacency build, keyed by vertex (a
+    * null endpoint keys the null vertex): an out-link on `src` (to
+    * `dst`, or [[ToNull]]) and an in-link marker on `dst`. */
+  private def linkRecords(e: Row): Seq[(java.lang.Long, (Int, Long))] = {
+    def key(i: Int) = if (e.isNullAt(i)) null else java.lang.Long.valueOf(e.getLong(i))
+    val out = if (e.isNullAt(1)) (ToNull, 0L) else (ToVertex, e.getLong(1))
+    Seq(key(0) -> out, key(1) -> (InLink, 0L))
+  }
+
+  private val InLink = 0
+  private val ToVertex = 1
+  private val ToNull = 2
+
+  /** One hash partition of the graph for [[pageRankConverged]]: its
+    * non-null vertex ids ascending, then the null vertex if the
+    * partition holds it (slot `ids.length`); each slot's out-degree (0 =
+    * dangling; the null vertex is always dangling), and the non-null
+    * vertices' out-links in CSR form — slot `i` links to
+    * `dsts(dstFrom(i) until dstFrom(i + 1))`. A link to a null
+    * endpoint counts in the degree but has no entry: its share of rank
+    * is dropped, as in [[pageRank]]. */
+  private final case class AdjBlock(
+      ids: Array[Long],
+      outdeg: Array[Long],
+      dstFrom: Array[Int],
+      dsts: Array[Long]) {
+    def size: Int = outdeg.length
+
+    /** Each out-link's share `rank div outdeg` of its source's rank in
+      * `r`, keyed by destination. */
+    def contributions(r: RankBlock): Iterator[(Long, Long)] =
+      Iterator.range(0, ids.length).filter(outdeg(_) > 0).flatMap { i =>
+        val share = r.rank(i) / outdeg(i)
+        Iterator.range(dstFrom(i), dstFrom(i + 1)).map(j => (dsts(j), share))
+      }
+
+    /** The next ranks from this block's summed in-contributions
+      * `(dst, insum)`: `base + num·(insum + lift) div den`, with
+      * `lift` = dang div n. With `from` (the segment's start state)
+      * the block's L1 distance from it is filled in. */
+    def update(in: Iterator[(Long, Long)], base: Long, num: Long, den: Long,
+        lift: Long, from: RankBlock): RankBlock = {
+      val insum = new Array[Long](size)
+      in.foreach { case (dst, s) =>
+        insum(java.util.Arrays.binarySearch(ids, dst)) = s
+      }
+      val rank = new Array[Long](size)
+      var dang = 0L
+      var l1 = 0L
+      for (i <- 0 until size) {
+        rank(i) = Math.addExact(base,
+          Math.multiplyExact(num, Math.addExact(insum(i), lift)) / den)
+        if (outdeg(i) == 0) dang = Math.addExact(dang, rank(i))
+        if (from != null) l1 = Math.addExact(l1,
+          Math.absExact(Math.subtractExact(rank(i), from.rank(i))))
+      }
+      RankBlock(ids, rank, dang, l1)
     }
-    (prev, iters)
+  }
+
+  private object AdjBlock {
+    def apply(
+        groups: Iterator[(java.lang.Long, Iterable[(Int, Long)])]): AdjBlock = {
+      val (nulls, keyed) = groups.toArray.partition(_._1 == null)
+      val sorted = keyed.sortBy(_._1.longValue)
+      val outdeg = sorted.map(_._2.count(_._1 != InLink).toLong) ++
+        nulls.map(_ => 0L)
+      val links = sorted.map(_._2.collect { case (ToVertex, d) => d })
+      AdjBlock(sorted.map(_._1.longValue), outdeg,
+        links.scanLeft(0)(_ + _.size), links.flatten)
+    }
+  }
+
+  /** The ranks of one [[AdjBlock]]'s slots, in its order, with the
+    * block's dangling total and its L1 from a segment's start (0 when
+    * not measured). */
+  private final case class RankBlock(
+      ids: Array[Long], rank: Array[Long], dang: Long, l1: Long) {
+    def rows: Iterator[Row] =
+      Iterator.range(0, rank.length).map { i =>
+        Row(if (i < ids.length) ids(i) else null, rank(i))
+      }
   }
 
   /** PERSONALIZED PageRank: teleport mass flows only to `seeds` — the
@@ -523,7 +549,7 @@ object LinkGraph {
       } else g0
     val init = scale / s
     val base = ((dampingDen - dampingNum) * init) / dampingDen
-    // NOTE (r17): the [[pageRankLoop]] carry-outdeg-on-the-rank-frame
+    // NOTE (r17): the [[pageRank]] carry-outdeg-on-the-rank-frame
     // rewrite was A/B'd here too and REGRESSED the lazy small-graph
     // shape this query family runs in (q_ppr 3.05 → 4.27 s isolated):
     // PPR's update path references `flagged` every iteration, so the

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The materialization primitive behind the iterative/two-pass operators
   * ([[Dedup.nearDupComponents]], [[Packing]], [[Splits]]): pins a
@@ -47,23 +49,39 @@ object Materialize {
     * multi-pass operators keep the eager default — they need the
     * barrier. */
   def checkpoint(df: DataFrame, eager: Boolean): DataFrame =
-    df.sparkSession.conf.get(ConfKey, "local") match {
-      case "local" =>
-        df.sparkSession.conf.get(StorageConfKey, "disk") match {
-          case "disk" =>
-            df.localCheckpoint(eager = eager,
-              org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          case "memory" => df.localCheckpoint(eager = eager)
-          case other =>
-            throw new IllegalArgumentException(
-              s"$StorageConfKey must be 'disk' or 'memory', got '$other'")
-        }
+    if (reliable(df.sparkSession)) df.checkpoint(eager)
+    else df.localCheckpoint(eager, storageLevel(df.sparkSession))
+
+  /** The RDD form, under the same two keys, for loops that keep their
+    * state as RDDs ([[LinkGraph.pageRankConverged]]). Lazy, as RDD
+    * checkpoints are: `rdd` is persisted at [[storageLevel]] (unless it
+    * already is) and pinned by the first action that computes it;
+    * `reliable` then also writes it to the checkpoint directory. */
+  def checkpoint[T](rdd: RDD[T], spark: SparkSession): RDD[T] = {
+    if (rdd.getStorageLevel == StorageLevel.NONE) rdd.persist(storageLevel(spark))
+    if (reliable(spark)) rdd.checkpoint() else rdd.localCheckpoint()
+    rdd
+  }
+
+  /** The level `local` checkpoints are kept at ([[StorageConfKey]]). */
+  def storageLevel(spark: SparkSession): StorageLevel =
+    spark.conf.get(StorageConfKey, "disk") match {
+      case "disk" => StorageLevel.DISK_ONLY
+      case "memory" => StorageLevel.MEMORY_AND_DISK
+      case other =>
+        throw new IllegalArgumentException(
+          s"$StorageConfKey must be 'disk' or 'memory', got '$other'")
+    }
+
+  private def reliable(spark: SparkSession): Boolean =
+    spark.conf.get(ConfKey, "local") match {
+      case "local" => false
       case "reliable" =>
         require(
-          df.sparkSession.sparkContext.getCheckpointDir.isDefined,
+          spark.sparkContext.getCheckpointDir.isDefined,
           s"$ConfKey=reliable requires sparkContext.setCheckpointDir(...) " +
             "to point at fault-tolerant storage (HDFS/object store)")
-        df.checkpoint(eager = eager)
+        true
       case other =>
         throw new IllegalArgumentException(
           s"$ConfKey must be 'local' or 'reliable', got '$other'")

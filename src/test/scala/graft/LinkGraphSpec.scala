@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.LinkGraph
+import org.apache.spark.sql.DataFrame
+
+import graft.operators.{LinkGraph, Materialize}
 
 /** Fixed-point PageRank semantics (hand-computed iteration, dangling
   * mass, mass conservation, partitioning bit-stability) and the degree
@@ -195,16 +197,6 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(m(d) == m(dRef))
   }
 
-  test("pageRankConverged: bit-identical across inner cadences") {
-    val (a, ka) = LinkGraph.pageRankConverged(
-      triangle, "src", "dst", tolFp = 0L, maxIterations = 24, segment = 4,
-      materializeEvery = 0)
-    val (b, kb) = LinkGraph.pageRankConverged(
-      triangle, "src", "dst", tolFp = 0L, maxIterations = 24, segment = 4,
-      materializeEvery = 1)
-    assert(ka == kb && rankMap(a) == rankMap(b))
-  }
-
   test("pageRankConverged: never overruns maxIterations (clamped last segment)") {
     // segment=4, maxIterations=6: 4 then a CLAMPED 2 — the old loop
     // ran 4+4=8, contradicting the "or maxIterations is hit" contract.
@@ -297,9 +289,20 @@ class LinkGraphSpec extends AnyFunSuite {
     // (The materializeEvery default deliberately trades this laziness
     // for bounded lineage past 4 iterations — its eager checkpoint
     // jobs are the feature, covered by the bit-identity test above.)
-    // Count job STARTS with a listener — statusTracker's retained-job
-    // list is bounded, so length deltas go negative once the suite has
-    // run enough jobs (observed after the convergence test landed).
+    val (df, oneIter) = jobsDuring(
+      LinkGraph.pageRank(triangle, "src", "dst", 1, materializeEvery = 0))
+    val (_, sixIter) = jobsDuring(
+      LinkGraph.pageRank(triangle, "src", "dst", 6, materializeEvery = 0))
+    assert(sixIter == oneIter,
+      s"construction jobs must not scale with iterations: 1-iter=$oneIter 6-iter=$sixIter")
+    assert(df.columns.toSeq == Seq("id", "rank_fp"))
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. Counts job
+    * STARTS with a listener — statusTracker's retained-job list is
+    * bounded, so length deltas go negative once the suite has run
+    * enough jobs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
     val started = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -307,26 +310,137 @@ class LinkGraphSpec extends AnyFunSuite {
         started.incrementAndGet()
     }
     val sc = spark.sparkContext
+    // The bus posts asynchronously; drain it DETERMINISTICALLY
+    // (waitUntilEmpty via the main-scope bridge) so a late-posted
+    // job-start event can never land outside the window — a fixed
+    // sleep flaked under CI load.
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try {
-      // The bus posts asynchronously; drain it DETERMINISTICALLY
-      // (waitUntilEmpty via the main-scope bridge) so a late-posted
-      // job-start event can never land between the two deltas — a
-      // fixed sleep flaked under CI load.
-      def settled(): Int = {
-        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
-        started.get()
-      }
-      val b1 = settled()
-      val df = LinkGraph.pageRank(triangle, "src", "dst", 1,
-        materializeEvery = 0)
-      val oneIter = settled() - b1
-      val b6 = settled()
-      LinkGraph.pageRank(triangle, "src", "dst", 6, materializeEvery = 0)
-      val sixIter = settled() - b6
-      assert(sixIter == oneIter,
-        s"construction jobs must not scale with iterations: 1-iter=$oneIter 6-iter=$sixIter")
-      assert(df.columns.toSeq == Seq("id", "rank_fp"))
+      val out = body
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      (out, started.get())
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Ranks by id, with the null vertex under None. */
+  private def ranksOf(df: DataFrame): Map[Option[Long], Long] =
+    df.collect().map(r =>
+      Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getLong(1)).toMap
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def converged(edges: DataFrame, tolFp: Long = 0L,
+      segment: Int = 4): (DataFrame, Int) =
+    LinkGraph.pageRankConverged(edges, "src", "dst", tolFp,
+      maxIterations = 64, segment = segment)
+
+  test("pageRankConverged == pageRank(k) on every graph shape and partitioning") {
+    val s = spark
+    import s.implicits._
+    // Each graph with its pinned iteration count at tolFp = 0,
+    // segment = 4 (the star and the doubled edge end in an integer
+    // cycle, so they run to maxIterations).
+    val graphs = Seq(
+      ("triangle", triangle, 40),
+      ("star into a sink", (0L to 8L).map(u => (u, 9L)).toDF("src", "dst"),
+        64),
+      // 1->2 doubled (twice the weight), 2->2 a self-loop, 4 no in-link.
+      ("duplicate edge and self-loop",
+        Seq((1L, 2L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 1L), (4L, 3L))
+          .toDF("src", "dst"), 64),
+      // The null endpoint is one more vertex, dangling: 3's link to it
+      // counts in 3's out-degree, its share of rank is dropped, and the
+      // null -> 1 link carries nothing.
+      ("null endpoints",
+        Seq((Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(2L), Some(3L)),
+          (Some(3L), None), (None, Some(1L))).toDF("src", "dst"), 44))
+    for ((name, g, expectK) <- graphs) {
+      val straight = ranksOf(LinkGraph.pageRank(g, "src", "dst", expectK))
+      for ((parts, input) <- Seq("1" -> g, "7" -> g, "4" -> g.repartition(7)))
+        withConf("spark.sql.shuffle.partitions", parts) {
+          val (conv, k) = converged(input)
+          val where = s"$name, $parts shuffle partitions"
+          assert(k == expectK, where)
+          assert(ranksOf(conv) == straight, where)
+        }
+    }
+  }
+
+  test("pageRankConverged: a positive tolerance stops before maxIterations") {
+    val (conv, k) = converged(triangle, tolFp = 1000L, segment = 2)
+    assert(k == 22)
+    assert(ranksOf(conv) ==
+      ranksOf(LinkGraph.pageRank(triangle, "src", "dst", k)))
+  }
+
+  test("pageRankConverged: overflow and bad arguments fail loudly, pinning nothing") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    val pinsBefore = sc.getPersistentRDDs.keySet
+    // scale = 1e18: num * (insum + dang div n) passes Long.MaxValue in
+    // the first iteration.
+    val e = intercept[Exception](
+      LinkGraph.pageRankConverged(triangle, "src", "dst", 0L,
+        scale = 1000000000000000000L))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+    intercept[IllegalArgumentException](converged(triangle, tolFp = -1L))
+    intercept[IllegalArgumentException](converged(triangle, segment = 0))
+    intercept[IllegalArgumentException](
+      LinkGraph.pageRankConverged(triangle, "src", "dst", 0L,
+        maxIterations = 3, segment = 4))
+    intercept[IllegalArgumentException](
+      converged(Seq.empty[(Long, Long)].toDF("src", "dst")))
+    assert(sc.getPersistentRDDs.keySet -- pinsBefore == Set.empty)
+  }
+
+  test("pageRankConverged: jobs bounded by the iterations, one pin left") {
+    val sc = spark.sparkContext
+    val pinsBefore = sc.getPersistentRDDs.keySet
+    // Pins held while the loop runs, sampled at every job start: the
+    // adjacency, the segment start, the current and the next state.
+    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sampler = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        peak.accumulateAndGet(
+          (sc.getPersistentRDDs.keySet -- pinsBefore).size,
+          (a: Int, b: Int) => math.max(a, b))
+    }
+    sc.addSparkListener(sampler)
+    val ((conv, k), jobs) =
+      try jobsDuring(converged(triangle))
+      finally sc.removeSparkListener(sampler)
+    // One job builds the adjacency, then one per iteration.
+    assert(jobs <= k + 8, s"$jobs jobs for $k iterations")
+    assert(peak.get <= 4, s"${peak.get} pins held at once over $k iterations")
+    // The adjacency and every superseded state are released; what
+    // remains is the pin the returned frame reads.
+    val left = sc.getPersistentRDDs.keySet -- pinsBefore
+    assert(left.size <= 1, s"pins left behind: $left")
+    assert(ranksOf(conv).size == 3)
+  }
+
+  test("pageRankConverged: reliable checkpoints give the same ranks and count as local") {
+    val (local, kLocal) = converged(triangle, segment = 3)
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-pr").toString
+    val prevDir = sc.getCheckpointDir
+    sc.setCheckpointDir(dir)
+    try withConf(Materialize.ConfKey, "reliable") {
+      val (reliable, kReliable) = converged(triangle, segment = 3)
+      assert(kReliable == kLocal)
+      assert(ranksOf(reliable) == ranksOf(local))
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(files > 0, "expected checkpoint files on disk")
+    } finally prevDir.foreach(sc.setCheckpointDir)
   }
 }

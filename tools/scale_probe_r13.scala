@@ -1,8 +1,7 @@
 // Round-13 probe: AUTO checkpoint cadence for the REST of the rank
 // family -- hits (4^k unpinned growth: two half-steps, each
-// referencing its input twice) and pageRankConverged's inner cadence
-// (the segment boundary always pins for the L1 test; the question is
-// only inside a segment). Same dense-id graph synthesis as the r12
+// referencing its input twice) -- and the pageRankConverged loop to
+// its exact fixed point. Same dense-id graph synthesis as the r12
 // probe (ids 0..N-1, modulus at the actual id count) at 5k and 200k
 // vertices -- the two sides of the pageRank cadence crossover.
 // Run via spark-shell with compiled classes (see .claude/skills/verify);
@@ -40,18 +39,18 @@ for (n <- Seq(5000L, 200000L); c <- Seq(1, 2, 4)) {
   println(f"HITS n=$n%d cadence=$c%d t=$t%.2f s")
 }
 
-println("== pageRankConverged (tolFp=0, segment=4) inner cadence ==")
+println("== pageRankConverged (tolFp=0, segment=4) ==")
 run(LinkGraph.pageRankConverged(edges(5000L), "src", "dst", 0L,
-  maxIterations = 40, segment = 4, materializeEvery = 1)._1)
-for (n <- Seq(5000L, 200000L); c <- Seq(0, 1, 2)) {
+  maxIterations = 40, segment = 4)._1)
+for (n <- Seq(5000L, 200000L)) {
   val e = edges(n)
   var iters = -1
   val t = minOf2 {
     val (r, k) = LinkGraph.pageRankConverged(e, "src", "dst", 0L,
-      maxIterations = 40, segment = 4, materializeEvery = c)
+      maxIterations = 40, segment = 4)
     run(r); iters = k
   }
-  println(f"CONV n=$n%d cadence=$c%d t=$t%.2f s iters=$iters%d")
+  println(f"CONV n=$n%d t=$t%.2f s iters=$iters%d")
 }
 
 println("R13-PROBE-DONE")
