@@ -1,19 +1,19 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Engine configuration.
   *
   * Mirrors the reference's env-driven settings
   * (`dbfs_spark_cache/config.py:6-55`): cache directory, cache database,
-  * warehouse path, default cost-model thresholds (130 / 1.01) and the
-  * hybrid spark-cache preference flag. Resolution order per key:
+  * default cost-model thresholds (130 / 1.01) and the hybrid
+  * spark-cache preference flag. Resolution order per key:
   * explicit value > `spark.graft.*` Spark conf > `GRAFT_*` env var >
   * default. Defaults are local-filesystem friendly (no Databricks paths).
   *
-  * @param sparkCacheDir  directory holding `<hash>/cache_metadata.txt`
-  *                       sidecar files (reference `config.py:12-15`)
+  * @param sparkCacheDir  directory holding each entry's metadata sidecar,
+  *                       at [[metadataPath]] (reference `config.py:12-15`)
   * @param cacheDatabase  database for cache tables (reference `config.py:18-21`)
-  * @param databasePath   base warehouse path used by management tooling
-  *                       (reference `config.py:28-31`)
   * @param cacheFormat    table format for materialized caches. The
   *                       reference hard-codes Delta (`core_caching.py:41`);
   *                       Delta isn't on the local classpath so parquet is
@@ -28,7 +28,6 @@ package graft
 final case class CacheConfig(
     sparkCacheDir: String = CacheConfig.resolve("cacheDir", "/tmp/graft_cache/"),
     cacheDatabase: String = CacheConfig.resolve("cacheDatabase", "cache_db"),
-    databasePath: String = CacheConfig.resolve("databasePath", ""),
     cacheFormat: String = CacheConfig.resolve("cacheFormat", "parquet"),
     defaultComplexityThreshold: Option[Double] = Some(130.0),
     defaultMultiplierThreshold: Option[Double] = Some(1.01),
@@ -58,7 +57,7 @@ final case class CacheConfig(
     s"$cacheDatabase.$hashName"
 
   /** Metadata sidecar path for a hash (reference `core_caching.py:161-162`,
-    * `:402-404`). */
+    * `:402-404`): the one place the sidecar layout is spelled. */
   def metadataPath(hashName: String): String =
     s"$cacheDirSlash$hashName/cache_metadata.txt"
 }
@@ -69,7 +68,7 @@ object CacheConfig {
       try {
         val active = org.apache.spark.sql.SparkSession.getActiveSession
         active.flatMap(s => s.conf.getOption(s"spark.graft.$key"))
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     fromConf
       .orElse(sys.env.get("GRAFT_" + camelToSnake(key)))
       .getOrElse(default)

@@ -11,11 +11,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cache materialization and lookup.
   *
-  * A cache entry is (table named by hash in the cache database, sidecar
-  * `cache_metadata.txt`) — reference `dbfs_spark_cache/core_caching.py`
-  * (`write_dbfs_cache` `:474-516`, `read_dbfs_cache_if_exist` `:409-471`,
-  * `_write_standard_cache` `:64-115`). Metadata goes through Hadoop
-  * `FileSystem` so any scheme (file://, s3a://, abfss://) works unchanged.
+  * A cache entry is a [[CacheKey]]: a table named by hash in the cache
+  * database plus its metadata sidecar — reference
+  * `dbfs_spark_cache/core_caching.py` (`write_dbfs_cache` `:474-516`,
+  * `read_dbfs_cache_if_exist` `:409-471`, `_write_standard_cache`
+  * `:64-115`). Every reader goes through [[lookup]] and every writer
+  * through [[write]]; both decide with the one hit check [[isLive]].
+  * Metadata goes through Hadoop `FileSystem` so any scheme (file://,
+  * s3a://, abfss://) works unchanged.
   *
   * Scale note: the cache write is a full distributed job
   * (`saveAsTable`); everything else here is O(1) driver-side metadata, so
@@ -55,17 +58,38 @@ object CacheIO {
   private def hadoopConf(spark: SparkSession): Configuration =
     spark.sparkContext.hadoopConfiguration
 
-  /** Whether a cataloged table's storage location still exists. The
-    * metastore can outlive the warehouse (persistent metastore, wiped
-    * or re-pointed warehouse dir) — the reverse of the orphan
-    * writeCacheData sweeps. Errs toward `true` so an unreadable
-    * catalog entry degrades to the previous behavior. */
-  private def tableLocationExists(spark: SparkSession, tableName: String): Boolean =
-    try {
-      val ident = spark.sessionState.sqlParser.parseTableIdentifier(tableName)
-      val loc = new Path(spark.sessionState.catalog.getTableMetadata(ident).location)
-      loc.getFileSystem(hadoopConf(spark)).exists(loc)
-    } catch { case NonFatal(_) => true }
+  /** The one hit check: whether the entry `hash` can be served. Three
+    * conditions, cheapest first so a miss costs one filesystem call:
+    * the sidecar exists, the catalog has the table, and the table's
+    * storage location exists. The metastore can outlive the warehouse
+    * (persistent metastore, wiped or re-pointed warehouse dir) — the
+    * reverse of the orphan [[writeCacheData]] sweeps — and Spark reads
+    * such a table as empty, or fails file-not-found while it still holds
+    * the old listing, so it is a miss and the recompute rewrites it. An
+    * unreadable catalog entry counts as located. */
+  def isLive(spark: SparkSession, hash: String): Boolean = {
+    val cfg = CacheConfig.current
+    val table = cfg.tableNameFromHash(hash)
+    def located: Boolean =
+      try {
+        val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+        val loc = new Path(spark.sessionState.catalog.getTableMetadata(ident).location)
+        loc.getFileSystem(hadoopConf(spark)).exists(loc)
+      } catch { case NonFatal(_) => true }
+    if (!exists(cfg.metadataPath(hash), hadoopConf(spark))) false
+    else if (!spark.catalog.tableExists(table)) {
+      PlanFingerprint.log(s"Cache metadata exists but table $table does not")
+      false
+    } else if (!located) {
+      PlanFingerprint.log(s"Cache table $table exists but its storage location is gone")
+      false
+    } else true
+  }
+
+  /** The table-backed frame of a live entry, else None (reference
+    * `core_caching.py:409-471`). */
+  def lookup(spark: SparkSession, key: CacheKey): Option[DataFrame] =
+    if (isLive(spark, key.hash)) Some(spark.read.table(key.table)) else None
 
   /** `CREATE DATABASE IF NOT EXISTS` + overwrite-save the cache table
     * (reference `core_caching.py:37-44`; format pluggable, parquet
@@ -87,8 +111,8 @@ object CacheIO {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${cfg.cacheDatabase}")
     // A cache table's DIRECTORY can outlive its catalog entry: the
     // warehouse persists across processes while a fresh session
-    // metastore starts empty (and the reverse of the sidecar check in
-    // writeStandardCache). Creating a managed table over a leftover
+    // metastore starts empty (the reverse of the storage check in
+    // isLive). Creating a managed table over a leftover
     // location fails LOCATION_ALREADY_EXISTS — the location is ours by
     // construction (hash-named dir under the cache database), so clear
     // it when the catalog has no such table. Guard: the sweep computes
@@ -127,88 +151,51 @@ object CacheIO {
     w2.saveAsTable(tbl)
   }
 
-  /** Write table + metadata, skipping entirely when the metadata text is
-    * identical (reference `core_caching.py:64-115`). Unlike the reference
-    * the table is written exactly once (its `:113-114` double-write is a
-    * bug SURVEY.md flags as not-to-replicate). */
-  def writeStandardCache(
+  /** Materialize `df` as the entry `key`: table first, sidecar last;
+    * skipped entirely when the entry is already live (reference
+    * `core_caching.py:64-115`). Unlike the reference the table is written
+    * exactly once (its `:113-114` double-write is a bug SURVEY.md flags
+    * as not-to-replicate). Returns the table-backed frame, or `df` when
+    * the table cannot be read back. */
+  def write(
       df: DataFrame,
-      hashName: String,
-      metadataFilePath: String,
-      metadataTxt: String,
+      key: CacheKey,
       partitionBy: Seq[String] = Nil,
-      bucketBy: Option[(Int, Seq[String])] = None): Unit = {
-    val conf = hadoopConf(df.sparkSession)
-    val lastMeta = readTextIfExists(metadataFilePath, conf)
-    // Skip only when the TABLE is also still there: a metadata sidecar
-    // can outlive its table (different warehouse dir across processes,
-    // manual DROP) and skipping then would leave the entry
-    // unmaterialized forever.
-    val skipTable = CacheConfig.current.tableNameFromHash(hashName)
-    if (lastMeta.contains(metadataTxt) &&
-        df.sparkSession.catalog.tableExists(skipTable) &&
-        tableLocationExists(df.sparkSession, skipTable)) {
-      PlanFingerprint.log(s"Meta identical $hashName. Skip.")
-      return
+      bucketBy: Option[(Int, Seq[String])] = None): DataFrame = {
+    val spark = df.sparkSession
+    if (isLive(spark, key.hash)) PlanFingerprint.log(s"Entry ${key.hash} is live. Skip.")
+    else {
+      writeCacheData(df, key.table, partitionBy, bucketBy)
+      writeText(key.metadataPath, key.metadataTxt, hadoopConf(spark))
     }
-    writeCacheData(df, CacheConfig.current.tableNameFromHash(hashName),
-      partitionBy, bucketBy)
-    writeText(metadataFilePath, metadataTxt, conf)
+    // Make a standard entry visible to the analysis-phase substitution rule.
+    CacheMetadata.extractQueryPlan(key.metadataTxt)
+      .foreach(graft.plans.AutoSubstitute.register(_, key.hash))
+    try spark.read.table(key.table)
+    catch { case NonFatal(_) => df }
   }
 
-  /** Cache lookup: metadata file present AND table present => re-read
-    * (reference `core_caching.py:409-471`). Returns None on miss, and for
+  /** [[lookup]] of `df`'s fingerprint; the plan text and sources may be
+    * passed in when the caller already has them. None on a miss, and for
     * a plan that cannot be rendered (it has no fingerprint). */
   def readCacheIfExist(
       df: DataFrame,
       queryPlan: Option[String] = None,
       inputDirModDatetime: Option[ListMap[String, String]] = None): Option[DataFrame] = {
-    val spark = df.sparkSession
     val plan = queryPlan.orElse(PlanFingerprint.queryPlan(df)).getOrElse(return None)
     val sources = inputDirModDatetime.getOrElse(Freshness.inputDirModTimes(df))
-    val (hashName, _, metadataFilePath, _) =
-      CacheMetadata.tableCacheInfo(sources, plan)
-    val tableName = CacheConfig.current.tableNameFromHash(hashName)
-    if (!exists(metadataFilePath, hadoopConf(spark))) None
-    else if (!spark.catalog.tableExists(tableName)) {
-      PlanFingerprint.log(s"Cache metadata exists but table $tableName does not")
-      None
-    } else if (!tableLocationExists(spark, tableName)) {
-      // Catalog entry without storage (persistent metastore, wiped
-      // warehouse): a "hit" would fail file-not-found at the user's
-      // first action. Treat as a miss; the recompute rewrites both.
-      PlanFingerprint.log(s"Cache table $tableName exists but its storage location is gone")
-      None
-    } else Some(spark.read.table(tableName))
+    lookup(df.sparkSession, CacheKey(sources, plan))
   }
 
-  /** Materialize to the cache and return the table-backed DataFrame when
-    * `replace` (reference `core_caching.py:474-516`): the caller's lineage
-    * is replaced by a plain table scan, so downstream plans hash against
+  /** [[write]] `df` under its own fingerprint (reference
+    * `core_caching.py:474-516`). With `replace` the caller's lineage is
+    * replaced by a plain table scan, so downstream plans hash against
     * the cache table. Throws IllegalArgumentException, writing nothing,
-    * when no `queryPlan` is given and the plan cannot be rendered. */
-  def writeCache(
-      df: DataFrame,
-      replace: Boolean = true,
-      queryPlan: String = "",
-      inputDirModDatetime: Option[ListMap[String, String]] = None,
-      hashName: Option[String] = None,
-      cachePath: Option[String] = None,
-      partitionBy: Seq[String] = Nil,
-      bucketBy: Option[(Int, Seq[String])] = None): DataFrame = {
-    val plan = if (queryPlan.nonEmpty) queryPlan else PlanFingerprint.getQueryPlan(df)
-    val sources = inputDirModDatetime.getOrElse(Freshness.inputDirModTimes(df))
-    val (finalHash, _, metadataFilePath, metadataTxt) =
-      CacheMetadata.tableCacheInfo(sources, plan, hashName, cachePath)
-    val tableName = CacheConfig.current.tableNameFromHash(finalHash)
-    writeStandardCache(df, finalHash, metadataFilePath, metadataTxt,
-      partitionBy, bucketBy)
-    // Make the entry visible to the analysis-phase substitution rule.
-    graft.plans.AutoSubstitute.register(plan, finalHash)
-    if (replace)
-      try df.sparkSession.read.table(tableName)
-      catch { case NonFatal(_) => df }
-    else df
+    * when the plan cannot be rendered. */
+  def writeCache(df: DataFrame, replace: Boolean = true): DataFrame = {
+    val plan = PlanFingerprint.getQueryPlan(df)
+    val out = write(df, CacheKey(Freshness.inputDirModTimes(df), plan))
+    if (replace) out else df
   }
 
   /** If `df` is nothing but a scan of one of our cache tables (standard
@@ -255,28 +242,16 @@ object CacheIO {
     catch { case NonFatal(_) => false }
 
   /** Hash cascade for a DataFrame (reference `core_caching.py:527-571`):
-    * direct-data registry tag, then a pure scan of a `data_*` table, then
-    * a cache-table hash extracted from the plan text, else
-    * `MD5(metadata)`. Throws IllegalArgumentException when the plan cannot
-    * be rendered: such a DataFrame has no hash. */
+    * direct-data registry tag, then a pure scan of a cache table
+    * ([[existingCacheScan]]), then a cache-table hash extracted from the
+    * metadata text, else the [[CacheKey]] hash. Throws
+    * IllegalArgumentException when the plan cannot be rendered: such a
+    * DataFrame has no hash. */
   def tableHash(df: DataFrame): String = {
-    val cfg = CacheConfig.current
     val plan = PlanFingerprint.getQueryPlan(df)
-
-    DirectData.taggedHash(df) match {
-      case Some(h) => return h
-      case None => ()
+    DirectData.taggedHash(df).orElse(existingCacheScan(df, plan)).getOrElse {
+      val key = CacheKey(Freshness.inputDirModTimes(df), plan)
+      PlanFingerprint.getHashFromMetadata(key.metadataTxt).getOrElse(key.hash)
     }
-
-    PlanFingerprint.findCatalogTablePattern(plan, cfg.cacheDatabase, "data_") match {
-      case Some(dataTable) if DirectData.isPureScanOf(df, dataTable) => return dataTable
-      case _ => ()
-    }
-
-    val sources = Freshness.inputDirModTimes(df)
-    val metadataTxt = CacheMetadata.render(sources, plan)
-    PlanFingerprint
-      .getHashFromMetadata(metadataTxt)
-      .getOrElse(PlanFingerprint.md5Hex(metadataTxt))
   }
 }

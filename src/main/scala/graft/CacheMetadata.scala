@@ -2,10 +2,30 @@ package graft
 
 import scala.collection.immutable.ListMap
 
+/** One cache entry's identity: `hash` names both the table
+  * `<cacheDatabase>.<hash>` and the sidecar [[CacheConfig.metadataPath]],
+  * and `metadataTxt` is the sidecar's content (reference
+  * `core_caching.py:391-406`). A standard entry's hash is the MD5 of its
+  * text; a direct-data entry's is `data_<row digest>`.
+  */
+final case class CacheKey(hash: String, metadataTxt: String) {
+  def table: String = CacheConfig.current.tableNameFromHash(hash)
+  def metadataPath: String = CacheConfig.current.metadataPath(hash)
+}
+
+object CacheKey {
+  /** The standard entry for a plan over its sources:
+    * `MD5(CacheMetadata.render(sources, plan))`. */
+  def apply(sources: ListMap[String, String], plan: String): CacheKey = {
+    val txt = CacheMetadata.render(sources, plan)
+    CacheKey(PlanFingerprint.md5Hex(txt), txt)
+  }
+}
+
 /** Cache-entry metadata text: render and parse.
   *
   * The metadata file is the invalidation record — its MD5 *is* the cache
-  * hash. The text format is byte-identical to the reference
+  * hash ([[CacheKey]]). The text format is byte-identical to the reference
   * (`dbfs_spark_cache/core_caching.py:371-406`, direct-data variant
   * `:190-194`, parser `:328-368`).
   */
@@ -26,24 +46,6 @@ $queryPlan"""
   /** Render the direct-data variant (reference `core_caching.py:190-194`). */
   def renderDirectData(dataHash: String, creationTime: String): String =
     s"CACHE TYPE: Direct Data Input\nDATA HASH: $dataHash\nCREATION TIME: $creationTime"
-
-  /** Cache info tuple: (hash, cachePath, metadataFilePath, metadataTxt)
-    * (reference `core_caching.py:391-406`). `hashName` overrides the
-    * computed MD5 when provided. */
-  def tableCacheInfo(
-      inputDirModDatetime: ListMap[String, String],
-      queryPlan: String,
-      hashName: Option[String] = None,
-      cachePathBase: Option[String] = None): (String, String, String, String) = {
-    val metadataTxt = render(inputDirModDatetime, queryPlan)
-    val finalHash = hashName.getOrElse(PlanFingerprint.md5Hex(metadataTxt))
-    val base = {
-      val b = cachePathBase.getOrElse(CacheConfig.current.cacheDirSlash)
-      if (b.endsWith("/")) b else b + "/"
-    }
-    val cachePath = s"$base$finalHash/"
-    (finalHash, cachePath, s"${cachePath}cache_metadata.txt", metadataTxt)
-  }
 
   /** Extract the plan-text section of standard metadata (everything
     * after the `DATAFRAME QUERY PLAN:` marker line); None for the

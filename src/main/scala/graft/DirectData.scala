@@ -86,33 +86,26 @@ object DirectData {
     PlanFingerprint.md5Hex(sb.toString)
   }
 
-  /** Content-hash local rows; create-or-reuse the `data_<md5>` cache
-    * table; return a table-backed, tagged DataFrame (reference
-    * `core_caching.py:119-206`). */
+  /** Content-hash local rows; reuse the `data_<md5>` entry when
+    * [[CacheIO.isLive]], else write it; return a table-backed, tagged
+    * DataFrame (reference `core_caching.py:119-206`). */
   def createCachedDataFrame(
       spark: SparkSession,
       rows: Seq[Row],
       schema: StructType): DataFrame = {
-    val cfg = CacheConfig.current
     val dataHash = hashRows(rows, schema)
-    val cacheHashName = s"data_$dataHash"
-    val tableName = cfg.tableNameFromHash(cacheHashName)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val metadataFilePath = cfg.metadataPath(cacheHashName)
-
-    if (spark.catalog.tableExists(tableName)) {
-      PlanFingerprint.log(s"Using existing direct data cache: $tableName")
-      tag(spark.read.table(tableName), cacheHashName)
+    val hash = s"data_$dataHash"
+    if (CacheIO.isLive(spark, hash)) {
+      PlanFingerprint.log(s"Using existing direct data cache: $hash")
+      tag(spark.read.table(CacheConfig.current.tableNameFromHash(hash)), hash)
     } else {
       val dfSource = spark.createDataFrame(
         new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
         schema)
-      CacheIO.writeCacheData(dfSource, tableName)
       val metadataTxt = CacheMetadata.renderDirectData(
         dataHash,
         LocalDateTime.now(ZoneOffset.UTC).format(Freshness.TsFormat))
-      CacheIO.writeText(metadataFilePath, metadataTxt, conf)
-      tag(spark.read.table(tableName), cacheHashName)
+      tag(CacheIO.write(dfSource, CacheKey(hash, metadataTxt)), hash)
     }
   }
 

@@ -5,6 +5,7 @@ import java.time.{Duration, Instant, LocalDateTime, ZoneOffset}
 
 import scala.concurrent.duration.{Duration => SDuration}
 import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -71,11 +72,11 @@ object Management {
             Freshness.formatMillis(st.getModificationTime))
         }
         .sortBy(_.creationTime)
-    } catch { case _: Throwable => Seq.empty }
+    } catch { case NonFatal(_) => Seq.empty }
   }
 
-  /** Scan each `{cacheDir}/&lt;hash&gt;/cache_metadata.txt` into registry rows keyed by
-    * the dir-name hash (reference `cache_management.py:328-379`). */
+  /** Scan each entry directory's metadata sidecar into registry rows
+    * keyed by the dir-name hash (reference `cache_management.py:328-379`). */
   def getCachedDataframeMetadata(spark: SparkSession): Seq[CacheEntry] = {
     val cfg = CacheConfig.current
     val base = new Path(cfg.cacheDirSlash)
@@ -85,9 +86,9 @@ object Management {
       val dirs = fs.listStatus(base).filter(_.isDirectory).toIndexedSeq
       await(dirs.map { d =>
         Future {
-          val meta = new Path(d.getPath, "cache_metadata.txt")
+          val hash = d.getPath.getName
+          val meta = new Path(cfg.metadataPath(hash))
           if (fs.exists(meta)) {
-            val hash = d.getPath.getName
             Some(CacheEntry(
               cfg.tableNameFromHash(hash),
               hash,
@@ -96,7 +97,7 @@ object Management {
           } else None
         }
       }).flatten
-    } catch { case _: Throwable => Seq.empty }
+    } catch { case NonFatal(_) => Seq.empty }
   }
 
   /** Drop table if exists + remove the metadata dir (reference
@@ -107,11 +108,11 @@ object Management {
     require(cfg.cacheDatabase.nonEmpty && cfg.sparkCacheDir.nonEmpty,
       "cache config must be non-empty")
     spark.sql(s"DROP TABLE IF EXISTS ${cfg.tableNameFromHash(hashName)}")
-    val dir = new Path(s"${cfg.cacheDirSlash}$hashName")
+    val dir = new Path(cfg.metadataPath(hashName)).getParent
     try {
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(dir)) fs.delete(dir, true)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 
   /** Overload resolving the active session. */
@@ -138,7 +139,7 @@ object Management {
       val fmt: DateTimeFormatter = Freshness.TsFormat
       val old = getCachedTables(spark).filter { e =>
         try LocalDateTime.parse(e.creationTime, fmt).isBefore(cutoff)
-        catch { case _: Throwable => false }
+        catch { case NonFatal(_) => false }
       }
       if (old.isEmpty) return Seq.empty
       PlanFingerprint.log(

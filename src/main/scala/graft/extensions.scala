@@ -54,8 +54,6 @@ object extensions {
           CacheConfig.current.defaultComplexityThreshold,
         dbfsCacheMultiplierThreshold: Option[Double] =
           CacheConfig.current.defaultMultiplierThreshold,
-        hashName: Option[String] = None,
-        cachePath: Option[String] = None,
         partitionBy: Seq[String] = Nil,
         bucketBy: Option[(Int, Seq[String])] = None): DataFrame = {
       // No fingerprint, no cache: an unrenderable plan passes through.
@@ -74,15 +72,12 @@ object extensions {
       // One source snapshot serves the fingerprint, the lookup and, on a
       // miss, the cost model's input size.
       val sources = Freshness.snapshot(df)
-      val inputInfo = sources.freshness
-      CacheIO.readCacheIfExist(df, Some(plan), Some(inputInfo)) match {
+      val key = CacheKey(sources.freshness, plan)
+      CacheIO.lookup(df.sparkSession, key) match {
         case Some(hit) =>
           PlanFingerprint.log("Returning existing cache.")
-          if (partitionBy.nonEmpty || bucketBy.isDefined) {
-            val (h, _, _, _) = CacheMetadata.tableCacheInfo(inputInfo, plan)
-            CacheIO.warnOnLayoutMismatch(df.sparkSession,
-              CacheConfig.current.tableNameFromHash(h), partitionBy, bucketBy)
-          }
+          if (partitionBy.nonEmpty || bucketBy.isDefined)
+            CacheIO.warnOnLayoutMismatch(df.sparkSession, key.table, partitionBy, bucketBy)
           return hit
         case None => ()
       }
@@ -99,11 +94,7 @@ object extensions {
       }
 
       if (!overridePreferSparkCache && shouldPreferSparkCache()) df.cache()
-      else
-        CacheIO.writeCache(df, replace = true, queryPlan = plan,
-          inputDirModDatetime = Some(inputInfo), hashName = hashName,
-          cachePath = cachePath, partitionBy = partitionBy,
-          bucketBy = bucketBy)
+      else CacheIO.write(df, key, partitionBy, bucketBy)
     }
 
     /** Threshold-gated cache without display — README/Changelog name this

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** Process-level cache for fitted spark.ml models (the IVF coarse
@@ -35,7 +37,7 @@ object ModelCache {
   private def inputDirs(df: DataFrame): Seq[String] =
     try df.inputFiles.map(f => f.substring(0, f.lastIndexOf('/').max(0)))
       .distinct.sorted.toSeq
-    catch { case _: Throwable => Nil }
+    catch { case NonFatal(_) => Nil }
 
   /** Fingerprint of the DataFrame a model is fit on: analyzed plan
     * (normalized) PLUS the sorted input directories PLUS their

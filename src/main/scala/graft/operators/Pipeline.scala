@@ -110,11 +110,10 @@ object Pipeline {
     val inputInfo = graft.Freshness.inputDirModTimes(docs)
     def stage(descriptor: String)(compute: => DataFrame): DataFrame =
       rawPlan.fold(compute) { raw =>
-        val keyPlan = s"$raw\n-- graft.release v$version stage: $descriptor"
-        graft.CacheIO
-          .readCacheIfExist(docs, Some(keyPlan), Some(inputInfo))
-          .getOrElse(graft.CacheIO.writeCache(compute, replace = true,
-            queryPlan = keyPlan, inputDirModDatetime = Some(inputInfo)))
+        val key = graft.CacheKey(inputInfo,
+          s"$raw\n-- graft.release v$version stage: $descriptor")
+        graft.CacheIO.lookup(docs.sparkSession, key)
+          .getOrElse(graft.CacheIO.write(compute, key))
       }
     stage(s"manifest(id=$idCol,text=$textCol,window=$windowLen,bpe=$bpeRounds)") {
       releaseManifest(docs, idCol, textCol, windowLen, bpeRounds,

@@ -1,6 +1,7 @@
 package graft.plans
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -9,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Proje
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.{CacheConfig, CacheIO, CacheMetadata, Freshness, PlanFingerprint}
+import graft.{CacheConfig, CacheIO, CacheKey, CacheMetadata, Freshness, PlanFingerprint}
 
 /** Transparent cache substitution — the Catalyst-rule variant of the
   * cache lookup (SURVEY §4.2's "optional advanced" path).
@@ -30,7 +31,8 @@ import graft.{CacheConfig, CacheIO, CacheMetadata, Freshness, PlanFingerprint}
   * subtrees cost one string render + MD5, no I/O. A matching subtree is
   * fingerprinted from the file lists its relations' FileIndexes already
   * hold ([[graft.Freshness.inputDirModTimes]]), so it lists no directory
-  * either; only the metadata-file and catalog lookups touch storage.
+  * either; only [[graft.CacheIO.lookup]], the hit check `cacheToDbfs`
+  * uses too, touches storage.
   *
   * Gate: `spark.graft.autoSubstitute` via `CacheConfig.autoSubstitute`
   * (default off — parity with the reference requires API-layer-only
@@ -49,10 +51,11 @@ object AutoSubstitute {
 
   def clear(): Unit = { index.clear(); loadedFrom = null }
 
-  /** Harvest plan-text hashes from `{cacheDir}/<hash>/cache_metadata.txt`
-    * once per cache dir (re-harvested when the configured dir changes). */
+  /** Harvest plan-text hashes from every entry's metadata sidecar once
+    * per cache dir (re-harvested when the configured dir changes). */
   private def ensureLoaded(spark: SparkSession): Unit = {
-    val dir = CacheConfig.current.cacheDirSlash
+    val cfg = CacheConfig.current
+    val dir = cfg.cacheDirSlash
     if (loadedFrom == dir) return
     synchronized {
       if (loadedFrom == dir) return
@@ -62,14 +65,14 @@ object AutoSubstitute {
         if (fs.exists(base)) {
           fs.listStatus(base).filter(_.isDirectory).foreach { d =>
             CacheIO
-              .readTextIfExists(new Path(d.getPath, "cache_metadata.txt").toString,
+              .readTextIfExists(cfg.metadataPath(d.getPath.getName),
                 spark.sparkContext.hadoopConfiguration)
               .flatMap(CacheMetadata.extractQueryPlan)
               .foreach(planText =>
                 index.put(PlanFingerprint.md5Hex(planText), d.getPath.getName))
           }
         }
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
       loadedFrom = dir
     }
   }
@@ -104,19 +107,15 @@ object AutoSubstitute {
       if (planText.contains(CacheConfig.current.cacheDatabase + ".")) return None
       if (!index.contains(PlanFingerprint.md5Hex(planText))) return None
       if (!fileBacked(sub)) return None
-      val (hash, _, metadataFilePath, _) =
-        CacheMetadata.tableCacheInfo(Freshness.inputDirModTimes(sub), planText)
-      val tableName = CacheConfig.current.tableNameFromHash(hash)
-      if (!CacheIO.exists(metadataFilePath, spark.sparkContext.hadoopConfiguration))
-        return None
-      if (!spark.catalog.tableExists(tableName)) return None
-      val replacement = spark.table(tableName).queryExecution.analyzed
+      val key = CacheKey(Freshness.inputDirModTimes(sub), planText)
+      val replacement =
+        CacheIO.lookup(spark, key).getOrElse(return None).queryExecution.analyzed
       if (replacement.output.size != sub.output.size) return None
       val compatible = replacement.output.zip(sub.output).forall {
         case (n, o) => n.name == o.name && n.dataType == o.dataType
       }
       if (!compatible) return None
-      logInfo(s"graft auto-substitution: subtree served from $tableName")
+      logInfo(s"graft auto-substitution: subtree served from ${key.table}")
       // Re-bind the cache relation's fresh attributes to the original
       // subtree's expression IDs so parents resolve unchanged.
       Some(Project(

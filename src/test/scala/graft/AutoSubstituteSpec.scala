@@ -112,4 +112,24 @@ class AutoSubstituteSpec extends AnyFunSuite {
         "stale entry must not substitute")
     }
   }
+
+  test("a cached subtree whose table storage was wiped is recomputed, not served") {
+    agg().cacheToDbfs(
+      overridePreferSparkCache = true,
+      dbfsCacheComplexityThreshold = None,
+      dbfsCacheMultiplierThreshold = None)
+    def bigger(): DataFrame = agg().filter(col("n") > 0).orderBy("c_mktsegment")
+    val expected = bigger().collect().toSeq
+    assert(expected.nonEmpty)
+    val tbl = CacheConfig.current.tableNameFromHash(CacheIO.tableHash(agg()))
+    TestSpark.wipeTableStorage(tbl)
+    assert(spark.catalog.tableExists(tbl), "catalog entry should survive the wipe")
+    val (planText, result) = withAutoSub {
+      val q = bigger()
+      (q.queryExecution.analyzed.toString, q.collect().toSeq)
+    }
+    assert(!planText.contains(CacheConfig.current.cacheDatabase + "."),
+      s"a wiped entry must not substitute:\n$planText")
+    assert(result == expected)
+  }
 }

@@ -64,4 +64,16 @@ class DirectDataSpec extends AnyFunSuite {
     assert(DirectData.taggedHash(df).exists(_.startsWith("data_")))
     assert(df.count() == 2)
   }
+
+  test("a data_ table whose storage was wiped is rewritten, not reused") {
+    val mine = Seq(Row(7, "wiped-a"), Row(8, "wiped-b"), Row(9, "wiped-c"))
+    val first = spark.createCachedDataFrame(mine, ddl)
+    val tbl = CacheConfig.current.tableNameFromHash(DirectData.taggedHash(first).get)
+    val dir = TestSpark.wipeTableStorage(tbl)
+    assert(spark.catalog.tableExists(tbl), "catalog entry should survive the wipe")
+    val again = spark.createCachedDataFrame(mine, ddl)
+    assert(again.collect().toSet == mine.toSet)
+    assert(java.nio.file.Files.isDirectory(dir), "the table must be rewritten")
+    assert(spark.table(tbl).count() == mine.size)
+  }
 }

@@ -62,6 +62,26 @@ class HashingSpec extends AnyFunSuite {
     assert(CacheMetadata.extractInputSources(txt) == sources)
   }
 
+  test("CacheKey pins the hash, table name and sidecar path of an entry") {
+    // Literals computed from md5Hex(CacheMetadata.render(...)),
+    // tableNameFromHash and metadataPath before CacheKey existed: a
+    // change here re-keys (and so silently drops) every existing entry.
+    val sources = scala.collection.immutable.ListMap(
+      "file:/data/lineitem/l_shipmode=AIR" -> "2024-01-02 03:04:05",
+      "<input_files_md5>" -> "0123456789abcdef0123456789abcdef")
+    val plan = "Aggregate [l_returnflag#1], [l_returnflag#1, count(1) AS n#2L]\n" +
+      "+- Relation [l_returnflag#1] parquet"
+    val cfg = CacheConfig(sparkCacheDir = "/warehouse/sidecars", cacheDatabase = "cache_db")
+    CacheConfig.withConfig(cfg) {
+      val key = CacheKey(sources, plan)
+      assert(key.hash == "a777799f46d516c01a4cd57dea972788")
+      assert(key.table == "cache_db.a777799f46d516c01a4cd57dea972788")
+      assert(key.metadataPath ==
+        "/warehouse/sidecars/a777799f46d516c01a4cd57dea972788/cache_metadata.txt")
+      assert(key.metadataTxt == CacheMetadata.render(sources, plan))
+    }
+  }
+
   test("direct-data metadata variant parses") {
     val txt = CacheMetadata.renderDirectData("abc123", "2024-01-01 00:00:00")
     val parsed = CacheMetadata.extractInputSources(txt)

@@ -28,6 +28,19 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Delete a catalog table's storage directory but keep its catalog
+    * entry: the metastore outlives a wiped warehouse. Returns the
+    * deleted directory. */
+  def wipeTableStorage(table: String): java.nio.file.Path = {
+    import scala.jdk.CollectionConverters._
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    val dir = java.nio.file.Paths.get(
+      spark.sessionState.catalog.getTableMetadata(ident).location)
+    java.nio.file.Files.walk(dir).iterator.asScala.toSeq.reverse
+      .foreach(java.nio.file.Files.delete)
+    dir
+  }
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }
