@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.Sources.table
+
 /** Non-parquet source FIXTURES (ORC / JSON / CSV copies of small
   * testdata tables) shared by the corpus queries.
   *
@@ -39,9 +41,6 @@ object Fixtures {
         finally walk.close()
       } catch { case _: Throwable => () }
     }))
-
-  private def table(s: SparkSession, d: String, name: String) =
-    s.read.parquet(s"$d/$name.parquet")
 
   /** ORC copy of `supplier` (columnar-format matrix: q_orc_source). */
   def orcSupplier(s: SparkSession, d: String): String =

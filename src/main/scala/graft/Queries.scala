@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** The declared relational-query corpus (SURVEY §2.C): one entry per
   * operator category the reference exercises
   * (`tests/notebooks/integration_test_notebook.py:190-1150`), each with a
@@ -21,48 +23,45 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Queries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- scans ---
-    "q_scan" -> ((s, d) => t(s, d, "region").select("r_regionkey", "r_name")),
+    "q_scan" -> ((s, d) => table(s, d, "region").select("r_regionkey", "r_name")),
     "q_sql_scan" -> { (s, d) =>
-      t(s, d, "nation").createOrReplaceTempView("nation")
+      table(s, d, "nation").createOrReplaceTempView("nation")
       s.sql("SELECT n_nationkey, n_name, n_regionkey FROM nation WHERE n_regionkey IN (0, 1)")
     },
     // --- projection (select / withColumn / computed expr) ---
     "q_projection" -> ((s, d) =>
-      t(s, d, "lineitem")
+      table(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"),
           col("l_returnflag"))),
     // --- filter ---
     "q_filter" -> ((s, d) =>
-      t(s, d, "lineitem")
+      table(s, d, "lineitem")
         .filter(col("l_quantity") >= 45 && col("l_returnflag") === "R")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_shipdate")),
     // --- equi-join (dim side broadcast-able; Catalyst/AQE picks strategy) ---
     "q_join" -> ((s, d) =>
-      t(s, d, "orders")
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
+      table(s, d, "orders")
+        .join(table(s, d, "customer"), col("o_custkey") === col("c_custkey"))
         .select("o_orderkey", "c_name", "o_totalprice")),
     // --- semi / anti joins (EXISTS / NOT EXISTS) ---
     "q_semi_join" -> ((s, d) =>
-      t(s, d, "customer")
-        .join(t(s, d, "orders").filter(col("o_orderstatus") === "F"),
+      table(s, d, "customer")
+        .join(table(s, d, "orders").filter(col("o_orderstatus") === "F"),
           col("c_custkey") === col("o_custkey"), "left_semi")
         .select("c_custkey", "c_name")),
     "q_anti_join" -> ((s, d) =>
-      t(s, d, "customer")
-        .join(t(s, d, "orders").filter(col("o_orderstatus") === "F"),
+      table(s, d, "customer")
+        .join(table(s, d, "orders").filter(col("o_orderstatus") === "F"),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name")),
     // --- 3-way join + grouped agg (the shuffle-heavy headline query) ---
     "q_join_multi" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
+      table(s, d, "lineitem")
+        .join(table(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(table(s, d, "customer"), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(
           round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
@@ -70,7 +69,7 @@ object Queries {
           count(lit(1)).as("n"))),
     // --- grouped aggregation ---
     "q_agg_grouped" -> ((s, d) =>
-      t(s, d, "lineitem")
+      table(s, d, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
           sum("l_quantity").as("sum_qty"), // integral doubles: exact
@@ -78,14 +77,14 @@ object Queries {
           count(lit(1)).as("n"))),
     // --- simple (ungrouped) aggregation ---
     "q_agg_simple" -> ((s, d) =>
-      t(s, d, "lineitem").agg(
+      table(s, d, "lineitem").agg(
         count(lit(1)).as("cnt"),
         sum("l_quantity").as("total_qty"))),
     // --- distinct / count distinct ---
     "q_distinct" -> ((s, d) =>
-      t(s, d, "orders").select("o_orderstatus", "o_orderpriority").distinct()),
+      table(s, d, "orders").select("o_orderstatus", "o_orderpriority").distinct()),
     "q_count_distinct" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .groupBy("o_orderstatus")
         .agg(
           countDistinct(col("o_orderpriority")).as("n_prio"),
@@ -94,31 +93,31 @@ object Queries {
     "q_window" -> { (s, d) =>
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, d, "orders")
+      table(s, d, "orders")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select("o_orderkey", "o_custkey", "rn")
     },
     // --- sort + limit (deterministic via tie-break) ---
     "q_sort" -> ((s, d) =>
-      t(s, d, "customer")
+      table(s, d, "customer")
         .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
         .limit(100)
         .select("c_custkey", "c_name", "c_acctbal")),
     "q_limit" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         .limit(10)
         .select("o_orderkey", "o_totalprice")),
     // --- set op ---
     "q_union" -> { (s, d) =>
-      val c = t(s, d, "customer").select("c_custkey", "c_mktsegment")
+      val c = table(s, d, "customer").select("c_custkey", "c_mktsegment")
       c.filter(col("c_mktsegment") === "BUILDING")
         .unionByName(c.filter(col("c_mktsegment") === "MACHINERY"))
     },
     // --- scalar functions (string/date/math) ---
     "q_scalar_fn" -> ((s, d) =>
-      t(s, d, "lineitem")
+      table(s, d, "lineitem")
         .select(
           col("l_orderkey"), col("l_linenumber"),
           year(col("l_shipdate")).as("ship_year"),
@@ -150,7 +149,7 @@ object Queries {
     // --- approximate distinct (HLL sketch; rows-only — approximate
     //     values differ across engines by design) ---
     "q_approx_distinct" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .groupBy("o_orderstatus")
         .agg(approx_count_distinct(col("o_custkey")).as("approx_cust"))),
     // --- UDF (plan carries the UDF marker the cost model scores and the
@@ -158,36 +157,36 @@ object Queries {
     //     oracle can replicate it) ---
     "q_udf" -> { (s, d) =>
       val priceBand = udf((p: Double) => (p / 1000.0).toLong)
-      t(s, d, "lineitem")
+      table(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           priceBand(col("l_extendedprice")).as("price_band"))
     },
     // --- rollup / cube (hierarchical aggregates incl. null super-rows) ---
     "q_rollup" -> ((s, d) =>
-      t(s, d, "lineitem")
+      table(s, d, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"), sum("l_quantity").as("sum_qty"))),
     "q_cube" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .cube("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("n"))),
     // --- set op: intersect ---
     "q_intersect" -> { (s, d) =>
-      val active = t(s, d, "orders").filter(col("o_orderstatus") === "O")
+      val active = table(s, d, "orders").filter(col("o_orderstatus") === "O")
         .select(col("o_custkey").as("c_custkey"))
-      t(s, d, "customer").select(col("c_custkey")).intersect(active)
+      table(s, d, "customer").select(col("c_custkey")).intersect(active)
     },
     // --- set op: except (all customers minus the positive-balance set;
     //     non-empty on this corpus, unlike no-order customers) ---
     "q_except" -> { (s, d) =>
-      val c = t(s, d, "customer")
+      val c = table(s, d, "customer")
       c.select(col("c_custkey"))
         .except(c.filter(col("c_acctbal") > 0).select(col("c_custkey")))
     },
     // --- seeded sample: declared without oracle (row-count check only;
     //     RNG streams differ across engines by design, README.md:199) ---
     "q_sample" -> ((s, d) =>
-      t(s, d, "lineitem").sample(withReplacement = false, 0.1, 42)
+      table(s, d, "lineitem").sample(withReplacement = false, 0.1, 42)
         .select("l_orderkey", "l_linenumber")),
     // --- q_sample's quality companion (the RNG stream itself stays
     //     engine-specific): the sampled row count sits inside 4-sigma
@@ -196,7 +195,7 @@ object Queries {
     //     (equal counts + empty exceptAll). Both booleans are
     //     deterministic for the fixed seed, so the oracle gates them. ---
     "q_sample_bounds" -> { (s, d) =>
-      val li = t(s, d, "lineitem").select("l_orderkey", "l_linenumber")
+      val li = table(s, d, "lineitem").select("l_orderkey", "l_linenumber")
       val p = 0.1
       val s1 = li.sample(withReplacement = false, p, 42)
       val s2 = li.sample(withReplacement = false, p, 42)

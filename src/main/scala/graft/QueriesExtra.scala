@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-3 widening of the relational corpus (SURVEY §2.B/§2.C): reshaping
   * (pivot/unpivot/explode), multi-set grouping, exact percentiles, the
   * full window-function family, scalar string/date/conditional coverage,
@@ -15,15 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object QueriesExtra {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- pivot: one output column per pivot value (values pinned so the
     //     schema is static — at scale an unpinned pivot needs an extra
     //     distinct pass over the data just to learn the columns) ---
     "q_pivot" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .groupBy("o_orderpriority")
         .pivot("o_orderstatus", Seq("F", "O", "P"))
         .agg(count(lit(1)))
@@ -33,7 +32,7 @@ object QueriesExtra {
         .withColumnRenamed("P", "n_p")),
     // --- unpivot / melt: wide metrics to long (id, metric, value) ---
     "q_unpivot" -> ((s, d) =>
-      t(s, d, "lineitem")
+      table(s, d, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity",
           "l_extendedprice", "l_discount")
         .unpivot(
@@ -42,12 +41,12 @@ object QueriesExtra {
           "metric", "value")),
     // --- explode / lateral view: one row per token ---
     "q_explode" -> ((s, d) =>
-      t(s, d, "documents")
+      table(s, d, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
         .filter(col("token") =!= "")),
     // --- grouping sets (beyond rollup/cube: explicit set list) ---
     "q_grouping_sets" -> { (s, d) =>
-      t(s, d, "lineitem").createOrReplaceTempView("lineitem_gs")
+      table(s, d, "lineitem").createOrReplaceTempView("lineitem_gs")
       s.sql(
         """SELECT l_returnflag, l_linestatus, count(*) AS n,
           |       CAST(sum(l_quantity) AS DOUBLE) AS sum_qty
@@ -59,7 +58,7 @@ object QueriesExtra {
     //     l_extendedprice quantiles come from ONE percentile buffer
     //     (array form) — one sort pass per group instead of two ---
     "q_percentile" -> ((s, d) =>
-      t(s, d, "lineitem")
+      table(s, d, "lineitem")
         .groupBy("l_returnflag")
         .agg(
           expr("percentile(l_quantity, 0.5D)").as("med_qty"),
@@ -76,7 +75,7 @@ object QueriesExtra {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "orders").select(
+      table(s, d, "orders").select(
         col("o_orderkey"), col("o_custkey"),
         lag("o_totalprice", 1).over(w).as("prev_price"),
         lead("o_totalprice", 1).over(w).as("next_price"),
@@ -88,7 +87,7 @@ object QueriesExtra {
     },
     // --- scalar string functions ---
     "q_string_fns" -> ((s, d) =>
-      t(s, d, "customer").select(
+      table(s, d, "customer").select(
         col("c_custkey"),
         upper(col("c_name")).as("name_up"),
         lower(col("c_mktsegment")).as("seg_lo"),
@@ -100,7 +99,7 @@ object QueriesExtra {
         regexp_replace(col("c_name"), "[0-9]", "#").as("name_masked"))),
     // --- scalar date/time functions (sources are TIMESTAMP-typed) ---
     "q_date_fns" -> ((s, d) =>
-      t(s, d, "orders").select(
+      table(s, d, "orders").select(
         col("o_orderkey"),
         year(col("o_orderdate")).as("y"),
         quarter(col("o_orderdate")).as("q"),
@@ -113,7 +112,7 @@ object QueriesExtra {
           .as("days_since"))),
     // --- conditional expressions ---
     "q_conditional" -> ((s, d) =>
-      t(s, d, "lineitem").select(
+      table(s, d, "lineitem").select(
         col("l_orderkey"), col("l_linenumber"),
         when(col("l_quantity") >= 30, "bulk")
           .when(col("l_quantity") >= 10, "mid")
@@ -123,14 +122,14 @@ object QueriesExtra {
         least(col("l_tax"), col("l_discount")).as("min_rate"))),
     // --- JSON construction + extraction round trip ---
     "q_json" -> ((s, d) =>
-      t(s, d, "nation").select(
+      table(s, d, "nation").select(
         col("n_nationkey"),
         to_json(struct(col("n_nationkey").as("k"), col("n_name").as("nm")))
           .as("j"))
         .withColumn("nm_back", get_json_object(col("j"), "$.nm"))),
     // --- regex extraction + LIKE predicates ---
     "q_regex" -> ((s, d) =>
-      t(s, d, "documents").select(
+      table(s, d, "documents").select(
         col("doc_id"),
         regexp_extract(col("text"), "the ([a-z]+)", 1).as("after_the"),
         col("text").like("%the%").as("has_the"),
@@ -139,37 +138,37 @@ object QueriesExtra {
     //     nondeterministic collection order, is the contract; joined to a
     //     string because the driver's pandas compare can't sort array cells) ---
     "q_collect_list" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .groupBy("o_custkey")
         .agg(array_join(sort_array(collect_list(col("o_orderpriority"))), "|")
           .as("prios"))),
     // --- outer joins: null-extended rows on the customer side ---
     "q_outer_join" -> ((s, d) =>
-      t(s, d, "customer")
-        .join(t(s, d, "orders").filter(col("o_orderstatus") === "P"),
+      table(s, d, "customer")
+        .join(table(s, d, "orders").filter(col("o_orderstatus") === "P"),
           col("c_custkey") === col("o_custkey"), "left")
         .select("c_custkey", "o_orderkey", "o_totalprice")),
     "q_full_outer" -> { (s, d) =>
-      val big = t(s, d, "customer").filter(col("c_acctbal") > 4000)
+      val big = table(s, d, "customer").filter(col("c_acctbal") > 4000)
         .select(col("c_custkey"), col("c_acctbal"))
-      val ord = t(s, d, "orders").filter(col("o_orderstatus") === "P")
+      val ord = table(s, d, "orders").filter(col("o_orderstatus") === "P")
         .select(col("o_custkey"), col("o_orderkey"))
       big.join(ord, col("c_custkey") === col("o_custkey"), "full")
         .select("c_custkey", "c_acctbal", "o_custkey", "o_orderkey")
     },
     // --- cross join (tiny dims; the one shape where cartesian is right) ---
     "q_cross_join" -> ((s, d) =>
-      t(s, d, "region").crossJoin(t(s, d, "nation"))
+      table(s, d, "region").crossJoin(table(s, d, "nation"))
         .select("r_regionkey", "r_name", "n_nationkey", "n_name")),
     // --- scalar subquery (exact: max, not an FP-order-dependent avg) ---
     "q_scalar_subquery" -> { (s, d) =>
-      t(s, d, "orders").createOrReplaceTempView("orders_sq")
+      table(s, d, "orders").createOrReplaceTempView("orders_sq")
       s.sql("""SELECT o_orderkey, o_totalprice FROM orders_sq
               |WHERE o_totalprice = (SELECT max(o_totalprice) FROM orders_sq)""".stripMargin)
     },
     // --- arg-min/arg-max with composite tie-break (struct ordering) ---
     "q_argminmax" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .groupBy("o_orderstatus")
         .agg(
           max_by(col("o_orderkey"), struct(col("o_totalprice"), col("o_orderkey")))
@@ -178,7 +177,7 @@ object QueriesExtra {
             .as("min_order"))),
     // --- ordered string aggregation ---
     "q_string_agg" -> ((s, d) =>
-      t(s, d, "nation")
+      table(s, d, "nation")
         .groupBy("n_regionkey")
         .agg(array_join(sort_array(collect_list(col("n_name"))), ",")
           .as("nations"))),
@@ -186,9 +185,9 @@ object QueriesExtra {
     //     (same oracle shape), hot keys spread over saltFactor tasks ---
     "q_skew_join" -> ((s, d) =>
       operators.Skew.saltedJoin(
-        t(s, d, "lineitem").select(col("l_orderkey").as("o_orderkey"),
+        table(s, d, "lineitem").select(col("l_orderkey").as("o_orderkey"),
           col("l_linenumber"), col("l_quantity")),
-        t(s, d, "orders").select("o_orderkey", "o_orderpriority"),
+        table(s, d, "orders").select("o_orderkey", "o_orderpriority"),
         "o_orderkey", saltFactor = 4)
         .select("o_orderkey", "l_linenumber", "l_quantity", "o_orderpriority")),
     // --- custom Catalyst operator: grouped top-k via the
@@ -196,14 +195,14 @@ object QueriesExtra {
     //     (bounded map-side heaps instead of a full per-group sort) ---
     "q_grouped_topk" -> ((s, d) =>
       plans.GroupedTopK.topKPerGroup(
-        t(s, d, "orders"), Seq("o_custkey"),
+        table(s, d, "orders"), Seq("o_custkey"),
         Seq(col("o_totalprice").desc, col("o_orderkey").asc), k = 2)
         .select("o_custkey", "o_orderkey", "o_totalprice")),
     // --- custom TypedImperativeAggregate: exact distinct via mergeable
     //     set sketch (one partial/final aggregation; count(DISTINCT)
     //     plans two shuffles) ---
     "q_sketch_distinct" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .groupBy("o_orderstatus")
         .agg(functions.DistinctSketch.distinctSketch(col("o_custkey"))
           .as("n_cust"))),
@@ -213,7 +212,7 @@ object QueriesExtra {
     //     cast is hoisted once) ---
     "q_array_fns" -> { (s, d) =>
       val vd = col("embedding").cast("array<double>")
-      t(s, d, "embeddings").select(
+      table(s, d, "embeddings").select(
         col("vec_id"),
         size(col("embedding")).as("dim"),
         round(aggregate(transform(vd, x => x * x), lit(0.0), (a, x) => a + x), 6)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-10 corpus queries — the canonical crawl-front operators the
   * surface still lacked, all exact-oracle-gated:
   *
@@ -24,9 +26,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object QueriesR10 {
 
-  private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
-
   /** Words per reflowed line for q_line_dedup: the synthetic corpus has
     * no newlines, so the query deterministically reflows each document
     * into 8-word lines first (both engines replay the same reflow). */
@@ -39,7 +38,7 @@ object QueriesR10 {
     //     one-row broadcast and removal is a row-local array filter —
     //     corpus text never reaches an exchange (plan-pinned). ---
     "q_line_dedup" -> { (s, d) =>
-      val reflowed = docs(s, d).select(
+      val reflowed = table(s, d, "documents").select(
         col("doc_id"),
         array_join(
           operators.SubstringDedup.tokenChunks(
@@ -56,7 +55,7 @@ object QueriesR10 {
     //     q_release: resumption must be bit-identical. ---
     "q_release_resumed" -> ((s, d) =>
       operators.Pipeline.releaseResumable(
-        docs(s, d), "doc_id", "text", windowLen = 2048L, bpeRounds = 5)),
+        table(s, d, "documents"), "doc_id", "text", windowLen = 2048L, bpeRounds = 5)),
     // --- Unicode cleanup: NFC composition (native expression, ASCII
     //     fast path) + control-char strip. The ASCII fixture is
     //     already normalized, so the query deterministically injects
@@ -64,7 +63,7 @@ object QueriesR10 {
     //     (e -> e + BEL) first — both engines replay the injection,
     //     then DuckDB's nfc_normalize replays the composition. ---
     "q_nfc_normalize" -> { (s, d) =>
-      docs(s, d)
+      table(s, d, "documents")
         .select(col("doc_id"),
           regexp_replace(
             regexp_replace(col("text"), "a", "a\u0301"),
@@ -82,7 +81,7 @@ object QueriesR10 {
     //     collapsed. Fixture is plain text, so the query injects
     //     deterministic markup both engines replay. ---
     "q_html_strip" -> { (s, d) =>
-      docs(s, d)
+      table(s, d, "documents")
         .select(col("doc_id"),
           concat(lit("<html><body class=\"x\">"),
             regexp_replace(
@@ -102,7 +101,7 @@ object QueriesR10 {
     //     into the plain text every downstream operator consumes.
     //     Injected markup AND decomposed accents, both replayed. ---
     "q_extract" -> { (s, d) =>
-      docs(s, d)
+      table(s, d, "documents")
         .select(col("doc_id"),
           concat(lit("<div>"),
             regexp_replace(col("text"), "a", "a\u0301"),
@@ -122,7 +121,7 @@ object QueriesR10 {
     //     passage is lost). Row-local transform + posexplode — the
     //     chunk table that feeds the ANN/IVF operators. ---
     "q_rag_chunks" -> { (s, d) =>
-      docs(s, d)
+      table(s, d, "documents")
         .select(col("doc_id"),
           explode(operators.TextAnalysis.tokenWindows(
             col("text"), window = 32, stride = 24)).as("c"))
@@ -137,7 +136,7 @@ object QueriesR10 {
     //     the CHUNK table — the passage-retrieval shape a RAG index
     //     serves (score the chunk, not the whole document). ---
     "q_chunk_retrieval" -> { (s, d) =>
-      val chunks = docs(s, d)
+      val chunks = table(s, d, "documents")
         .select(col("doc_id"),
           explode(operators.TextAnalysis.tokenWindows(
             col("text"), window = 32, stride = 24)).as("c"))
@@ -170,7 +169,7 @@ object QueriesR10 {
     //     card row; the manifest is never re-executed for them (the
     //     released doc set is a doc_id semi-join against it). ---
     "q_release_card" -> { (s, d) =>
-      val dd = docs(s, d)
+      val dd = table(s, d, "documents")
       val manifest = operators.Pipeline.releaseResumable(
         dd, "doc_id", "text", windowLen = 2048L, bpeRounds = 5)
       // left_semi, not inner: at-most-once row multiplicity by
@@ -205,7 +204,7 @@ object QueriesR10 {
     //     incremental-release mechanic (append-only shard space, new
     //     batch opens a fresh shard). Emits B's manifest. ---
     "q_pack_continue" -> { (s, d) =>
-      val counts = docs(s, d).select(col("doc_id"),
+      val counts = table(s, d, "documents").select(col("doc_id"),
         operators.TextAnalysis.tokenCount(col("text")).as("n_tokens"))
       val packedA = operators.Packing.tokenShardOffsets(
         counts.filter(col("doc_id") % 3 === 0), "doc_id", "n_tokens", 512L)
@@ -223,7 +222,7 @@ object QueriesR10 {
     //     rule). Eval = every 5th doc so the fixture's near-dup pairs
     //     actually straddle the train/eval split. ---
     "q_decontam_13g" -> { (s, d) =>
-      val all = docs(s, d)
+      val all = table(s, d, "documents")
       operators.Decontaminate.decontaminate13Gram(
         train = all.filter(col("doc_id") % 5 =!= 0),
         eval = all.filter(col("doc_id") % 5 === 0)
@@ -235,7 +234,7 @@ object QueriesR10 {
     //     shingles map-side; exact join kills false positives —
     //     LOSSLESS, same oracle as the plain form. ---
     "q_decontam_13g_bloom" -> { (s, d) =>
-      val all = docs(s, d)
+      val all = table(s, d, "documents")
       operators.Decontaminate.ngramOverlapPerSetBloom(
         train = all.filter(col("doc_id") % 5 =!= 0),
         eval = all.filter(col("doc_id") % 5 === 0)
@@ -252,7 +251,7 @@ object QueriesR10 {
     //     candidate quality ≥ 0.90 against the exact cross-corpus
     //     pair set. ---
     "q_dedup_index_near" -> { (s, d) =>
-      val dd = docs(s, d)
+      val dd = table(s, d, "documents")
       val index = operators.Dedup.buildMinHashBandIndex(
         dd.filter(col("doc_id") % 3 === 0 || col("doc_id") < 10),
         "doc_id", "text")
@@ -265,7 +264,7 @@ object QueriesR10 {
     //     q_dedup_incremental_near) — the q_minhash_recall pattern for
     //     the index-served path. ---
     "q_index_recall" -> { (s, d) =>
-      val dd = docs(s, d)
+      val dd = table(s, d, "documents")
       val batch = dd.filter(col("doc_id") % 3 =!= 0)
       val ref = dd.filter(col("doc_id") % 3 === 0 || col("doc_id") < 10)
       val exact = operators.Dedup.ngramJaccardPairsAgainst(
@@ -289,9 +288,9 @@ object QueriesR10 {
     //     per-cluster window). ---
     "q_cluster_pack" -> { (s, d) =>
       val assigned = operators.Clustering.lloyd(
-        s.read.parquet(s"$d/embeddings.parquet"), "vec_id", "embedding",
+        table(s, d, "embeddings"), "vec_id", "embedding",
         k = QueriesR9.KmeansK, iters = QueriesR9.KmeansIters)
-      val counts = docs(s, d).select(col("doc_id"),
+      val counts = table(s, d, "documents").select(col("doc_id"),
         operators.TextAnalysis.tokenCount(col("text")).as("__nt"))
       operators.Packing.groupedPack(
         assigned.withColumnRenamed("vec_id", "doc_id")

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-11 queries: the crawl-front URL family (canonicalization,
   * exact URL dedup, per-host crawl report) and paragraph-level dedup.
   *
@@ -17,9 +19,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fragment + `:80` (v2); variant 3 is a DIFFERENT https page
   * exercising the `:443` rule. */
 object QueriesR11 {
-
-  private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
 
   /** Deterministic messy-URL synthesis shared by the three URL queries. */
   private def withUrl(df: DataFrame): DataFrame = {
@@ -101,7 +100,7 @@ object QueriesR11 {
     //     before ANY text-level pass. Map-only projection of built-in
     //     string functions (codegen'd, RE2-portable regexes). ---
     "q_url_canon" -> { (s, d) =>
-      withUrl(docs(s, d))
+      withUrl(table(s, d, "documents"))
         .select(col("doc_id"), col("url"),
           operators.Crawl.canonicalizeUrl(col("url")).as("canon_url"))
         .withColumn("host", operators.Crawl.urlHost(col("canon_url")))
@@ -111,7 +110,7 @@ object QueriesR11 {
     //     only exchange hash-partitions on the canonical DIGEST. ---
     "q_url_dedup" -> { (s, d) =>
       operators.Crawl.urlDedup(
-        withUrl(docs(s, d)), "url",
+        withUrl(table(s, d, "documents")), "url",
         Seq(col("n_chars").desc, col("doc_id")))
         .select(col("doc_id"), col("n_chars"), col("canon_url"))
     },
@@ -119,7 +118,7 @@ object QueriesR11 {
     //     and the URL-level duplicate rate — the crawl-frontier health
     //     signal. One aggregation on the host key. ---
     "q_host_report" -> ((s, d) =>
-      operators.Crawl.hostReport(withUrl(docs(s, d)), "url")),
+      operators.Crawl.hostReport(withUrl(table(s, d, "documents")), "url")),
     // --- per-registered-domain crawl ledger: hosts/fetches/pages per
     //     eTLD+1 (documented heuristic: last 2 labels, 3 when the 2nd-
     //     to-last is a registry label like co.uk). Own URL synthesis
@@ -136,7 +135,7 @@ object QueriesR11 {
           lit("http://news.site"), k, lit(".co.uk/p/"), b))
         .otherwise(concat(lit("http://site"), k, lit(".org/p/"), b))
       operators.Crawl.domainReport(
-        docs(s, d).select(col("doc_id"), url.as("url")), "url")
+        table(s, d, "documents").select(col("doc_id"), url.as("url")), "url")
     },
     // --- robots-style URL gate: per-host longest-prefix allow/deny
     //     with the REP tie rule (equal-length allow beats disallow),
@@ -152,7 +151,7 @@ object QueriesR11 {
         .when(col("doc_id") % 4 === 1, concat(lit("/private/public/p"), b))
         .when(col("doc_id") % 4 === 2, concat(lit("/public/p"), b))
         .otherwise(concat(lit("/p"), b))
-      val urls = docs(s, d).select(col("doc_id"),
+      val urls = table(s, d, "documents").select(col("doc_id"),
         concat(lit("http://site"), h, lit(".example.com"), path).as("url"))
       val rules = (
         (0 to 4).flatMap(i => Seq(
@@ -173,7 +172,7 @@ object QueriesR11 {
     "q_frontier_plan" -> { (s, d) =>
       val h = (col("doc_id") % 7).cast("string")
       val b = col("doc_id").cast("string")
-      val frontier = docs(s, d).select(
+      val frontier = table(s, d, "documents").select(
         concat(lit("http://site"), h, lit(".example.com/p/"), b).as("url"),
         col("n_chars").as("priority"))
       val policy = s.range(4).select(
@@ -216,7 +215,7 @@ object QueriesR11 {
       val top2 = operators.TextAnalysis.gopherRepetition(col("text"), 2).head
       val top3 = operators.TextAnalysis.gopherRepetition(col("text"), 3).head
       val dup5 = operators.TextAnalysis.gopherRepetition(col("text"), 5)(1)
-      docs(s, d)
+      table(s, d, "documents")
         .select(
           concat(lit("site"), (col("doc_id") % 7).cast("string")).as("host"),
           (top2 < 0.20 && top3 < 0.18 && dup5 < 0.15)
@@ -243,7 +242,7 @@ object QueriesR11 {
           lit("http://site"), h, lit(".example.com/p/"),
           (col("doc_id") % 7).cast("string")))
       operators.Crawl.urlTemplateReport(
-        docs(s, d).select(url.as("url")), "url", maxUrlsPerTemplate = 20)
+        table(s, d, "documents").select(url.as("url")), "url", maxUrlsPerTemplate = 20)
     },
     // --- mirror-host detection: every third doc is served by both its
     //     h<k> host and a m<k> mirror, so each (h<k>, m<k>) pair shares
@@ -251,7 +250,7 @@ object QueriesR11 {
     //     hot-content cutoff; text never crosses an exchange. ---
     "q_mirror_hosts" -> { (s, d) =>
       val k = (col("doc_id") % 10).cast("string")
-      val base = docs(s, d)
+      val base = table(s, d, "documents")
       val primary = base.select(
         concat(lit("h"), k, lit(".example.com")).as("host"), col("text"))
       val mirror = base.filter(col("doc_id") % 3 === 0).select(
@@ -277,7 +276,7 @@ object QueriesR11 {
     //     doc_id%6==0) so clusters of size 3 exercise transitivity. ---
     "q_mirror_clusters" -> { (s, d) =>
       val k = (col("doc_id") % 10).cast("string")
-      val base = docs(s, d)
+      val base = table(s, d, "documents")
       val fetches = base.select(
           concat(lit("h"), k, lit(".example.com")).as("host"), col("text"))
         .unionByName(base.filter(col("doc_id") % 3 === 0).select(
@@ -314,7 +313,7 @@ object QueriesR11 {
     //     pair; the per-page cut is the partial-then-final GroupedTopK
     //     exec; the rank window is bounded at k rows per page. ---
     "q_anchor_text" -> { (s, d) =>
-      val ds = docs(s, d)
+      val ds = table(s, d, "documents")
       val n = ds.count()
       val m = col("doc_id") % 4
       val e = ds.select(col("doc_id").as("src"),
@@ -332,7 +331,7 @@ object QueriesR11 {
     //     q_line_dedup: digests-only shuffle, sorted one-row broadcast
     //     hot set, row-local removal. ---
     "q_para_dedup" -> { (s, d) =>
-      val reflowed = docs(s, d).select(
+      val reflowed = table(s, d, "documents").select(
         col("doc_id"),
         array_join(
           operators.SubstringDedup.tokenChunks(
@@ -352,7 +351,7 @@ object QueriesR11 {
     * vary 0-3 and every fourth doc is dangling. Both engines replay
     * the synthesis (the modulus N is the document count). */
   private[graft] def linkEdges(s: SparkSession, d: String): DataFrame = {
-    val ds = docs(s, d)
+    val ds = table(s, d, "documents")
     val n = ds.count()
     val m = col("doc_id") % 4
     ds.select(col("doc_id").as("src"),

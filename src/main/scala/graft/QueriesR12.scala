@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-12 queries: the crawl front COMPOSED — the gated frontier
   * (robots + trap cells in front of the politeness schedule), mirror-
   * aware URL dedup (cluster-canonical hosts feeding survivor
@@ -15,14 +17,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * doc_id and both engines replay the identical synthesis. */
 object QueriesR12 {
 
-  private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
-
   /** Shared h/m/w mirror-fetch synthesis (q_mirror_clusters', plus
     * doc_id carried through for the URL table). */
   private def mirrorFetches(s: SparkSession, d: String): DataFrame = {
     val k = (col("doc_id") % 10).cast("string")
-    val base = docs(s, d)
+    val base = table(s, d, "documents")
     base.select(col("doc_id"),
         concat(lit("h"), k, lit(".example.com")).as("host"), col("text"))
       .unionByName(base.filter(col("doc_id") % 3 === 0).select(col("doc_id"),
@@ -49,7 +48,7 @@ object QueriesR12 {
         .when(col("doc_id") % 4 === 1, concat(lit("/d/"), b))
         .when(col("doc_id") % 4 === 2, concat(lit("/public/p"), b))
         .otherwise(concat(lit("/p"), b))
-      val cand = docs(s, d).select(
+      val cand = table(s, d, "documents").select(
         concat(lit("http://site"), h, lit(".example.com"), path).as("url"),
         col("n_chars").as("priority"))
       val rules = (
@@ -70,7 +69,7 @@ object QueriesR12 {
         .otherwise(concat(
           lit("http://site"), fh, lit(".example.com/p/"),
           (col("doc_id") % 7).cast("string")))
-      val fetchLog = docs(s, d).select(logUrl.as("url"))
+      val fetchLog = table(s, d, "documents").select(logUrl.as("url"))
       val policy = s.range(4).select(
         concat(lit("site"), col("id").cast("string"),
           lit(".example.com")).as("host"),
@@ -103,7 +102,7 @@ object QueriesR12 {
     //     anchor side folds per edge row-locally and sums in ONE
     //     dst-keyed partial-agg exchange. ---
     "q_anchor_bm25" -> { (s, d) =>
-      val ds = docs(s, d)
+      val ds = table(s, d, "documents")
       val n = ds.count()
       val m = col("doc_id") % 4
       val e = ds.select(col("doc_id").as("src"),
@@ -121,7 +120,7 @@ object QueriesR12 {
     //     discipline as q_pagerank; dangling mass teleports back to
     //     the seeds; the oracle unrolls the identical arithmetic. ---
     "q_ppr" -> { (s, d) =>
-      val ds = docs(s, d)
+      val ds = table(s, d, "documents")
       val seeds = ds.select(col("doc_id").as("id"))
         .filter(col("id") % 17 === 0)
       operators.LinkGraph.personalizedPageRank(
@@ -152,7 +151,7 @@ object QueriesR12 {
     //     × authority prior" cut). Gate folds row-locally; one join
     //     rank↔docs; the cut is the bounded GroupedTopK heaps. ---
     "q_rank_curation" -> { (s, d) =>
-      val ds = docs(s, d)
+      val ds = table(s, d, "documents")
       val ranks = operators.LinkGraph.pageRank(
         QueriesR11.linkEdges(s, d), "src", "dst", iterations = 2)
       val top2 = operators.TextAnalysis.gopherRepetition(col("text"), 2).head
@@ -198,7 +197,7 @@ object QueriesR12 {
     "q_release_web" -> { (s, d) =>
       val k = (col("doc_id") % 7).cast("string")
       val b = col("doc_id").cast("string")
-      val fetches = docs(s, d)
+      val fetches = table(s, d, "documents")
         .select(col("doc_id"), col("text"),
           explode(array(lit(0), lit(1))).as("v"))
         .select(col("doc_id"), col("v"),
@@ -240,7 +239,7 @@ object QueriesR12 {
     * count — identical topology family at every sf, cheap per-segment
     * actions in the sweep. */
   private def convEdges(s: SparkSession, d: String): DataFrame = {
-    val ds = docs(s, d).filter(col("doc_id") < ConvCap)
+    val ds = table(s, d, "documents").filter(col("doc_id") < ConvCap)
     val n = ds.count()
     val m = col("doc_id") % 4
     ds.select(col("doc_id").as("src"),

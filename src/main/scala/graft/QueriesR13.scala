@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-13 queries: the INCREMENTAL side of the link/crawl family —
   * PageRank maintained through an edge delta instead of a rebuild
   * (q_pagerank_delta) and mirror clusters maintained through new pair
@@ -16,9 +18,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * replay the identical synthesis. */
 object QueriesR13 {
 
-  private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
-
   /** The PREVIOUS release's edge list: [[QueriesR11.linkEdges]] minus
     * every doc's third link (j == 3, present when doc_id % 4 == 3),
     * plus a STALE link (src + 977) % n from every fifth doc. The
@@ -30,7 +29,7 @@ object QueriesR13 {
     * the fixture document counts (500 / 5k / 50k): exceptAll removes
     * BY VALUE, so a collision would eat a genuine link. */
   private def prevEdges(s: SparkSession, d: String): DataFrame = {
-    val ds = docs(s, d)
+    val ds = table(s, d, "documents")
     val n = ds.count()
     val m2 = least(col("doc_id") % 4, lit(2L))
     ds.select(col("doc_id").as("src"),
@@ -43,7 +42,7 @@ object QueriesR13 {
   }
 
   private def addedEdges(s: SparkSession, d: String): DataFrame = {
-    val ds = docs(s, d)
+    val ds = table(s, d, "documents")
     val n = ds.count()
     ds.filter(col("doc_id") % 4 === 3)
       .select(col("doc_id").as("src"),
@@ -51,7 +50,7 @@ object QueriesR13 {
   }
 
   private def removedEdges(s: SparkSession, d: String): DataFrame = {
-    val ds = docs(s, d)
+    val ds = table(s, d, "documents")
     val n = ds.count()
     ds.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id").as("src"),
@@ -148,7 +147,7 @@ object QueriesR13 {
     //     the oracle is q_mirror_clusters' verbatim. ---
     "q_mirror_incremental" -> { (s, d) =>
       val k = (col("doc_id") % 10).cast("string")
-      val base = docs(s, d)
+      val base = table(s, d, "documents")
       val twoWay = base.select(
           concat(lit("h"), k, lit(".example.com")).as("host"), col("text"))
         .unionByName(base.filter(col("doc_id") % 3 === 0).select(
@@ -172,7 +171,7 @@ object QueriesR13 {
     //     closure — q_dedup_components' recursive-CTE oracle
     //     verbatim. ---
     "q_dedup_components_inc" -> { (s, d) =>
-      val dd = docs(s, d)
+      val dd = table(s, d, "documents")
       val half = dd.filter(col("doc_id") % 2 === 0)
       val prior = operators.Dedup.nearDupComponents(
         half.select("doc_id"),
@@ -190,7 +189,7 @@ object QueriesR13 {
     //     shape and threshold as q_ivf_recall, so extension must not
     //     cost recall on this corpus. ---
     "q_ivf_extend" -> { (s, d) =>
-      val e = s.read.parquet(s"$d/embeddings.parquet")
+      val e = table(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val qs = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -255,7 +254,7 @@ object QueriesR13 {
         .when(col("doc_id") % 4 === 1, concat(lit("/d/"), b))
         .when(col("doc_id") % 4 === 2, concat(lit("/public/p"), b))
         .otherwise(concat(lit("/p"), b))
-      val cand = docs(s, d).select(
+      val cand = table(s, d, "documents").select(
         concat(lit("http://site"), h, lit(".example.com"), path).as("url"),
         col("n_chars").as("priority"))
       val fh = (col("doc_id") % 5).cast("string")
@@ -265,7 +264,7 @@ object QueriesR13 {
         .otherwise(concat(
           lit("http://site"), fh, lit(".example.com/p/"),
           (col("doc_id") % 7).cast("string")))
-      val fetchLog = docs(s, d).select(logUrl.as("url"))
+      val fetchLog = table(s, d, "documents").select(logUrl.as("url"))
       operators.Crawl.frontierPlanGated(
         cand, "url", "priority", rules, fetchLog, "url", policy,
         defaultDelayS = 5.0, maxPerHost = 40, maxUrlsPerTemplate = 20)

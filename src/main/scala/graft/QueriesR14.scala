@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-14 queries: RFC 9309 wildcard gating, the sitemap-seeded
   * frontier, and the IVF quantizer-drift freshness gate.
   *
@@ -38,9 +40,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object QueriesR14 {
 
-  private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
-
   private[graft] def robotsBodiesDf(s: SparkSession): DataFrame = {
     import s.implicits._
     QueriesR13.RobotsBodies
@@ -71,7 +70,7 @@ object QueriesR14 {
         .when(col("doc_id") % 6 === 3, concat(lit("/files/r"), b, lit(".pdfx")))
         .when(col("doc_id") % 6 === 4, concat(lit("/page/"), b))
         .otherwise(concat(lit("?session="), b))
-      val urls = docs(s, d).select(col("doc_id"),
+      val urls = table(s, d, "documents").select(col("doc_id"),
         concat(lit("http://wild"), h, lit(".example.com"), path).as("url"))
       val rules = Seq(
         ("wild0.example.com", "/*?session=", false),
@@ -94,7 +93,7 @@ object QueriesR14 {
     "q_frontier_seeded" -> { (s, d) =>
       val bodies = robotsBodiesDf(s)
       val h = (col("doc_id") % 6).cast("string")
-      val cand = docs(s, d).select(
+      val cand = table(s, d, "documents").select(
         concat(lit("http://site"), h, lit(".example.com/p/"),
           col("doc_id").cast("string")).as("url"),
         col("n_chars").as("priority"))
@@ -112,7 +111,7 @@ object QueriesR14 {
     //     rising. Fixed-point micro sums keep the means bit-stable
     //     and hash-comparable. ---
     "q_ivf_drift" -> { (s, d) =>
-      val e = s.read.parquet(s"$d/embeddings.parquet")
+      val e = table(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val vd = col("embedding").cast("array<double>")
       val nrm = sqrt(aggregate(transform(vd, x => x * x),
@@ -141,7 +140,7 @@ object QueriesR14 {
       val gap = lit(600.0) +
         (col("doc_id") % 10).cast("double") * lit(300.0)
       val period = col("doc_id") % 4 + 1
-      val hist = docs(s, d)
+      val hist = table(s, d, "documents")
         .select(col("doc_id"), gap.as("__gap"),
           explode(sequence(lit(0L), lit(3L))).as("j"))
         .select(
@@ -160,7 +159,7 @@ object QueriesR14 {
       val log = (0 until 10)
         .map(i => (s"h$i.example.com", 1000000.0 - i * 10000.0))
         .toDF("host", "fetched_at_s")
-      val frontier = docs(s, d).select(
+      val frontier = table(s, d, "documents").select(
         concat(lit("http://h"), (col("doc_id") % 12).cast("string"),
           lit(".example.com/p/"), col("doc_id").cast("string")).as("url"))
       operators.Crawl.robotsFreshness(frontier, "url",
@@ -197,7 +196,7 @@ object QueriesR14 {
     //     no double decides a seat). ---
     "q_apportion" -> ((s, d) =>
       operators.Curation.apportionBudget(
-        docs(s, d).groupBy(col("source"))
+        table(s, d, "documents").groupBy(col("source"))
           .agg(sum(col("n_chars")).as("w")),
         "source", "w", budget = 1000000000L)),
     // --- the filter the score becomes: confusion counts + rates at
@@ -288,13 +287,13 @@ object QueriesR14 {
 
   private[graft] def calibrationScored(
       s: SparkSession, d: String): DataFrame =
-    scoreLabel(docs(s, d))
+    scoreLabel(table(s, d, "documents"))
 
   /** The q_psi scoring: [[stopRatio]] at a caller-chosen scale
     * divisor, with the even/odd split flag for the two releases. */
   private def scaledScore(
       s: SparkSession, d: String, div: Double): DataFrame =
-    docs(s, d).select(
+    table(s, d, "documents").select(
       least(stopRatio / lit(div), lit(1.0)).as("score"),
       (col("doc_id") % 2 === 0).as("__even"))
 

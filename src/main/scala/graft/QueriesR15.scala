@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-15 queries: the recalibration loop (the fix a drifted
   * calibration report asks for) and the sitemap freshness/fetch-loop
   * compositions the round-14 verdict flagged as set-up-but-unfinished.
@@ -30,9 +32,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    seed (they are page discoveries, not sitemap fetches).
   */
 object QueriesR15 {
-
-  private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
 
   /** q_recrawl_seeded's clock: lastmod ages at this `nowS` span all
     * three clamp regimes of the prior (max-clamped, interior,
@@ -104,7 +103,7 @@ object QueriesR15 {
     "q_scorer_gate" -> { (s, d) =>
       val scored = QueriesR14.calibrationScored(s, d)
       val prev = QueriesR14.scoreLabel(
-        docs(s, d).filter(col("doc_id") % 2 === 0))
+        table(s, d, "documents").filter(col("doc_id") % 2 === 0))
       operators.QualityModel.scorerGate(scored, "score", "label", prev,
         minAuc = 0.5, maxEce = 0.1, maxPsi = 0.25)
     },
@@ -115,7 +114,7 @@ object QueriesR15 {
     //     carries the key, so the fit distributes ON source. ---
     "q_recalibrate_by" -> ((s, d) =>
       operators.QualityModel.recalibrateBy(
-        QueriesR14.scoreLabel(docs(s, d), keep = Seq("source")),
+        QueriesR14.scoreLabel(table(s, d, "documents"), keep = Seq("source")),
         "source", "score", "label")),
     // --- incremental recrawl scheduling: q_recrawl's history split
     //     into two time-ordered waves (j 0-1, then j 2-3), each
@@ -128,7 +127,7 @@ object QueriesR15 {
       val gap = lit(600.0) +
         (col("doc_id") % 10).cast("double") * lit(300.0)
       val period = col("doc_id") % 4 + 1
-      val hist = docs(s, d)
+      val hist = table(s, d, "documents")
         .select(col("doc_id"), gap.as("__gap"),
           explode(sequence(lit(0L), lit(3L))).as("j"))
         .select(
@@ -172,7 +171,7 @@ object QueriesR15 {
         .map { case (h, ls) => (h, ls.mkString("\n")) }
         .toDF("host", "body")
       val h = (col("doc_id") % 6).cast("string")
-      val cand = docs(s, d).select(
+      val cand = table(s, d, "documents").select(
         concat(lit("http://site"), h, lit(".example.com/p/"),
           col("doc_id").cast("string")).as("url"),
         col("n_chars").as("priority"))
@@ -210,7 +209,7 @@ object QueriesR15 {
     val gap = lit(600.0) +
       (col("doc_id") % 10).cast("double") * lit(300.0)
     val period = col("doc_id") % 4 + 1
-    val hist = docs(s, d)
+    val hist = table(s, d, "documents")
       .filter(col("doc_id") % 3 =!= 2)
       .select(col("doc_id"), urlTrue.as("url"), gap.as("__gap"),
         explode(sequence(lit(0L), lit(3L))).as("j"))
@@ -218,7 +217,7 @@ object QueriesR15 {
       .select(col("url"),
         (col("j").cast("double") * col("__gap")).as("fetched_at_s"),
         floor(col("j") / period).cast("string").as("digest"))
-    val sitemap = docs(s, d)
+    val sitemap = table(s, d, "documents")
       .filter(col("doc_id") % 2 === 0)
       .select(urlEsc.as("loc"),
         date_add(to_date(lit("1970-01-01")),

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-16 queries: closing the crawl loop's LAST open gate and the
   * scorer-observability keying the round-15 verdict ranked next.
   *
@@ -27,19 +29,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object QueriesR16 {
 
-  private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
-
   /** The calibration-family scoring ([[QueriesR14.scoreLabel]]) with
     * the source key carried — the ONE derivation all three keyed
     * observability queries score through. */
   private[graft] def scoredSrc(s: SparkSession, d: String): DataFrame =
-    QueriesR14.scoreLabel(docs(s, d), keep = Seq("source"))
+    QueriesR14.scoreLabel(table(s, d, "documents"), keep = Seq("source"))
 
   /** The previous release for the keyed drift arms: the even-doc_id
     * half at the same scaling — the q_scorer_gate baseline, keyed. */
   private def prevSrc(s: SparkSession, d: String): DataFrame =
-    QueriesR14.scoreLabel(docs(s, d).filter(col("doc_id") % 2 === 0),
+    QueriesR14.scoreLabel(table(s, d, "documents").filter(col("doc_id") % 2 === 0),
       keep = Seq("source"))
 
   /** q_frontier_due_gated's clock (same horizon as q_frontier_due). */
@@ -67,7 +66,7 @@ object QueriesR16 {
             col("doc_id").cast("string")))
         .otherwise(concat(lit("http://h6.example.com/p/"),
           (col("doc_id") % 7).cast("string")))
-      val fetchLog = docs(s, d).select(logUrl.as("url"))
+      val fetchLog = table(s, d, "documents").select(logUrl.as("url"))
       // Robots fetch log: h3 fetched 200 000 s ago (stale past the
       // 86 400 s TTL), h6 never fetched (stale by definition), the
       // rest fetched 1 000 s ago.
@@ -118,15 +117,15 @@ object QueriesR16 {
     "q_drift_gated_budget" -> { (s, d) =>
       val num = regexp_extract(col("source"), "([0-9]+)$", 1).cast("int")
       val div = when(num % 3 === 0, lit(0.09)).otherwise(lit(0.12))
-      val base = docs(s, d).filter(col("doc_id") % 2 === 0)
+      val base = table(s, d, "documents").filter(col("doc_id") % 2 === 0)
         .select(col("source"),
           least(QueriesR14.stopRatio / lit(0.12), lit(1.0)).as("score"))
-      val cur = docs(s, d).select(col("source"),
+      val cur = table(s, d, "documents").select(col("source"),
         least(QueriesR14.stopRatio / div, lit(1.0)).as("score"))
       val ok = operators.QualityModel
         .psiTotalBy(base, cur, "source", "score")
         .filter(col("psi_total") <= 0.25).select(col("source"))
-      val w = docs(s, d).join(broadcast(ok), Seq("source"), "left_semi")
+      val w = table(s, d, "documents").join(broadcast(ok), Seq("source"), "left_semi")
         .groupBy(col("source")).agg(sum(col("n_chars")).as("w"))
       operators.Curation.apportionBudget(
         w, "source", "w", budget = 1000000000L)

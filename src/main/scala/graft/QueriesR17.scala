@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-17 queries: the two verdict-ranked compositions that turn
   * standing REPORTS into ACTIONS.
   *
@@ -21,9 +23,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    filter the selection exists for, rolled up per source.
   */
 object QueriesR17 {
-
-  private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
 
   /** The calibration-family scoring with the source key — the ONE
     * derivation shared with the round-16 keyed observability queries
@@ -51,7 +50,7 @@ object QueriesR17 {
       .map(_._2).reduce(_ && _)
     val measurable = size(split(col("text"), " ")) >= 5
     operators.Crawl.hostQuality(
-      docs(s, d).select(
+      table(s, d, "documents").select(
         concat(lit("site"), (col("doc_id") % 7).cast("string"),
           lit(hostSuffix)).as("host"),
         when(measurable, gates).as("pass"),
@@ -99,7 +98,7 @@ object QueriesR17 {
         hostCensus(s, d, ".example.com"), budget = WaveSlots)
       val url = concat(lit("http://site"), (col("doc_id") % 7).cast("string"),
         lit(".example.com/p/"), col("doc_id").cast("string"))
-      val cands = docs(s, d).select(url.as("url"),
+      val cands = table(s, d, "documents").select(url.as("url"),
         (col("doc_id") % 100).cast("double").as("priority"))
       val policy = Seq(("site0.example.com", 3.0)).toDF("host", "delay_s")
       operators.Crawl.frontierPlanBudgeted(

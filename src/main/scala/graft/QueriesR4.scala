@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-4 corpus additions: statistical aggregates, correlated
   * EXISTS/LATERAL subqueries, RANGE window frames, map functions,
   * positional window functions, bloom-pruned semi join, and two more
@@ -14,13 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object QueriesR4 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- statistical aggregates (stddev/var/corr/covar) ---
     "q_stats_agg" -> ((s, d) =>
-      t(s, d, "lineitem")
+      table(s, d, "lineitem")
         .groupBy("l_returnflag")
         .agg(
           round(stddev_samp(col("l_quantity")), 4).as("sd_qty"),
@@ -29,8 +28,8 @@ object QueriesR4 {
           round(covar_samp(col("l_quantity"), col("l_discount")), 6).as("covar_qd"))),
     // --- correlated EXISTS + NOT EXISTS (planned as semi/anti joins) ---
     "q_exists" -> { (s, d) =>
-      t(s, d, "customer").createOrReplaceTempView("customer_ex")
-      t(s, d, "orders").createOrReplaceTempView("orders_ex")
+      table(s, d, "customer").createOrReplaceTempView("customer_ex")
+      table(s, d, "orders").createOrReplaceTempView("orders_ex")
       s.sql("""SELECT c_custkey, c_name FROM customer_ex c
               |WHERE EXISTS (SELECT 1 FROM orders_ex o
               |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
@@ -39,8 +38,8 @@ object QueriesR4 {
     },
     // --- LATERAL correlated subquery in the FROM clause ---
     "q_lateral" -> { (s, d) =>
-      t(s, d, "nation").createOrReplaceTempView("nation_lat")
-      t(s, d, "customer").createOrReplaceTempView("customer_lat")
+      table(s, d, "nation").createOrReplaceTempView("nation_lat")
+      table(s, d, "customer").createOrReplaceTempView("customer_lat")
       s.sql("""SELECT n_name, cnt FROM nation_lat n,
               |LATERAL (SELECT count(*) AS cnt FROM customer_lat c
               |         WHERE c.c_nationkey = n.n_nationkey) t""".stripMargin)
@@ -49,14 +48,14 @@ object QueriesR4 {
     //     customer within the trailing 90 days ---
     "q_window_range" -> { (s, d) =>
       val w = Window.partitionBy("o_custkey").orderBy("d").rangeBetween(-90, 0)
-      t(s, d, "orders")
+      table(s, d, "orders")
         .withColumn("d", datediff(col("o_orderdate"), to_date(lit("1992-01-01"))))
         .withColumn("cnt", count(lit(1)).over(w))
         .select("o_custkey", "o_orderkey", "d", "cnt")
     },
     // --- map construction + iteration (map_from_entries → explode) ---
     "q_map_fns" -> ((s, d) =>
-      t(s, d, "nation")
+      table(s, d, "nation")
         .groupBy("n_regionkey")
         .agg(map_from_entries(
           sort_array(collect_list(struct(col("n_name"), col("n_nationkey")))))
@@ -68,7 +67,7 @@ object QueriesR4 {
     "q_first_last" -> { (s, d) =>
       val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      t(s, d, "orders")
+      table(s, d, "orders")
         .select(
           col("o_custkey"), col("o_orderkey"),
           first(col("o_orderkey")).over(w).as("first_ok"),
@@ -78,14 +77,14 @@ object QueriesR4 {
     // --- ntile bucketing (deterministic: unique order key) ---
     "q_ntile" -> { (s, d) =>
       val w = Window.partitionBy("o_orderstatus").orderBy("o_orderkey")
-      t(s, d, "orders")
+      table(s, d, "orders")
         .select(col("o_orderstatus"), col("o_orderkey"),
           ntile(4).over(w).as("nt"))
     },
     // --- bloom-pruned semi join (exact result; see BloomJoin scaladoc) ---
     "q_bloom_join" -> { (s, d) =>
-      val big = t(s, d, "lineitem")
-      val small = t(s, d, "orders").filter(col("o_totalprice") > 400000)
+      val big = table(s, d, "lineitem")
+      val small = table(s, d, "orders").filter(col("o_totalprice") > 400000)
       operators.BloomJoin
         .bloomSemiJoin(big, small, "l_orderkey", "o_orderkey",
           expectedItems = 100000L)
@@ -106,26 +105,26 @@ object QueriesR4 {
     },
     // --- PII-style redaction (digit runs masked) — training-data scrub ---
     "q_redact" -> ((s, d) =>
-      t(s, d, "documents")
+      table(s, d, "documents")
         .select(col("doc_id"),
           substring(regexp_replace(col("text"), "[0-9]+", "#"), 1, 80)
             .as("red"))),
     // --- HLL register sketch (rows-only: engine-pinned hash; tolerance
     //     + partition-invariance pinned in DistinctSketchSpec) ---
     "q_hll_distinct" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .groupBy("o_orderstatus")
         .agg(graft.functions.DistinctSketch.hllSketch(col("o_custkey"))
           .as("approx_custs"))),
     // --- corpus-unigram LM score (cheap perplexity-proxy quality signal) ---
     "q_unigram_lm" -> ((s, d) =>
       operators.TextAnalysis.unigramLogProbs(
-        t(s, d, "documents"), "doc_id", "text")),
+        table(s, d, "documents"), "doc_id", "text")),
     // --- token-budget training shards via distributed prefix sum
     //     (two-pass: per-partition totals + offset broadcast — NOT the
     //     single-task global window) ---
     "q_shard" -> { (s, d) =>
-      val base = t(s, d, "documents")
+      val base = table(s, d, "documents")
         .select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"))
       operators.Packing.tokenShards(base, "doc_id", "n_tok", 2048L)
         .select("doc_id", "n_tok", "shard")
@@ -138,7 +137,7 @@ object QueriesR4 {
     //     MinHash composition (probabilistic candidate recall) is
     //     exercised by q_pipeline/q_dedup_neardup instead. ---
     "q_split_leakfree" -> { (s, d) =>
-      val dd = t(s, d, "documents")
+      val dd = table(s, d, "documents")
       val reps = operators.Dedup.nearDupComponents(
         dd.select("doc_id"),
         operators.Dedup.ngramJaccardPairs(dd, "doc_id", "text", k = 3, threshold = 0.8)
@@ -152,7 +151,7 @@ object QueriesR4 {
     "q_quantize" -> { (s, d) =>
       operators.Quantize
         .int8Quantize(
-          s.read.parquet(s"$d/embeddings.parquet")
+          table(s, d, "embeddings")
             .select(col("vec_id"), col("embedding")),
           "embedding")
         .select(col("vec_id"), col("scale"),
@@ -161,7 +160,7 @@ object QueriesR4 {
     // --- quantized-shortlist top-k with exact float rerank (rows-only:
     //     the shortlist is approximate; recall pinned in QuantizeSpec) ---
     "q_embed_int8" -> { (s, d) =>
-      val e = s.read.parquet(s"$d/embeddings.parquet")
+      val e = table(s, d, "embeddings")
       operators.Quantize.int8CosineTopK(
         e.select(col("vec_id"), col("embedding")),
         e.filter(col("vec_id") < 10)
@@ -172,7 +171,7 @@ object QueriesR4 {
     //     probabilistic; exact verify bounds precision — see SrpSpec) ---
     "q_embed_srp" -> { (s, d) =>
       operators.Similarity.srpCosinePairs(
-        s.read.parquet(s"$d/embeddings.parquet")
+        table(s, d, "embeddings")
           .select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", threshold = 0.45)
     },
@@ -181,8 +180,8 @@ object QueriesR4 {
     "q_mix" -> { (s, d) =>
       operators.Packing.weightedMix(
         Seq(
-          ("docs", t(s, d, "documents"), 0.7),
-          ("embs", t(s, d, "embeddings").withColumnRenamed("vec_id", "doc_id"), 0.3)),
+          ("docs", table(s, d, "documents"), 0.7),
+          ("embs", table(s, d, "embeddings").withColumnRenamed("vec_id", "doc_id"), 0.3)),
         "doc_id")
     },
     // --- repetition/diversity metrics (gopher-style quality signals):
@@ -190,7 +189,7 @@ object QueriesR4 {
     "q_repetition" -> { (s, d) =>
       val ts = split(col("text"), " ")
       val tri = operators.Shingles.wordShinglesAll(col("text"), 3)
-      t(s, d, "documents")
+      table(s, d, "documents")
         .filter(size(ts) >= 3)
         .select(col("doc_id"),
           round(size(array_distinct(ts)).cast("double") / size(ts), 6)

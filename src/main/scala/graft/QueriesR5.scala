@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{Quality, Quantize, Similarity}
+import graft.sources.Sources.table
 
 /** Round-5 corpus additions: the scale-safe approximate percentile and
   * driver-gated QUALITY companions for the approximate operators.
@@ -20,14 +21,11 @@ import graft.operators.{Quality, Quantize, Similarity}
   */
 object QueriesR5 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   private def embs(s: SparkSession, d: String): DataFrame =
-    t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+    table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
 
   private def queries(s: SparkSession, d: String): DataFrame =
-    t(s, d, "embeddings").filter(col("vec_id") < 10)
+    table(s, d, "embeddings").filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
 
   /** Exact brute-force top-k — the baseline every approximate top-k
@@ -44,7 +42,7 @@ object QueriesR5 {
     //     table into 3 final-agg buffers (memory, then spill, at 100×).
     //     Gated against the exact value within 2% relative error. ---
     "q_approx_percentile" -> ((s, d) =>
-      t(s, d, "lineitem")
+      table(s, d, "lineitem")
         .groupBy("l_returnflag")
         .agg(
           count(lit(1)).as("n_rows"),
@@ -98,7 +96,7 @@ object QueriesR5 {
     //     This makes the q_dedup_minhash rows-only query's QUALITY a
     //     driver-gated contract, not just a spec assertion. ---
     "q_minhash_recall" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       val exact = operators.Dedup
         .ngramJaccardPairs(docs, "doc_id", "text", k = 3, threshold = 0.8)
       val cand = operators.Dedup
@@ -117,7 +115,7 @@ object QueriesR5 {
     //     factors by design (the production path is the banded
     //     simHashNearDupPairs alone; see SCALE.md caveats). ---
     "q_simhash_complete" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       val sig = operators.Dedup.simHash64(docs, "doc_id", "text")
       val a = sig.select(col("id").as("id_a"), col("simhash").as("sa"))
       val b = sig.select(col("id").as("id_b"), col("simhash").as("sb"))
@@ -132,7 +130,7 @@ object QueriesR5 {
     },
     // --- HLL register sketch within 5% of exact per group ---
     "q_hll_tolerance" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .groupBy("o_orderstatus")
         .agg(
           count_distinct(col("o_custkey")).as("exact_nd"),
@@ -156,7 +154,7 @@ object QueriesR5 {
     },
     // --- Spark's built-in HLL++ (approx_count_distinct) within 5% ---
     "q_approx_distinct_tolerance" -> ((s, d) =>
-      t(s, d, "orders")
+      table(s, d, "orders")
         .groupBy("o_orderstatus")
         .agg(
           count_distinct(col("o_custkey")).as("exact_nd"),

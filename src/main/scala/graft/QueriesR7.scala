@@ -3,15 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-7 corpus queries: the remaining canonical training-data-
   * pipeline operations — eval-set decontamination, per-domain caps, and
   * deterministic stratified sampling. All three are exact (integer /
   * hash arithmetic), so each carries a full DuckDB oracle.
   */
 object QueriesR7 {
-
-  private def t(s: SparkSession, d: String, name: String): DataFrame =
-    s.read.parquet(s"$d/$name.parquet")
 
   /** Deterministic eval split: every 97th doc id forms the held-out
     * eval pool the decontamination query screens against. */
@@ -23,7 +22,7 @@ object QueriesR7 {
     //     design -> its distinct shingle set broadcasts; the 100 TB side
     //     is one scan + map-side semi join (operators/Decontaminate). ---
     "q_decontam" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       operators.Decontaminate.ngramOverlap(
         train = docs.filter(col("doc_id") % evalMod =!= 0),
         eval = docs.filter(col("doc_id") % evalMod === 0),
@@ -36,7 +35,7 @@ object QueriesR7 {
     //     every row). ---
     "q_domain_cap" -> { (s, d) =>
       plans.GroupedTopK.topKPerGroup(
-        t(s, d, "documents"), Seq("source", "lang"),
+        table(s, d, "documents"), Seq("source", "lang"),
         Seq(col("n_chars").desc, col("doc_id").asc), k = 3)
         .select("source", "lang", "doc_id", "n_chars")
     },
@@ -46,7 +45,7 @@ object QueriesR7 {
     //     so the recursive-CTE oracle provably matches
     //     (q_dedup_components precedent). ---
     "q_canonical" -> { (s, d) =>
-      val dd = t(s, d, "documents")
+      val dd = table(s, d, "documents")
       operators.Dedup.keepCanonical(
         dd.select("doc_id", "n_chars"),
         operators.Dedup.ngramJaccardPairs(dd, "doc_id", "text", k = 3, threshold = 0.8)
@@ -64,7 +63,7 @@ object QueriesR7 {
     //     (spec-pinned), so the window-formulation oracle applies. ---
     "q_stratified" -> { (s, d) =>
       operators.Splits.stratifiedSampleExact(
-        t(s, d, "documents"),
+        table(s, d, "documents"),
         stratumCol = "lang",
         rankCol = md5(col("doc_id").cast("string")),
         tieCol = "doc_id",
@@ -78,7 +77,7 @@ object QueriesR7 {
     //     oracle reproduces it bit-for-bit; entirely row-local in Spark
     //     (zero shuffle before the driver's sort). ---
     "q_winnow" -> { (s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
+      table(s, d, "documents").select(col("doc_id"),
         explode(operators.TextAnalysis
           .winnowFingerprints(col("text"), k = 3, w = 4)).as("fp"))
     },
@@ -87,7 +86,7 @@ object QueriesR7 {
     //     with term tiebreak so both engines rank identically. ---
     "q_tfidf" -> { (s, d) =>
       operators.TextAnalysis
-        .tfIdfTopTerms(t(s, d, "documents"), "doc_id", "text", topK = 5)
+        .tfIdfTopTerms(table(s, d, "documents"), "doc_id", "text", topK = 5)
         .select("doc_id", "term", "tfidf")
     },
     // --- within-doc chunked substring dedup (w=2): remove repeated
@@ -96,7 +95,7 @@ object QueriesR7 {
     //     misses. Pure projection: zero shuffle at any scale. ---
     "q_chunk_dedup_doc" -> { (s, d) =>
       operators.SubstringDedup.dedupChunksWithinDoc(
-        t(s, d, "documents"), "doc_id", "text", w = 2)
+        table(s, d, "documents"), "doc_id", "text", w = 2)
     },
     // --- corpus-wide chunked substring dedup (w=3): a chunk value
     //     survives only at its globally-first (doc_id, idx) occurrence —
@@ -105,13 +104,13 @@ object QueriesR7 {
     //     per-doc rebuild. ---
     "q_chunk_dedup" -> { (s, d) =>
       operators.SubstringDedup.chunkDedupGlobal(
-        t(s, d, "documents"), "doc_id", "text", w = 3)
+        table(s, d, "documents"), "doc_id", "text", w = 3)
     },
     // --- word-entropy quality score: per-doc Shannon entropy of the
     //     word distribution (gibberish / keyword-stuffing signal),
     //     computed entirely inside the row — map-only at 100 TB. ---
     "q_entropy" -> { (s, d) =>
-      t(s, d, "documents").select(
+      table(s, d, "documents").select(
         col("doc_id") +:
           operators.TextAnalysis.entropyFeatures(col("text")): _*)
     },
@@ -133,21 +132,21 @@ object QueriesR7 {
     //     Posting-list join on the bare long fingerprint key. ---
     "q_containment" -> { (s, d) =>
       operators.TextAnalysis.winnowContainmentPairs(
-        t(s, d, "documents"), "doc_id", "text", k = 3, w = 4, minShared = 3)
+        table(s, d, "documents"), "doc_id", "text", k = 3, w = 4, minShared = 3)
     },
     // --- boilerplate phrase mining: top-20 most frequent 3-word
     //     shingles corpus-wide. One shuffle (partial-agg counts) and a
     //     TakeOrderedAndProject top-N — never a global sort. ---
     "q_top_phrases" -> { (s, d) =>
       operators.TextAnalysis.topPhrases(
-        t(s, d, "documents"), "text", k = 3, topN = 20)
+        table(s, d, "documents"), "text", k = 3, topN = 20)
     },
     // --- embedding-space decontamination: training vectors near any
     //     eval vector in cosine — the paraphrase-robust companion to
     //     q_decontam's n-gram screen. Eval pool broadcasts; corpus side
     //     is one map-side fused-cosine scan + partial-agg counts. ---
     "q_embed_decontam" -> { (s, d) =>
-      val e = t(s, d, "embeddings")
+      val e = table(s, d, "embeddings")
       operators.Similarity.embeddingDecontam(
         train = e.filter(col("vec_id") % evalMod =!= 0),
         eval = e.filter(col("vec_id") % evalMod === 0),

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-8 corpus queries: the learned quality-classifier stage
   * ([[operators.QualityModel]]) — a model-based filter fit on a weak
   * label, gated the recall-companion way: the Spark side computes the
@@ -17,9 +19,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * arithmetic with full DuckDB oracles.
   */
 object QueriesR8 {
-
-  private def t(s: SparkSession, d: String, name: String): DataFrame =
-    s.read.parquet(s"$d/$name.parquet")
 
   /** Same deterministic eval split as QueriesR7's q_decontam: every
     * 97th doc id forms the held-out eval pool. */
@@ -45,7 +44,7 @@ object QueriesR8 {
     //     the gate is the portable contract. ---
     "q_quality_model" -> { (s, d) =>
       val scored = operators.QualityModel.fitScore(
-        t(s, d, "documents"), "doc_id", "text", weakLabel)
+        table(s, d, "documents"), "doc_id", "text", weakLabel)
       val holdN = count(when(col("holdout"), 1))
       scored.agg(
         count(lit(1)).as("n_docs"),
@@ -61,7 +60,7 @@ object QueriesR8 {
     //     content), so the drop is observable: batch docs 1,2,4,5,7,8
     //     share exact text with the reference and must vanish. ---
     "q_dedup_incremental" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       operators.Dedup.dedupAgainstReference(
         batch = docs.filter(col("doc_id") % 3 =!= 0),
         reference = docs.filter(col("doc_id") % 3 === 0 || col("doc_id") < 10),
@@ -75,7 +74,7 @@ object QueriesR8 {
     //     the anti-join exchange entirely — the steady-state recrawl
     //     shape where the reference dwarfs the batch. ---
     "q_dedup_incremental_bloom" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       operators.Dedup.dedupAgainstReferenceBloom(
         batch = docs.filter(col("doc_id") % 3 =!= 0),
         reference = docs.filter(col("doc_id") % 3 === 0 || col("doc_id") < 10),
@@ -92,7 +91,7 @@ object QueriesR8 {
     //     operator so the oracle provably matches; at scale feed the
     //     anti join banded-MinHash candidates instead. ---
     "q_dedup_incremental_near" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       operators.Dedup.nearDupAgainstReference(
         batch = docs.filter(col("doc_id") % 3 =!= 0),
         reference = docs.filter(col("doc_id") % 3 === 0 || col("doc_id") < 10),
@@ -105,20 +104,20 @@ object QueriesR8 {
     //     never shuffles for the removal itself. ---
     "q_boilerplate_strip" -> { (s, d) =>
       operators.SubstringDedup.stripFrequentChunks(
-        t(s, d, "documents"), "doc_id", "text", w = 3, maxDf = 2)
+        table(s, d, "documents"), "doc_id", "text", w = 3, maxDf = 2)
     },
     // --- interpolated corpus-bigram LM score: the perplexity-proxy
     //     quality filter one step up from q_unigram_lm; λ = 0.75 with
     //     unigram interpolation floor, self-scored on the corpus. ---
     "q_bigram_lm" -> { (s, d) =>
       operators.TextAnalysis.bigramLogProbs(
-        t(s, d, "documents"), "doc_id", "text", lambda = 0.75)
+        table(s, d, "documents"), "doc_id", "text", lambda = 0.75)
     },
     // --- Gopher-style top-token concentration: most frequent token per
     //     doc (deterministic lexicographic tie-break) and its fraction
     //     — row-local fold, no shuffle. ---
     "q_top_token" -> { (s, d) =>
-      t(s, d, "documents").select(
+      table(s, d, "documents").select(
         col("doc_id") +:
           operators.TextAnalysis.topTokenFraction(col("text")): _*)
     },
@@ -127,7 +126,7 @@ object QueriesR8 {
     //     failing stage per row -> <= k+1 partial-agg counts -> tiny
     //     broadcast join against the literal stage table). ---
     "q_funnel" -> { (s, d) =>
-      operators.Curation.filterFunnel(t(s, d, "documents"), Seq(
+      operators.Curation.filterFunnel(table(s, d, "documents"), Seq(
         "min_len" -> (col("n_chars") >= 100),
         "lang" -> (col("lang") =!= "zh"),
         "min_toks" -> (operators.TextAnalysis.tokenCount(col("text")) >= 40)))
@@ -138,7 +137,7 @@ object QueriesR8 {
     //     deterministic curriculum-mix step. ---
     "q_curriculum" -> { (s, d) =>
       operators.Curation.curriculumSample(
-        t(s, d, "documents").select("doc_id", "n_chars"),
+        table(s, d, "documents").select("doc_id", "n_chars"),
         "doc_id", col("n_chars"), keepPerMille = Seq(250, 500, 750, 1000))
         .select("doc_id", "bin")
     },
@@ -147,14 +146,14 @@ object QueriesR8 {
     //     rank (row_number over a global ORDER BY is one window task). ---
     "q_shuffle_order" -> { (s, d) =>
       operators.Curation.shuffleOrder(
-        t(s, d, "documents").select("doc_id"), "doc_id", seed = "s42")
+        table(s, d, "documents").select("doc_id"), "doc_id", seed = "s42")
         .select("doc_id", "pos")
     },
     // --- token-budget selection: greedy highest-n_chars docs while the
     //     running token total fits 12k — "the best B tokens", exact
     //     budget accounting via the descending-order prefix sum. ---
     "q_budget_select" -> { (s, d) =>
-      val docs = t(s, d, "documents").select(
+      val docs = table(s, d, "documents").select(
         col("doc_id"), col("n_chars"),
         operators.TextAnalysis.tokenCount(col("text")).as("n_tokens"))
       operators.Curation.budgetSelect(
@@ -168,7 +167,7 @@ object QueriesR8 {
     //     lacks %7==0 docs (added), new lacks %5==3 (removed), %11==0
     //     text gains a ' v2' suffix (changed). ---
     "q_snapshot_diff" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       operators.Versioning.snapshotDiff(
         oldSnap = docs.filter(col("doc_id") % 7 =!= 0)
           .select("doc_id", "text"),
@@ -184,7 +183,7 @@ object QueriesR8 {
     //     prefix sum. ---
     "q_pack_offsets" -> { (s, d) =>
       operators.Packing.tokenShardOffsets(
-        t(s, d, "documents").select(col("doc_id"),
+        table(s, d, "documents").select(col("doc_id"),
           operators.TextAnalysis.tokenCount(col("text")).as("n_tokens")),
         "doc_id", "n_tokens", budget = 2048L)
         .select("doc_id", "n_tokens", "shard", "tok_offset")
@@ -194,20 +193,20 @@ object QueriesR8 {
     //     a global sort. ---
     "q_fixed_sample" -> { (s, d) =>
       operators.Curation.fixedSample(
-        t(s, d, "documents").select("doc_id", "source"),
+        table(s, d, "documents").select("doc_id", "source"),
         "doc_id", n = 100, seed = "fs7")
     },
     // --- the cleaning pipeline's OWN gate attrition: which of the
     //     three quality-gate components (token band / TTR / avg token
     //     length, q_pipeline's exact parameters) drops what. ---
     "q_gate_funnel" -> { (s, d) =>
-      operators.Pipeline.gateAttrition(t(s, d, "documents"), "text")
+      operators.Pipeline.gateAttrition(table(s, d, "documents"), "text")
     },
     // --- cross-source duplication matrix: near-dup pair counts per
     //     unordered source pair — the provenance report over the exact
     //     Jaccard pairs (any pair set plugs in; banded at scale). ---
     "q_dup_matrix" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       operators.Dedup.dupGroupMatrix(
         docs,
         operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text",
@@ -220,7 +219,7 @@ object QueriesR8 {
       val w = when(col("lang") === "en", 2.5)
         .when(col("lang") === "zh", 0.3).otherwise(1.0)
       operators.Curation.upsampleByWeight(
-        t(s, d, "documents").select("doc_id", "lang"), "doc_id", w)
+        table(s, d, "documents").select("doc_id", "lang"), "doc_id", w)
         .select("doc_id", "copy")
     },
     // --- language confusion matrix: declared `lang` × detected
@@ -228,7 +227,7 @@ object QueriesR8 {
     //     corpus's language metadata does the heuristic contradict?).
     //     One scan + one tiny partial-agg shuffle. ---
     "q_lang_confusion" -> { (s, d) =>
-      t(s, d, "documents")
+      table(s, d, "documents")
         .select(col("lang"),
           operators.TextAnalysis.languageId(col("text")).as("lang_pred"))
         .groupBy("lang", "lang_pred")
@@ -240,7 +239,7 @@ object QueriesR8 {
     //     the pair operator's output. ---
     "q_dup_hist" -> { (s, d) =>
       operators.Dedup.ngramJaccardPairs(
-        t(s, d, "documents"), "doc_id", "text", k = 3, threshold = 0.5)
+        table(s, d, "documents"), "doc_id", "text", k = 3, threshold = 0.5)
         .select((floor(col("jaccard") * 20) / 20).as("bucket"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_pairs"))
@@ -250,7 +249,7 @@ object QueriesR8 {
     //     doc, not the benchmark). Eval (set, shingle) pairs broadcast;
     //     corpus scanned once; only (doc, set) HITS shuffle. ---
     "q_decontam_sets" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       operators.Decontaminate.ngramOverlapPerSet(
         train = docs.filter(col("doc_id") % evalMod =!= 0),
         eval = docs.filter(col("doc_id") % evalMod === 0)
@@ -263,7 +262,7 @@ object QueriesR8 {
     //     rows-only; the recall companion below carries the gate. ---
     "q_semdedup" -> { (s, d) =>
       operators.Dedup.semanticDedup(
-        t(s, d, "embeddings").select(col("vec_id"), col("embedding")),
+        table(s, d, "embeddings").select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", threshold = 0.45, nClusters = 8)
     },
     // --- SemDeDup quality companion: what fraction of the EXACT global
@@ -273,7 +272,7 @@ object QueriesR8 {
     //     side is DuckDB-reproducible; the gate is the portable
     //     contract. ---
     "q_semdedup_recall" -> { (s, d) =>
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+      val e = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val sem = operators.Dedup.semanticDedup(
         e, "vec_id", "embedding", threshold = 0.45, nClusters = 8)
       val comp = sem.select(col("rep"), col("vec_id"))
@@ -295,32 +294,32 @@ object QueriesR8 {
     //     explosion runs over the distinct-word vocabulary, not the
     //     corpus; fully oracle-gated. ---
     "q_bpe_merges" -> ((s, d) =>
-      operators.Vocab.bpeMergePairs(t(s, d, "documents"), "text", topK = 20)),
+      operators.Vocab.bpeMergePairs(table(s, d, "documents"), "text", topK = 20)),
     // --- power-of-two token-length histogram (sequence-bucket sizing);
     //     integer bucket = binary digit count, portable at 2^k edges ---
     "q_len_hist" -> ((s, d) =>
-      operators.Vocab.lengthHistogram(t(s, d, "documents"), "text")),
+      operators.Vocab.lengthHistogram(table(s, d, "documents"), "text")),
     // --- vocabulary coverage curve: smallest freq-ranked vocab
     //     covering 50/75/90/99% of token occurrences; prefix sum via
     //     the two-pass distributed runningTotalBy, never a single-task
     //     global window ---
     "q_vocab_coverage" -> ((s, d) =>
-      operators.Vocab.vocabCoverage(t(s, d, "documents"), "text")),
+      operators.Vocab.vocabCoverage(table(s, d, "documents"), "text")),
     // --- Zipf's-law fit: OLS slope of ln(count) vs ln(rank) over the
     //     frequency-ranked vocabulary — corpus-health statistic ---
     "q_zipf" -> ((s, d) =>
-      operators.Vocab.zipfFit(t(s, d, "documents"), "text")),
+      operators.Vocab.zipfFit(table(s, d, "documents"), "text")),
     // --- rare-n-gram inverted index: posting lists for shingles with
     //     df <= 3 — contamination forensics; df filter runs before any
     //     posting list is materialized ---
     "q_rare_index" -> ((s, d) =>
       operators.Vocab.rareNgramIndex(
-        t(s, d, "documents"), "doc_id", "text", k = 3, maxDf = 3)),
+        table(s, d, "documents"), "doc_id", "text", k = 3, maxDf = 3)),
     // --- corpus data card: the one-scan overview a dataset release
     //     ships with (count-distinct pair is one Expand-based agg) ---
     "q_datacard" -> { (s, d) =>
       val nTok = operators.TextAnalysis.tokenCount(col("text"))
-      t(s, d, "documents").agg(
+      table(s, d, "documents").agg(
         count(lit(1)).as("n_docs"),
         sum(nTok.cast("long")).as("n_tokens"),
         sum("n_chars").as("n_chars"),
@@ -339,14 +338,14 @@ object QueriesR8 {
     //     offsets (never a hot per-bucket window) ---
     "q_bucket_pack" -> ((s, d) =>
       operators.Packing.bucketedPack(
-        t(s, d, "documents"), "doc_id",
+        table(s, d, "documents"), "doc_id",
         operators.TextAnalysis.tokenCount(col("text")), contextLen = 256)),
     // --- DSIR-style importance weighting: per-doc avg log-likelihood
     //     ratio of an in-domain (lang='en') unigram LM vs the
     //     whole-corpus LM — importance-based data selection without a
     //     pretrained model; fully exact count arithmetic ---
     "q_dsir" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       operators.Curation.importanceWeights(
         docs, docs.filter(col("lang") === "en"), "doc_id", "text")
     },
@@ -354,7 +353,7 @@ object QueriesR8 {
     //     ONE corpus scan (tagged-struct explode + broadcast pool) —
     //     the measurement that picks the production shingle size ---
     "q_decontam_sweep" -> { (s, d) =>
-      val docs = t(s, d, "documents")
+      val docs = table(s, d, "documents")
       operators.Decontaminate.ngramOverlapSweep(
         train = docs.filter(col("doc_id") % evalMod =!= 0),
         eval = docs.filter(col("doc_id") % evalMod === 0),
@@ -366,7 +365,7 @@ object QueriesR8 {
     //     partition merge order ⇒ rows-only; q_heavy_complete below is
     //     the driver-gated capture guarantee. ---
     "q_heavy_hitters" -> { (s, d) =>
-      val toks = t(s, d, "documents")
+      val toks = table(s, d, "documents")
         .select(explode(operators.TextAnalysis.tokens(col("text"))).as("tok"))
       toks
         .agg(functions.FreqSketch.freqSketch(col("tok"), 8).as("sk"))
@@ -377,7 +376,7 @@ object QueriesR8 {
     //     frequency > N/(k+1) must appear in the sketch summary, and
     //     each reported lower bound must not exceed the true count ---
     "q_heavy_complete" -> { (s, d) =>
-      val toks = t(s, d, "documents")
+      val toks = table(s, d, "documents")
         .select(explode(operators.TextAnalysis.tokens(col("text"))).as("tok"))
       val sketch = toks
         .agg(functions.FreqSketch.freqSketch(col("tok"), 8).as("sk"))
@@ -404,13 +403,13 @@ object QueriesR8 {
     //     can't express ---
     "q_edit_pairs" -> ((s, d) =>
       operators.Dedup.editDistancePairs(
-        t(s, d, "documents"), "doc_id", "text",
+        table(s, d, "documents"), "doc_id", "text",
         k = 3, jaccardMin = 0.5, maxDist = 20)),
     // --- per-source data card: the q_datacard overview broken out by
     //     provenance source (what each crawl contributes to the mix) ---
     "q_datacard_by_source" -> { (s, d) =>
       val nTok = operators.TextAnalysis.tokenCount(col("text"))
-      t(s, d, "documents")
+      table(s, d, "documents")
         .groupBy("source")
         .agg(
           count(lit(1)).as("n_docs"),

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Round-9 corpus queries: the learned-BPE loop closed end-to-end —
   * iterated merge learning ([[operators.Vocab.learnBpeMerges]]) and its
   * application to the corpus ([[operators.Vocab.tokenizeWithMerges]]),
@@ -12,12 +14,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * bit-identical).
   */
 object QueriesR9 {
-
-  private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
-
-  private def embeds(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/embeddings.parquet")
 
   /** Greedy merge rounds learned/replayed by the BPE queries. Kept
     * small so the unrolled oracle stays readable; the operators take
@@ -34,13 +30,13 @@ object QueriesR9 {
     //     vocab (pair explosion is vocab-sized, never corpus-sized);
     //     the oracle replays the identical rounds unrolled ---
     "q_bpe_learn" -> ((s, d) =>
-      operators.Vocab.learnBpeMerges(docs(s, d), "text", BpeRounds)),
+      operators.Vocab.learnBpeMerges(table(s, d, "documents"), "text", BpeRounds)),
     // --- apply the LEARNED merges to every document: map-only replace
     //     chain per word, full subword sequence + count per doc — the
     //     token counts the packing operators consume ---
     "q_bpe_apply" -> { (s, d) =>
-      val merges = operators.Vocab.learnedMerges(docs(s, d), "text", BpeRounds)
-      operators.Vocab.tokenizeWithMerges(docs(s, d), "doc_id", "text", merges)
+      val merges = operators.Vocab.learnedMerges(table(s, d, "documents"), "text", BpeRounds)
+      operators.Vocab.tokenizeWithMerges(table(s, d, "documents"), "doc_id", "text", merges)
     },
     // --- anchor-based exact char-substring duplication profile:
     //     content-defined anchors (md5 of the 8-gram at each position)
@@ -48,21 +44,21 @@ object QueriesR9 {
     //     word-chunk boundaries; digests-only shuffles ---
     "q_substring_dedup" -> ((s, d) =>
       operators.SubstringDedup.anchoredSpanProfile(
-        docs(s, d), "doc_id", "text", spanLen = 50, anchorK = 8,
+        table(s, d, "documents"), "doc_id", "text", spanLen = 50, anchorK = 8,
         anchorZeros = 1)),
     // --- character coverage of cross-doc duplicated spans (interval
     //     union): the "how much would substring dedup remove" metric ---
     "q_dup_span_chars" -> ((s, d) =>
       operators.SubstringDedup.duplicatedSpanChars(
-        docs(s, d), "doc_id", "text", spanLen = 50, anchorK = 8,
+        table(s, d, "documents"), "doc_id", "text", spanLen = 50, anchorK = 8,
         anchorZeros = 1)),
     // --- sequence packing driven by the LEARNED tokenizer's counts:
     //     tokenizeWithMerges -> tokenShardOffsets, closing the loop
     //     from tokenizer design to context-window packing ---
     "q_pack_bpe" -> { (s, d) =>
-      val merges = operators.Vocab.learnedMerges(docs(s, d), "text", BpeRounds)
+      val merges = operators.Vocab.learnedMerges(table(s, d, "documents"), "text", BpeRounds)
       val counted = operators.Vocab
-        .tokenizeWithMerges(docs(s, d), "doc_id", "text", merges)
+        .tokenizeWithMerges(table(s, d, "documents"), "doc_id", "text", merges)
         .select(col("doc_id"), col("n_tokens"))
       operators.Packing.tokenShardOffsets(counted, "doc_id", "n_tokens", 2048L)
     },
@@ -71,7 +67,7 @@ object QueriesR9 {
     //     — a source tokenizing at 2× the corpus fertility pays 2× the
     //     context budget. One tokenize projection + one tiny group agg ---
     "q_bpe_fertility" -> { (s, d) =>
-      val dd = docs(s, d)
+      val dd = table(s, d, "documents")
       val merges = operators.Vocab.learnedMerges(dd, "text", BpeRounds)
       val tok = operators.Vocab
         .tokenizeWithMerges(dd, "doc_id", "text", merges)
@@ -90,12 +86,12 @@ object QueriesR9 {
     // --- per-source vocabulary drift (Jensen-Shannon vs the corpus):
     //     the mixture-design "which source is unlike the rest" report ---
     "q_source_drift" -> ((s, d) =>
-      operators.Curation.sourceDriftReport(docs(s, d), "source", "text")),
+      operators.Curation.sourceDriftReport(table(s, d, "documents"), "source", "text")),
     // --- incremental span overlap: per arriving doc, how many anchored
     //     spans already exist in the reference corpus (batch twin of
     //     the streaming substring screen; %3 split as q_dedup_incremental) ---
     "q_substring_incremental" -> { (s, d) =>
-      val dd = docs(s, d)
+      val dd = table(s, d, "documents")
       operators.SubstringDedup.spanOverlapAgainstReference(
         batch = dd.filter(col("doc_id") % 3 =!= 0),
         reference = dd.filter(col("doc_id") % 3 === 0 || col("doc_id") < 10),
@@ -106,7 +102,7 @@ object QueriesR9 {
     //     composition (weight = exp of the ROUNDED avg llr, so both
     //     engines agree on the weight bit-for-bit) ---
     "q_dsir_sample" -> { (s, d) =>
-      val dd = docs(s, d)
+      val dd = table(s, d, "documents")
       val weighted = operators.Curation
         .importanceWeights(dd, dd.filter(col("lang") === "en"), "doc_id", "text")
         .select(col("doc_id"), col("llr"))
@@ -118,16 +114,16 @@ object QueriesR9 {
     //     proportional to n_chars, reproducible cross-engine ---
     "q_weighted_sample" -> ((s, d) =>
       operators.Curation.weightedSample(
-        docs(s, d), "doc_id", "n_chars", k = 100)
+        table(s, d, "documents"), "doc_id", "n_chars", k = 100)
         .select("doc_id", "source", "n_chars")),
     // --- embedding-corpus health card: counts, dimension bounds,
     //     L2-norm distribution in one map-side-combined aggregation ---
     "q_embed_card" -> ((s, d) =>
-      operators.Similarity.embeddingCard(embeds(s, d), "embedding")),
+      operators.Similarity.embeddingCard(table(s, d, "embeddings"), "embedding")),
     // --- top drifted words between recrawl snapshots (same synthetic
     //     old/new split as q_snapshot_diff) ---
     "q_vocab_drift" -> { (s, d) =>
-      val dd = docs(s, d)
+      val dd = table(s, d, "documents")
       operators.Versioning.vocabDrift(
         oldSnap = dd.filter(col("doc_id") % 7 =!= 0).select("text"),
         newSnap = dd.filter(col("doc_id") % 5 =!= 3)
@@ -143,19 +139,19 @@ object QueriesR9 {
       val top2 = operators.TextAnalysis.gopherRepetition(col("text"), 2).head
       val top3 = operators.TextAnalysis.gopherRepetition(col("text"), 3).head
       val dup5 = operators.TextAnalysis.gopherRepetition(col("text"), 5)(1)
-      docs(s, d).select(col("doc_id"), top2, top3, dup5)
+      table(s, d, "documents").select(col("doc_id"), top2, top3, dup5)
     },
     // --- the published Gopher gates funneled: per-gate attrition from
     //     ONE corpus scan (filterFunnel's fail-index trick) ---
     "q_gopher_funnel" -> ((s, d) =>
       operators.Curation.filterFunnel(
-        docs(s, d),
+        table(s, d, "documents"),
         operators.TextAnalysis.gopherStages(col("text")))),
     // --- BM25 keyword retrieval: two corpus scans, ONE stats row on
     //     the wire, top-k via TakeOrderedAndProject ---
     "q_bm25" -> ((s, d) =>
       operators.Retrieval.bm25(
-        docs(s, d), "doc_id", "text", Seq("spark", "window", "vector"))),
+        table(s, d, "documents"), "doc_id", "text", Seq("spark", "window", "vector"))),
     // --- batch BM25: queries as DATA (qid, term rows) — inverted-index
     //     shape restricted to the query vocabulary; one corpus scan,
     //     match-sized shuffle, GroupedTopK per qid ---
@@ -165,34 +161,34 @@ object QueriesR9 {
         (1L, "spark"), (1L, "join"), (2L, "window"), (2L, "vector"),
         (3L, "merge")).toDF("qid", "term")
       operators.Retrieval.bm25Batch(
-        docs(s, d), "doc_id", "text", qs, "qid", "term")
+        table(s, d, "documents"), "doc_id", "text", qs, "qid", "term")
     },
     // --- deterministic Lloyd's k-means: md5-seeded init, 2 exact
     //     iterations, centroids rounded 6 each update — the oracle
     //     replays the fit round by round ---
     "q_kmeans" -> ((s, d) =>
       operators.Clustering.lloyd(
-        embeds(s, d), "vec_id", "embedding", k = KmeansK,
+        table(s, d, "embeddings"), "vec_id", "embedding", k = KmeansK,
         iters = KmeansIters)),
     // --- cluster-balanced sampling off the fitted assignment: up to 25
     //     ids per cluster by md5 draw (bounded per-group heaps) ---
     "q_cluster_sample" -> ((s, d) =>
       operators.Clustering.clusterBalancedSample(
         operators.Clustering.lloyd(
-          embeds(s, d), "vec_id", "embedding", k = KmeansK,
+          table(s, d, "embeddings"), "vec_id", "embedding", k = KmeansK,
           iters = KmeansIters),
         "vec_id", perCluster = 25)),
     // --- farthest-first (deterministic k-means++) seeded fit: better
     //     spread centroids, k bounded 1-row scans, same exact replay ---
     "q_kmeans_spread" -> ((s, d) =>
       operators.Clustering.lloyd(
-        embeds(s, d), "vec_id", "embedding", k = KmeansK, iters = 1,
+        table(s, d, "embeddings"), "vec_id", "embedding", k = KmeansK, iters = 1,
         seeding = "spread")),
     // --- incremental assignment: fit centroids on the even-id half,
     //     assign the odd-id half map-only against the fitted model
     //     (the recrawl path: no refit, model folds in as literals) ---
     "q_kmeans_assign" -> { (s, d) =>
-      val em = embeds(s, d)
+      val em = table(s, d, "embeddings")
       val model = operators.Clustering.lloydCentroids(
         em.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
         k = KmeansK, iters = KmeansIters)
@@ -203,7 +199,7 @@ object QueriesR9 {
     "q_cluster_outliers" -> ((s, d) =>
       operators.Clustering.clusterOutliers(
         operators.Clustering.lloyd(
-          embeds(s, d), "vec_id", "embedding", k = KmeansK,
+          table(s, d, "embeddings"), "vec_id", "embedding", k = KmeansK,
           iters = KmeansIters),
         "vec_id", topN = 10)),
     // --- the RELEASE composition: quality gate -> exact + near dedup
@@ -214,14 +210,14 @@ object QueriesR9 {
     //     out — every stage an already-gated operator, composed ---
     "q_release" -> ((s, d) =>
       operators.Pipeline.releaseManifest(
-        docs(s, d), "doc_id", "text", windowLen = 2048L,
+        table(s, d, "documents"), "doc_id", "text", windowLen = 2048L,
         bpeRounds = BpeRounds)),
     // --- compression-ratio quality signal (DEFLATE/UTF-8 size): the
     //     long-range-repetition detector n-gram stats dilute. zlib
     //     byte counts are JVM-stable but not a cross-engine spec ⇒
     //     rows-only; q_compress_sanity carries the oracle gate ---
     "q_compress_ratio" -> ((s, d) =>
-      docs(s, d).select(
+      table(s, d, "documents").select(
         col("doc_id") +:
           operators.TextAnalysis.compressionSignals(col("text")): _*)),
     // --- oracle-gated invariants of the deflate signal (q_sample_bounds
@@ -232,7 +228,7 @@ object QueriesR9 {
       val sig = operators.TextAnalysis.compressionSignals(col("text"))
       val sigDoubled = operators.TextAnalysis
         .compressionSignals(concat(col("text"), col("text")))
-      val base = docs(s, d).select(
+      val base = table(s, d, "documents").select(
         col("doc_id") +: (sig ++ Seq(
           sigDoubled(1).as("z2_bytes"),
           operators.TextAnalysis.compressionSignals(col("text"))(1)
@@ -250,29 +246,29 @@ object QueriesR9 {
     //     hash-threshold draw — selection is map-only ---
     "q_temperature_mix" -> ((s, d) =>
       operators.Curation.temperatureMix(
-        docs(s, d), "doc_id", "source", alpha = 0.5, total = 300L)
+        table(s, d, "documents"), "doc_id", "source", alpha = 0.5, total = 300L)
         .select("doc_id", "source")),
     // --- deterministic training-sample generation: T5-style span
     //     corruption and causal context/continuation splits — md5
     //     positions, pure projections, exact-replayable ---
     "q_span_corrupt" -> ((s, d) =>
-      operators.Augment.spanCorrupt(docs(s, d), "doc_id", "text")),
+      operators.Augment.spanCorrupt(table(s, d, "documents"), "doc_id", "text")),
     "q_causal_split" -> ((s, d) =>
-      operators.Augment.causalSplits(docs(s, d), "doc_id", "text")),
+      operators.Augment.causalSplits(table(s, d, "documents"), "doc_id", "text")),
     "q_fim" -> ((s, d) =>
-      operators.Augment.fimSplit(docs(s, d), "doc_id", "text")),
+      operators.Augment.fimSplit(table(s, d, "documents"), "doc_id", "text")),
     // --- wordlist policy screen: per-category token-hit counts + flag
     //     (category lists are caller policy; these exercise the
     //     mechanism over the corpus vocabulary) ---
     "q_policy_screen" -> ((s, d) =>
       operators.Scrub.policyScreen(
-        docs(s, d), "doc_id", "text",
+        table(s, d, "documents"), "doc_id", "text",
         Seq("perf" -> Seq("slow", "fast"), "infra" -> Seq("spark", "table")))),
     // --- PII scrub over deterministically injected PII (the testdata
     //     corpus is synthetic words, so the query plants emails/IPs/SSNs
     //     as a function of doc_id, then redacts them) ---
     "q_pii_scrub" -> { (s, d) =>
-      val injected = docs(s, d).select(
+      val injected = table(s, d, "documents").select(
         col("doc_id"),
         when(col("doc_id") % 4 === 0,
           concat(col("text"),

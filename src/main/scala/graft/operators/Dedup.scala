@@ -106,14 +106,21 @@ object Dedup {
     * selective; for web-scale corpora run [[minHashNearDupPairs]] first
     * and use this as the verify stage on candidates. Jaccard is computed
     * as `common / (|A| + |B| - common)` over exact integer counts, so the
-    * value is bit-identical across engines.
+    * value is bit-identical across engines. Output: `id_a < id_b` (both
+    * non-null longs) and `jaccard`.
+    *
+    * Ids must be unique. Pairs are grouped by their two ids and the two
+    * shingle counts, so rows that share an id and a shingle count pool
+    * their shared shingles into one `common`, a Jaccard that describes
+    * neither row. Rows with a null id never pair.
     *
     * `maxDf` (None = exact, the default) drops posting lists longer than
     * the cutoff before pair generation — the standard stop-shingle
     * approximation for corpora where a boilerplate shingle would
     * otherwise emit a quadratic pair block AND build an unbounded
     * `collect_list` buffer in one task. With it set, `common` undercounts
-    * by at most the number of dropped shingles shared by a pair. */
+    * by at most the number of dropped shingles shared by a pair, so a
+    * reported Jaccard never exceeds the true one. */
   def ngramJaccardPairs(
       df: DataFrame,
       idCol: String,
@@ -121,48 +128,20 @@ object Dedup {
       k: Int = 3,
       threshold: Double = 0.8,
       maxDf: Option[Int] = None): DataFrame = {
-    // No size(sh)>0 filter here (r18, guide "per-task work"): Catalyst
-    // pushes such a filter BELOW the shingle projection, re-evaluating
-    // the word_shingles expression once in the Filter and once in the
-    // Project — and this frame feeds THREE corpus passes (the posting
-    // explode + both Jaccard-denominator count joins), so the before-
-    // plan carried word_shingles 6×. The filter is also REDUNDANT on
-    // every consumer: explode of an empty array emits nothing, and the
-    // count joins are inner joins against pair endpoints, which only
-    // ever name docs with at least one shingle. 6 evals → 3.
-    val sh = df
-      .select(col(idCol).as("doc"), Shingles.wordShingles(col(textCol), k).as("sh"))
-    val counts = sh.select(col("doc"), size(col("sh")).as("n"))
     // Posting-list formulation: ONE shuffle clusters each shingle's
     // docs (vs TWO + a sort for the equivalent exploded self-join —
-    // measured 1.9s → 1.1s on the pair pipeline at sf0.1), then pairs
-    // are emitted locally from each list by a pipelined double
-    // generator (no intermediate materialization). Grouping keys on
-    // (xxhash64(g), g) rather than the raw shingle: still EXACT (the
-    // string remains part of the key, so a 64-bit collision cannot
-    // merge two shingles), but any sort fallback orders by the long
-    // first and compares the multi-word string only between hash-equal
-    // rows. Singleton postings (df=1, typically the vast majority)
-    // emit nothing.
-    val ex = sh.select(col("doc"), explode(col("sh")).as("g"))
-    val postings = ex
-      .groupBy(xxhash64(col("g")).as("h"), col("g"))
-      .agg(collect_list(col("doc")).as("docs"))
+    // measured 1.9s → 1.1s on the pair pipeline at sf0.1), then a
+    // pipelined double generator emits pairs locally from each list.
+    // Entries carry their doc's shingle count, so the corpus is read once.
+    val postings = clusteredPostings(shinglePostings(df, idCol, textCol, k))
+      .agg(collect_list(col("d")).as("docs"))
       .filter(size(col("docs")) > 1)
     val kept = maxDf.fold(postings)(m => postings.filter(size(col("docs")) <= m))
     val pairs = kept
       .select(col("docs"), explode(col("docs")).as("a"))
       .select(col("a"), explode(col("docs")).as("b"))
-      .filter(col("a") < col("b"))
-      .groupBy(col("a").as("id_a"), col("b").as("id_b"))
-      .agg(count(lit(1)).as("common"))
-    pairs
-      .join(counts.as("ca"), col("id_a") === col("ca.doc"))
-      .join(counts.as("cb"), col("id_b") === col("cb.doc"))
-      .withColumn("jaccard",
-        round(col("common") / (col("ca.n") + col("cb.n") - col("common")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      .filter(col("a.doc") < col("b.doc") && sizeFilter(threshold))
+    jaccardAtLeast(pairs, "id_a", "id_b", threshold)
   }
 
   /** CROSS-corpus exact k-shingle Jaccard pairs: every (batch, ref)
@@ -170,12 +149,14 @@ object Dedup {
     * incremental NEAR-dup dedup (is today's crawl a near-copy of
     * anything already ingested?). Same posting-list formulation as
     * [[ngramJaccardPairs]] (ONE shuffle clusters each shingle's docs,
-    * pairs generated locally per list), but the two corpora are tagged
+    * pairs generated locally per list, sizes carried in the postings,
+    * ids unique within each side), but the two corpora are tagged
     * into separate sub-lists so only batch×ref pairs are emitted —
     * cost is Σ(|batch_g|·|ref_g|) per shingle g, never within-corpus
     * quadratic, and never all-pairs. `maxDf` drops posting lists whose
     * combined length exceeds the cutoff (stop-shingle approximation,
-    * same contract as [[ngramJaccardPairs]]). */
+    * same contract as [[ngramJaccardPairs]]). Output: non-null
+    * `id_batch`, `id_ref` and `jaccard`. */
   def ngramJaccardPairsAgainst(
       batch: DataFrame,
       reference: DataFrame,
@@ -184,41 +165,65 @@ object Dedup {
       k: Int = 3,
       threshold: Double = 0.8,
       maxDf: Option[Int] = None): DataFrame = {
-    // Same no-redundant-filter shape as [[ngramJaccardPairs]] (r18):
-    // each side feeds the tagged union (explode drops empties) and its
-    // inner count join — a pushed-down size filter would double-eval
-    // the shingle expression per pass for nothing.
-    def shingled(df: DataFrame, isBatch: Boolean) = df
-      .select(col(idCol).as("doc"), Shingles.wordShingles(col(textCol), k).as("sh"),
-        lit(isBatch).as("is_batch"))
-    val shA = shingled(batch, isBatch = true)
-    val shB = shingled(reference, isBatch = false)
-    val countsA = shA.select(col("doc"), size(col("sh")).as("n"))
-    val countsB = shB.select(col("doc"), size(col("sh")).as("n"))
-    val ex = shA.unionByName(shB)
-      .select(col("is_batch"), col("doc"), explode(col("sh")).as("g"))
+    def side(df: DataFrame, isBatch: Boolean) =
+      shinglePostings(df, idCol, textCol, k).withColumn("is_batch", lit(isBatch))
+    val ex = side(batch, isBatch = true).unionByName(side(reference, isBatch = false))
     // collect_list skips nulls, so the two `when`s split each posting
     // list by side inside ONE aggregation.
-    val postings = ex
-      .groupBy(xxhash64(col("g")).as("h"), col("g"))
+    val postings = clusteredPostings(ex)
       .agg(
-        collect_list(when(col("is_batch"), col("doc"))).as("adocs"),
-        collect_list(when(!col("is_batch"), col("doc"))).as("bdocs"))
+        collect_list(when(col("is_batch"), col("d"))).as("adocs"),
+        collect_list(when(!col("is_batch"), col("d"))).as("bdocs"))
       .filter(size(col("adocs")) > 0 && size(col("bdocs")) > 0)
     val kept = maxDf.fold(postings)(m =>
       postings.filter(size(col("adocs")) + size(col("bdocs")) <= m))
     val pairs = kept
       .select(col("bdocs"), explode(col("adocs")).as("a"))
       .select(col("a"), explode(col("bdocs")).as("b"))
-      .groupBy(col("a").as("id_batch"), col("b").as("id_ref"))
-      .agg(count(lit(1)).as("common"))
+      .filter(sizeFilter(threshold))
+    jaccardAtLeast(pairs, "id_batch", "id_ref", threshold)
+  }
+
+  /** One row per (doc, shingle g): `d = struct(doc, n)`, `n` the doc's
+    * shingle count. Null ids count toward no posting list. `n` is taken
+    * before the explode, so the shingle array does not ride along with
+    * each shingle; no `size(sh)>0` filter, which Catalyst would push
+    * below the projection, evaluating the shingles twice (r18). */
+  private def shinglePostings(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    df.filter(col(idCol).isNotNull)
+      .select(col(idCol).as("doc"), Shingles.wordShingles(col(textCol), k).as("sh"))
+      .select(struct(col("doc"), size(col("sh")).as("n")).as("d"), col("sh"))
+      .select(col("d"), explode(col("sh")).as("g"))
+
+  /** Posting rows grouped per shingle after ONE exchange on its hash, so
+    * no map-side partial `collect_list` (which shrinks nothing) runs in
+    * the scan tasks. Keying on (xxhash64(g), g) stays exact, and a sort
+    * fallback compares the strings only between hash-equal rows. */
+  private def clusteredPostings(rows: DataFrame) =
+    rows.withColumn("h", xxhash64(col("g")))
+      .repartition(col("h"))
+      .groupBy(col("h"), col("g"))
+
+  /** Size filter of set-similarity joins: J(A, B) ≤ min/max of the sizes.
+    * The 1e-6 margin keeps it lossless, since `round(J, 6)` can lift a J
+    * just below the threshold up to it. */
+  private def sizeFilter(threshold: Double): Column =
+    least(col("a.n"), col("b.n")) >= greatest(col("a.n"), col("b.n")) * (threshold - 1e-6)
+
+  /** `(idA, idB, jaccard)` of the emitted `a`×`b` entries with
+    * `round(J, 6) ≥ threshold`; the ids are non-null ([[shinglePostings]]). */
+  private def jaccardAtLeast(
+      pairs: DataFrame, idA: String, idB: String, threshold: Double): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.KnownNotNull
+    import org.apache.spark.sql.graftbridge.Bridge
+    def notNull(c: String) = Bridge.column(KnownNotNull(Bridge.expression(col(c)))).as(c)
     pairs
-      .join(countsA.as("ca"), col("id_batch") === col("ca.doc"))
-      .join(countsB.as("cb"), col("id_ref") === col("cb.doc"))
+      .groupBy(col("a.doc").as(idA), col("b.doc").as(idB), col("a.n").as("na"), col("b.n").as("nb"))
+      .agg(count(lit(1)).as("common"))
       .withColumn("jaccard",
-        round(col("common") / (col("ca.n") + col("cb.n") - col("common")), 6))
+        round(col("common") / (col("na") + col("nb") - col("common")), 6))
       .filter(col("jaccard") >= threshold)
-      .select("id_batch", "id_ref", "jaccard")
+      .select(notNull(idA), notNull(idB), col("jaccard"))
   }
 
   /** Incremental NEAR-dup dedup: rows of `batch` that are not a
@@ -518,7 +523,11 @@ object Dedup {
     * for candidate pairs — never all-pairs. The exact value replaces the
     * signature estimate, so the output is exact-Jaccard-thresholded with
     * MinHash recall. This is the composition to run at 100 TB: stage 1
-    * touches each doc once, stage 2 touches each candidate pair once. */
+    * touches each doc once, stage 2 touches each candidate pair once.
+    *
+    * Ids must be unique: the verify joins candidates back to rows by id,
+    * so a duplicated id verifies every row that carries it (a
+    * shingle-empty duplicate yields a `jaccard = 0` row). */
   def nearDupPairs(
       df: DataFrame,
       idCol: String,

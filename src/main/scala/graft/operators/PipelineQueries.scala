@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources.table
+
 /** Declared-query corpus for the LLM-data-pipeline operators, over the
   * driver's `documents.parquet` / `embeddings.parquet` fixtures.
   * SQL-expressible operators carry a DuckDB oracle; approximate ones
@@ -10,26 +12,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * without one, which the driver records as a rows-only check. */
 object PipelineQueries {
 
-  private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
-  private def embs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/embeddings.parquet")
-
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- dedup ---
     "q_dedup_exact" -> ((s, d) =>
-      Dedup.exactDedup(docs(s, d), "text", "doc_id").select("doc_id")),
+      Dedup.exactDedup(table(s, d, "documents"), "text", "doc_id").select("doc_id")),
     "q_dedup_ngram" -> ((s, d) =>
-      Dedup.ngramJaccardPairs(docs(s, d), "doc_id", "text", k = 3, threshold = 0.8)),
+      Dedup.ngramJaccardPairs(table(s, d, "documents"), "doc_id", "text", k = 3, threshold = 0.8)),
     "q_dedup_minhash" -> ((s, d) =>
-      Dedup.minHashNearDupPairs(docs(s, d), "doc_id", "text",
+      Dedup.minHashNearDupPairs(table(s, d, "documents"), "doc_id", "text",
         k = 3, rowsPerBand = 3, numBands = 6, threshold = 0.7)),
     "q_dedup_simhash" -> ((s, d) =>
-      Dedup.simHashNearDupPairs(docs(s, d), "doc_id", "text", maxHamming = 3)),
+      Dedup.simHashNearDupPairs(table(s, d, "documents"), "doc_id", "text", maxHamming = 3)),
     "q_dedup_neardup" -> ((s, d) =>
-      Dedup.nearDupPairs(docs(s, d), "doc_id", "text", k = 3, threshold = 0.8)),
+      Dedup.nearDupPairs(table(s, d, "documents"), "doc_id", "text", k = 3, threshold = 0.8)),
     "q_dedup_components" -> { (s, d) =>
-      val dd = docs(s, d)
+      val dd = table(s, d, "documents")
       Dedup.nearDupComponents(
         dd.select("doc_id"),
         Dedup.nearDupPairs(dd, "doc_id", "text", k = 3, threshold = 0.8)
@@ -37,7 +34,7 @@ object PipelineQueries {
     },
     // --- similarity search ---
     "q_embed_threshold" -> { (s, d) =>
-      val e = embs(s, d)
+      val e = table(s, d, "embeddings")
       Similarity.cosineThresholdPairs(
         e.select(col("vec_id"), col("embedding")),
         e.filter(col("vec_id") < 10)
@@ -45,7 +42,7 @@ object PipelineQueries {
         "vec_id", "embedding", "qid", "qvec", threshold = 0.35)
     },
     "q_embed_topk" -> { (s, d) =>
-      val e = embs(s, d)
+      val e = table(s, d, "embeddings")
       // partial-aggregating variant: map-side top-k before the shuffle
       Similarity.bruteForceTopKAgg(
         e.select(col("vec_id"), col("embedding")),
@@ -54,7 +51,7 @@ object PipelineQueries {
         "vec_id", "embedding", "qid", "qvec", k = 5)
     },
     "q_embed_ann" -> { (s, d) =>
-      val e = embs(s, d)
+      val e = table(s, d, "embeddings")
       Similarity.annCosineTopK(
         e.select(col("vec_id"), col("embedding")),
         e.filter(col("vec_id") < 10)
@@ -63,11 +60,11 @@ object PipelineQueries {
     },
     "q_embed_neardup" -> { (s, d) =>
       Dedup.embeddingNearDupPairs(
-        embs(s, d).select(col("vec_id"), col("embedding")),
+        table(s, d, "embeddings").select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", threshold = 0.45, exact = true)
     },
     "q_embed_ivf" -> { (s, d) =>
-      val e = embs(s, d)
+      val e = table(s, d, "embeddings")
       Similarity.ivfCosineTopK(
         e.select(col("vec_id"), col("embedding")),
         e.filter(col("vec_id") < 10)
@@ -76,10 +73,10 @@ object PipelineQueries {
     },
     // --- text analysis ---
     "q_token_count" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
+      table(s, d, "documents").select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"))),
     "q_token_bpe" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
+      table(s, d, "documents").select(col("doc_id"),
         TextAnalysis.bpeTokenCount(col("text")).as("n_bpe"))),
     // batch session_window over events (streaming operator, batch frame)
     "q_events_sessions" -> { (s, d) =>
@@ -90,19 +87,19 @@ object PipelineQueries {
         .select("user_id", "n_events", "first_ts", "last_ts")
     },
     "q_text_quality" -> ((s, d) =>
-      docs(s, d).select(
+      table(s, d, "documents").select(
         col("doc_id") +: TextAnalysis.qualityFeatures(col("text")): _*)),
     "q_quality_filter" -> ((s, d) =>
-      docs(s, d)
+      table(s, d, "documents")
         .filter(TextAnalysis.qualityFilter(col("text"),
           minTokens = 20, maxTokens = 500, minTtr = 0.15,
           minAvgTokenLen = 2.0, maxAvgTokenLen = 8.0))
         .select("doc_id")),
     "q_lang_id" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
+      table(s, d, "documents").select(col("doc_id"),
         TextAnalysis.languageId(col("text")).as("lang_pred"))),
     "q_fingerprint" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
+      table(s, d, "documents").select(col("doc_id"),
         TextAnalysis.fingerprintMd5(col("text")).as("fp"))),
     // --- as-of (point-in-time) join: each event matched to the user's
     //     latest order at-or-before the event time ---
@@ -112,7 +109,7 @@ object PipelineQueries {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("o_custkey", "o_orderdate")
         .orderBy(col("o_orderkey").desc)
-      val o = s.read.parquet(s"$d/orders.parquet")
+      val o = table(s, d, "orders")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1) // one order per (custkey, date): determinism
         .select("o_custkey", "o_orderdate", "o_orderkey", "o_totalprice")
@@ -146,21 +143,21 @@ object PipelineQueries {
         graft.sources.Sources.events(s, d), window = "30 minutes")),
     // --- the whole cleaning pipeline, verified end-to-end ---
     "q_pipeline" -> ((s, d) =>
-      Pipeline.cleanCorpus(docs(s, d), "doc_id", "text").select("doc_id")),
+      Pipeline.cleanCorpus(table(s, d, "documents"), "doc_id", "text").select("doc_id")),
     // --- deterministic content-hash train/val/test split ---
     "q_split" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
+      table(s, d, "documents").select(col("doc_id"),
         Splits.assignSplit(col("doc_id"),
           Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05)).as("split"))),
     // --- multimodal binary plumbing ---
     "q_multimodal" -> ((s, d) =>
       Multimodal.assetStats(
-        Multimodal.toAssets(docs(s, d), "doc_id", "text", "source"))),
+        Multimodal.toAssets(table(s, d, "documents"), "doc_id", "text", "source"))),
     // frame sampling: executor-side fan-out to byte-range slices; the
     // oracle replicates the slicing arithmetic over the UTF-8 lengths
     "q_multimodal_frames" -> ((s, d) =>
       Multimodal.sampleFrames(
-        Multimodal.toAssets(docs(s, d), "doc_id", "text", "source"), nFrames = 4)
+        Multimodal.toAssets(table(s, d, "documents"), "doc_id", "text", "source"), nFrames = 4)
         .select(col("doc_id"), col("frame_idx"),
           length(col("frame_bytes")).as("n_bytes")))
   )

@@ -239,25 +239,6 @@ object Similarity {
       finally fitInput.unpersist(blocking = false)
     }
 
-  /** `(idCol, vecCol, __cell)`: every row tagged with its coarse-
-    * quantizer cell — the clustering step shared by [[ivfCosineTopK]]
-    * (probe structure) and [[graft.operators.Dedup.semanticDedup]]
-    * (within-cluster pairing). One distributed assignment pass over a
-    * ModelCache'd sampled k-means. */
-  def assignCells(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nLists: Int,
-      seed: Long = 42L,
-      maxIter: Int = 8,
-      fitSampleFraction: Double = 0.25): DataFrame = {
-    val corpusU = unitVectors(corpus, vecCol)
-    coarseQuantizer(corpusU, idCol, nLists, seed, maxIter, fitSampleFraction)
-      .transform(corpusU)
-      .select(col(idCol), col(vecCol), col("__cell"))
-  }
-
   /** `(idCol, vecCol, __cells: array<int>)`: every row tagged with its
     * `nProbes` NEAREST coarse-quantizer cells by centroid cosine — the
     * multi-probe assignment. Single-cell partitioning loses every

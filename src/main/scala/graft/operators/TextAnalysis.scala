@@ -199,14 +199,6 @@ object TextAnalysis {
     * exact dedup and cache keys. */
   def fingerprintMd5(text: Column): Column = md5(text.cast("binary"))
 
-  /** Winnowing-style rolling fingerprint: the minimum 64-bit hash over
-    * the document's k-token shingles. Engine-specific hash (xxhash64) —
-    * deterministic within Spark, not SQL-oracle-portable. */
-  def minShingleFingerprint(text: Column, k: Int = 3): Column = {
-    val sh = Shingles.wordShingles(text, k)
-    array_min(transform(sh, s => xxhash64(s)))
-  }
-
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     * SIGMOD'03): hash every k-token shingle with a polynomial rolling
     * hash, slide a window of `w` consecutive shingle hashes, keep each

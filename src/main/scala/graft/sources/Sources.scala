@@ -1,5 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -12,13 +16,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`README.md:131-134`) — plus CSV, with schemas supplied explicitly so
   * reads are deterministic (no sampling-based inference drift between
   * runs, which would change the analyzed plan and thus the cache
-  * fingerprint).
+  * fingerprint). Parquet schemas are read from the file footer on the
+  * driver ([[parquet]]), so building a frame runs no Spark job.
   */
 object Sources {
 
   /** Parquet table by name under a testdata-style directory. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** A parquet file whose schema is read from its footer on the driver,
+    * by the conversion `spark.read.parquet` runs inside a one-task job,
+    * under the same session conf: same schema, plan and fingerprint, no
+    * job. A directory is left to Spark's inference. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val status = p.getFileSystem(conf).getFileStatus(p)
+    if (status.isDirectory) spark.read.parquet(path)
+    else {
+      val footer = new Footer(status.getPath,
+        ParquetFileReader.readFooter(conf, status, SKIP_ROW_GROUPS))
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** The events table. Generator versions differ on the `ts` physical
     * type: some write TIMESTAMP(NANOS) parquet (readable only via the
@@ -36,7 +59,7 @@ object Sources {
     // the caller's session keep their configured behavior.
     val isolated = spark.newSession()
     isolated.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = isolated.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(isolated, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -289,38 +289,13 @@ class LinkGraphSpec extends AnyFunSuite {
     // (The materializeEvery default deliberately trades this laziness
     // for bounded lineage past 4 iterations — its eager checkpoint
     // jobs are the feature, covered by the bit-identity test above.)
-    val (df, oneIter) = jobsDuring(
+    val (df, oneIter) = TestSpark.jobsDuring(
       LinkGraph.pageRank(triangle, "src", "dst", 1, materializeEvery = 0))
-    val (_, sixIter) = jobsDuring(
+    val (_, sixIter) = TestSpark.jobsDuring(
       LinkGraph.pageRank(triangle, "src", "dst", 6, materializeEvery = 0))
     assert(sixIter == oneIter,
       s"construction jobs must not scale with iterations: 1-iter=$oneIter 6-iter=$sixIter")
     assert(df.columns.toSeq == Seq("id", "rank_fp"))
-  }
-
-  /** `body`'s result and the number of Spark jobs it started. Counts job
-    * STARTS with a listener — statusTracker's retained-job list is
-    * bounded, so length deltas go negative once the suite has run
-    * enough jobs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    // The bus posts asynchronously; drain it DETERMINISTICALLY
-    // (waitUntilEmpty via the main-scope bridge) so a late-posted
-    // job-start event can never land outside the window — a fixed
-    // sleep flaked under CI load.
-    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
-      (out, started.get())
-    } finally sc.removeSparkListener(listener)
   }
 
   /** Ranks by id, with the null vertex under None. */
@@ -416,7 +391,7 @@ class LinkGraphSpec extends AnyFunSuite {
     }
     sc.addSparkListener(sampler)
     val ((conv, k), jobs) =
-      try jobsDuring(converged(triangle))
+      try TestSpark.jobsDuring(converged(triangle))
       finally sc.removeSparkListener(sampler)
     // One job builds the adjacency, then one per iteration.
     assert(jobs <= k + 8, s"$jobs jobs for $k iterations")

@@ -160,6 +160,63 @@ class OperatorsSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 6L || p._2 == 6L), "unrelated doc excluded")
   }
 
+  // The size filter keeps a pair only when min(|A|,|B|) >= (t - 1e-6) *
+  // max(|A|,|B|). These pins sit on its boundary; every expected row is
+  // the output of the count-join formulation the filter replaced.
+  private def jaccardRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("Jaccard size filter: a contained 2-of-3 doc still reports 0.666667") {
+    val s = spark
+    import s.implicits._
+    // J = 2/3 rounds up to the threshold while the size ratio 2/3 sits
+    // below it: only the margin keeps this pair.
+    val d = Seq((1L, "a b c d"), (2L, "a b c d e")).toDF("doc_id", "text")
+    assert(jaccardRows(Dedup.ngramJaccardPairs(d, "doc_id", "text", 3, 0.666667)) ==
+      Set((1L, 2L, 0.666667)))
+    assert(jaccardRows(Dedup.ngramJaccardPairsAgainst(d.filter($"doc_id" === 2),
+      d.filter($"doc_id" === 1), "doc_id", "text", 3, 0.666667)) == Set((2L, 1L, 0.666667)))
+  }
+
+  test("Jaccard size filter: J exactly at the threshold (4 of 5 shingles) is kept") {
+    val s = spark
+    import s.implicits._
+    val d = Seq((3L, "p q r s t u"), (4L, "p q r s t u v")).toDF("doc_id", "text")
+    assert(jaccardRows(Dedup.ngramJaccardPairs(d, "doc_id", "text", 3, 0.8)) ==
+      Set((3L, 4L, 0.8)))
+    assert(jaccardRows(Dedup.ngramJaccardPairsAgainst(d.filter($"doc_id" === 3),
+      d.filter($"doc_id" === 4), "doc_id", "text", 3, 0.8)) == Set((3L, 4L, 0.8)))
+  }
+
+  test("Jaccard maxDf: a hot shingle is dropped, null ids count toward no posting list") {
+    val s = spark
+    import s.implicits._
+    // "x y z" is in 3 docs (dropped at maxDf 2): 1-2 keep 2 of their 3
+    // shared shingles. The null-id copy of doc 4 is in no posting list,
+    // so 4-5's lists stay at length 2.
+    val d = Seq[(Option[Long], String)](
+      (Some(1L), "x y z a b c"), (Some(2L), "x y z a b d"), (Some(3L), "x y z q r s"),
+      (Some(4L), "m n o p q"), (Some(5L), "m n o p q r"), (None, "m n o p q"))
+      .toDF("doc_id", "text")
+    assert(jaccardRows(Dedup.ngramJaccardPairs(d, "doc_id", "text", 3, 0.3, Some(2))) ==
+      Set((1L, 2L, 0.333333), (4L, 5L, 0.75)))
+    assert(jaccardRows(Dedup.ngramJaccardPairs(d, "doc_id", "text", 3, 0.3)) ==
+      Set((1L, 2L, 0.6), (4L, 5L, 0.75)))
+    val ref = d.filter($"doc_id" === 5 || $"doc_id".isNull)
+    assert(jaccardRows(Dedup.ngramJaccardPairsAgainst(d.filter($"doc_id" =!= 5 || $"doc_id".isNull),
+      ref, "doc_id", "text", 3, 0.3, Some(2))) == Set((4L, 5L, 0.75)))
+  }
+
+  test("exact Jaccard pairs keep their output schema: ids non-null") {
+    // Parquet ids are nullable; the pair ids are not.
+    val corpus = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+    assert(corpus.schema("doc_id").nullable)
+    assert(Dedup.ngramJaccardPairs(corpus, "doc_id", "text").schema.toDDL ==
+      "id_a BIGINT NOT NULL,id_b BIGINT NOT NULL,jaccard DOUBLE")
+    assert(Dedup.ngramJaccardPairsAgainst(corpus, corpus, "doc_id", "text").schema.toDDL ==
+      "id_batch BIGINT NOT NULL,id_ref BIGINT NOT NULL,jaccard DOUBLE")
+  }
+
   test("minHash candidates match exact near-dups and the plan has no cartesian") {
     // r = 1 for high recall at moderate jaccard on this tiny corpus;
     // seeded hashes make the outcome deterministic.

@@ -317,6 +317,15 @@ class PlanQualitySpec extends AnyFunSuite {
     // lower bound could not catch reintroduced per-shingle Generates.
     val gen = p.linesIterator.count(_.matches("\\s*(:?[+-]\\s)?\\(\\d+\\) Generate\\b.*"))
     assert(gen == 3, s"expected exactly shingle + two pair generators, got $gen")
+    // One corpus pass: the shingle counts ride in the postings, so no
+    // count join reads documents a second or third time.
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val nodes = PlanCheck.nodes(df)
+    val scans = nodes.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 1 && scans.head.relation.location.rootPaths.head.getName ==
+      "documents.parquet", s"expected one documents scan:\n${p.take(2000)}")
+    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), s"no join expected:\n${p.take(2000)}")
   }
 
   test("PlanCheck canary: a deliberate text shuffle IS visible through AQE " +

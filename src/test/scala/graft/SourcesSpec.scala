@@ -97,4 +97,32 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.conf.getOption(key) == before,
       "legacy nanos conf must stay scoped to the isolated read session")
   }
+
+  private val fixtureTables = Seq("customer", "documents", "embeddings", "events",
+    "lineitem", "nation", "orders", "part", "region", "supplier")
+
+  test("Sources.table: spark.read.parquet's schema and fingerprint, without a schema job") {
+    for (dir <- Seq(TestSpark.sf0001, TestSpark.sf001); name <- fixtureTables) {
+      val (inferred, inferJobs) = TestSpark.jobsDuring(spark.read.parquet(s"$dir/$name.parquet"))
+      val (read, readJobs) = TestSpark.jobsDuring(Sources.table(spark, dir, name))
+      assert(read.schema == inferred.schema, s"$dir/$name")
+      // The fingerprint text is what names a cache entry: equal text,
+      // equal keys, so entries written before the reader still hit.
+      assert(PlanFingerprint.getQueryPlan(read) == PlanFingerprint.getQueryPlan(inferred),
+        s"$dir/$name")
+      assert(readJobs == 0 && inferJobs == 1,
+        s"$dir/$name: reader ran $readJobs jobs, spark.read.parquet $inferJobs")
+    }
+  }
+
+  test("Sources.events reads its schema on the driver and keeps ts a timestamp") {
+    val (e, jobs) = TestSpark.jobsDuring(Sources.events(spark, TestSpark.sf001))
+    assert(jobs == 0)
+    assert(e.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+  }
+
+  test("Sources.table fails when the frame is built if the path is missing") {
+    val missing = Files.createTempDirectory("graft-missing").toString
+    intercept[java.io.FileNotFoundException](Sources.table(spark, missing, "nation"))
+  }
 }

@@ -41,6 +41,32 @@ object TestSpark {
       .foreach(java.nio.file.Files.delete)
     dir
   }
+
+  /** `body`'s result and the number of Spark jobs it started. Counts job
+    * STARTS with a listener — statusTracker's retained-job list is
+    * bounded, so length deltas go negative once the suite has run
+    * enough jobs. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    // The bus posts asynchronously; drain it DETERMINISTICALLY
+    // (waitUntilEmpty via the main-scope bridge) so a late-posted
+    // job-start event can never land outside the window — a fixed
+    // sleep flaked under CI load.
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      (out, started.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }
