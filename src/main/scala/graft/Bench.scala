@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.extensions._
@@ -36,27 +38,16 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft-bench-wh").toString)
-        .withExtensions(new graft.functions.GraftSparkExtensions)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def newSession(): SparkSession = Sessions.local(cpus.toInt,
+      java.nio.file.Files.createTempDirectory("graft-bench-wh").toString)
     // Warm up JVM/codegen and the spark.ml LSH/KMeans class graph so no
     // measured query is charged for first-use JIT compilation. Re-run
     // after every session recycle: the class-level JIT survives (same
     // JVM) but the parquet footer caches and fixture reads are
     // per-session.
     def warm(spark: SparkSession): Unit = try {
-      runFully(Queries.all("q_scan")(spark, sfDir))
-      runFully(Queries.all("q_agg_grouped")(spark, sfDir))
+      runFully(SparkEntry.queries("q_scan")(spark, sfDir))
+      runFully(SparkEntry.queries("q_agg_grouped")(spark, sfDir))
       val tiny = spark.read
         .parquet(s"$sfDir/embeddings.parquet")
         .limit(512)
@@ -72,7 +63,7 @@ object Bench {
       // Materialize the ORC/JSON/CSV source fixtures now so every timed
       // run of q_orc_source / q_json_source / q_csv_source is read-only.
       Fixtures.warm(spark, sfDir)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     // ---- Per-query executor CPU attribution ------------------------
     // Wall-clock moves with co-tenant load; task CPU time (the
@@ -115,7 +106,7 @@ object Bench {
     def cpuNow(): Long = {
       try org.apache.spark.sql.graftbridge.Bridge
         .drainListenerBus(spark.sparkContext)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       cpuNs.get()
     }
 
@@ -234,7 +225,7 @@ object Bench {
           controlJobsSamples.getOrElseUpdate(name,
             scala.collection.mutable.ArrayBuffer.empty[Double]) +=
             (jobsStarted.get() - j0).toDouble / reps
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(_) => () }
     }
 
     // Settle the JVM between query groups. Operators that persist
@@ -250,7 +241,7 @@ object Bench {
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = true))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
       // Two GC cycles with a short pause: ContextCleaner cleans shuffle
       // files and broadcasts from a weak-reference queue on its OWN
       // thread, so the first gc only enqueues the work — an immediate
@@ -388,7 +379,7 @@ object Bench {
           spark.stop()
           SparkSession.clearActiveSession()
           SparkSession.clearDefaultSession()
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(_) => () }
         spark = newSession()
         attachCpuListener(spark)
         warm(spark)
@@ -436,7 +427,7 @@ object Bench {
       // cleaner backlog. The trait, not the weight, is the signal.
       val leavesBlocks =
         try spark.sparkContext.getPersistentRDDs.nonEmpty
-        catch { case _: Throwable => false }
+        catch { case NonFatal(_) => false }
       // Drop the blocks the previous run left behind (localCheckpoint
       // materializations in components/packing/splits live in executor
       // storage until GC'd) so run N+1 is not measured against run N's
@@ -454,7 +445,7 @@ object Bench {
       def dropRunBlocks(): Unit = if (runClean) {
         try spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = true))
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
       // Per-run cleaner-debt drain for the SHORT-run checkpoint
       // churners only. The escalation pathology (q_pack_continue
@@ -481,7 +472,7 @@ object Bench {
       val drainOn = !sys.env.get("SPARK_GRAFT_DRAIN").contains("0")
       var drainPerRun = false
       def drainDebt(): Unit = if (drainPerRun && drainOn) {
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
+        try spark.catalog.clearCache() catch { case NonFatal(_) => () }
         System.gc()
         try Thread.sleep(150) catch { case _: InterruptedException => () }
       }
@@ -645,7 +636,7 @@ object Bench {
     if (only.isEmpty || only.exists(_.contains(cachePhaseSentinel))) {
       import org.apache.spark.sql.functions.lit
       def flagship(seq: Int): DataFrame =
-        Queries.all("q_join_multi")(spark, sfDir)
+        SparkEntry.queries("q_join_multi")(spark, sfDir)
           .withColumn("__bench_seq", lit(seq))
       def cached(seq: Int): DataFrame = flagship(seq).cacheToDbfs(
         overridePreferSparkCache = true,

@@ -33,12 +33,6 @@ final case class CacheConfig(
     defaultMultiplierThreshold: Option[Double] = Some(1.01),
     preferSparkCache: Boolean =
       CacheConfig.resolve("preferSparkCache", "true").toBoolean,
-    /** Cost-model estimator: keyword counting on explain text (reference
-      * parity, default) vs walking the optimized logical plan tree
-      * (robust to e.g. a column literally named "joined" — SURVEY §4.3's
-      * flagged alternative). Both feed the same golden factor table. */
-    useTreeEstimator: Boolean =
-      CacheConfig.resolve("useTreeEstimator", "false").toBoolean,
     /** Transparent subtree substitution via the analysis-phase Catalyst
       * rule ([[graft.plans.AutoSubstitute]]). Off by default: reference
       * parity is API-layer-only substitution. Requires the rule to be

@@ -1,7 +1,5 @@
 package graft
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.DataFrame
 
 /** Plan-derived compute-cost model.
@@ -64,40 +62,6 @@ object Complexity {
       if (n > 0) m * (f.base * math.pow(f.inc, (n - 1).toDouble)) else m
     }
 
-  /** Structured estimator (config `useTreeEstimator`): count operator
-    * NODES in the optimized logical plan instead of keywords in the
-    * explain text. Immune to the keyword method's substring traps (a
-    * column named "joined" inflates the join count — SURVEY §4.3) while
-    * feeding the exact same golden factor table. `Distinct` is rewritten
-    * to `Aggregate`/`Deduplicate` during optimization, so those nodes
-    * carry the distinct factor when they group without aggregating. */
-  def multiplierFromTree(df: DataFrame): Double = {
-    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
-    import org.apache.spark.sql.catalyst.plans.{logical => l}
-    val plan = df.queryExecution.optimizedPlan
-    var joinN, windowN, sortN, aggSimpleN, aggComplexN, distinctN = 0
-    plan.foreach {
-      case _: l.Join => joinN += 1
-      case _: l.Window => windowN += 1
-      case _: l.Sort => sortN += 1
-      case _: l.Deduplicate => distinctN += 1
-      case a: l.Aggregate =>
-        val plainGroupBy = a.aggregateExpressions.forall(e =>
-          a.groupingExpressions.exists(_.semanticEquals(e)))
-        if (plainGroupBy && a.groupingExpressions.nonEmpty) distinctN += 1
-        else if (a.groupingExpressions.nonEmpty || a.aggregateExpressions.size > 1)
-          aggComplexN += 1
-        else aggSimpleN += 1
-      case _ => ()
-    }
-    val udfN = plan.collect {
-      case p => p.expressions.map(_.collect { case _: ScalaUDF => 1 }.sum).sum
-    }.sum
-
-    multiply(Join -> joinN, WindowF -> windowN, Sort -> sortN, Distinct -> distinctN,
-      Udf -> udfN, AggComplex -> aggComplexN, AggSimple -> aggSimpleN)
-  }
-
   /** (complexity, multiplier, totalSizeGb) for a DataFrame (reference
     * `qce.py:202-257`): zero input size still yields a plan multiplier;
     * an unreadable plan degrades to multiplier 1.0. */
@@ -109,13 +73,8 @@ object Complexity {
     * the reference stats every input file (`qce.py:17-83`). */
   def estimate(df: DataFrame, sources: SourceSnapshot): (Double, Double, Double) = {
     val totalSize = sources.totalBytes / (1024.0 * 1024 * 1024)
-    val m =
-      if (CacheConfig.current.useTreeEstimator)
-        try multiplierFromTree(df) catch { case NonFatal(_) => 1.0 }
-      else {
-        val plan = PlanFingerprint.extendedPlanText(df).toLowerCase
-        if (plan.startsWith("error:")) 1.0 else calculateFromPlan(plan, totalSize)._2
-      }
+    val plan = PlanFingerprint.extendedPlanText(df).toLowerCase
+    val m = if (plan.startsWith("error:")) 1.0 else calculateFromPlan(plan, totalSize)._2
     (totalSize * m, m, totalSize)
   }
 }

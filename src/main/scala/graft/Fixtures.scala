@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.sources.Sources.table
@@ -37,9 +39,9 @@ object Fixtures {
       try {
         val walk = Files.walk(root)
         try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { try Files.delete(p) catch { case _: Throwable => () } })
+          .forEach(p => { try Files.delete(p) catch { case NonFatal(_) => () } })
         finally walk.close()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }))
 
   /** ORC copy of `supplier` (columnar-format matrix: q_orc_source). */

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round tooling: dump `explain("formatted")` for declared
   * queries WITHOUT executing them, so plan claims in the optimization
@@ -9,25 +8,16 @@ import org.apache.spark.sql.SparkSession
   *
   *   tools/run_class.sh graft.PlanDump <sfDir> <outDir> q_a,q_b[,...]
   *
-  * Same session shape as [[Bench]] (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cores, UTC, graft extensions) so the dumped plan is the
-  * plan the bench times. */
+  * Same session as [[Bench]] ([[Sessions.local]] at $SPARK_GRAFT_CPUS
+  * cores) so the dumped plan is the plan the bench times. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-plan-wh").toString)
-      .withExtensions(new graft.functions.GraftSparkExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt,
+      java.nio.file.Files.createTempDirectory("graft-plan-wh").toString)
     CacheConfig.current = CacheConfig(sparkCacheDir =
       java.nio.file.Files.createTempDirectory("graft-plan-cache").toString + "/")
     java.nio.file.Files.createDirectories(outDir)

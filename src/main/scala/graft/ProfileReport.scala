@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 
 /** Diagnostic: measure the driver-side row-hashing overhead of
   * [[DirectData.createCachedDataFrame]] against data size — the analogue
@@ -22,14 +22,8 @@ object ProfileReport {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-prof-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Sessions.local(8, java.nio.file.Files.createTempDirectory("graft-prof-wh").toString)
     CacheConfig.current = CacheConfig(sparkCacheDir =
       java.nio.file.Files.createTempDirectory("graft-prof").toString + "/")
 

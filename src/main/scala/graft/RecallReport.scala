@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Quality, Quantize, Similarity}
+import graft.sources.Sources.table
 
 /** Diagnostic: print the RAW recall/tolerance numbers behind the
   * `q_*_recall` / `q_*_tolerance` companion queries at one or more
@@ -15,18 +15,13 @@ object RecallReport {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftSparkExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Sessions.local(32, java.nio.file.Files.createTempDirectory("graft-recall-wh").toString)
 
     for (d <- dirs) {
-      val e = spark.read.parquet(s"$d/embeddings.parquet")
+      val e = table(spark, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val q = spark.read.parquet(s"$d/embeddings.parquet")
+      val q = table(spark, d, "embeddings")
         .filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val exact = Similarity.bruteForceTopKAgg(
@@ -62,7 +57,7 @@ object RecallReport {
       val sp = Quality.pairRecallCounts(exactPairs, coPairs).collect().head
       println(f"$d%-28s semdedup     n_exact=${sp.getLong(0)}%4d n_hit=${sp.getLong(1)}%4d recall=${sp.getLong(1).toDouble / math.max(1, sp.getLong(0))}%.3f")
 
-      val orders = spark.read.parquet(s"$d/orders.parquet")
+      val orders = table(spark, d, "orders")
       val hll = orders.groupBy("o_orderstatus")
         .agg(count_distinct(col("o_custkey")).as("exact_nd"),
           graft.functions.DistinctSketch.hllSketch(col("o_custkey")).as("hll"),
@@ -73,7 +68,7 @@ object RecallReport {
         println(f"$d%-28s distinct ${r.getString(0)}%-4s exact=$ex2%6d hll_err=${math.abs(h - ex2).toDouble / ex2}%.4f acd_err=${math.abs(a - ex2).toDouble / ex2}%.4f")
       }
 
-      val li = spark.read.parquet(s"$d/lineitem.parquet")
+      val li = table(spark, d, "lineitem")
       li.groupBy("l_returnflag")
         .agg(expr("percentile_approx(l_extendedprice, 0.5D, 10000)").as("ap"),
           expr("percentile(l_extendedprice, 0.5D)").as("ex"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.extensions._
+import graft.queries.{QuerySpec, Sql}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -22,23 +23,13 @@ object SparkEntry {
       dbfsCacheMultiplierThreshold = None)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2 (+ the
-    * LLM-pipeline operators). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all ++ QueriesExtra.all ++ operators.PipelineQueries.all ++
-      QueriesR4.all ++ QueriesR5.all ++ QueriesR7.all ++ QueriesR8.all ++
-      QueriesR9.all ++ QueriesR10.all ++ QueriesR11.all ++ QueriesR12.all ++
-      QueriesR13.all ++ QueriesR14.all ++ QueriesR15.all ++ QueriesR16.all ++
-      QueriesR17.all
+  /** One entry per declared query (see [[graft.queries.QuerySpec.all]]). */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    QuerySpec.all.map(q => q.name -> q.build).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (seeded sample, LSH/minhash approximations). */
-  def oracleSql: Map[String, String] =
-    Queries.oracles ++ QueriesExtra.oracles ++
-      operators.PipelineQueries.oracles ++ QueriesR4.oracles ++
-      QueriesR5.oracles ++ QueriesR7.oracles ++ QueriesR8.oracles ++
-      QueriesR9.oracles ++ QueriesR10.oracles ++ QueriesR11.oracles ++
-      QueriesR12.oracles ++ QueriesR13.oracles ++ QueriesR14.oracles ++
-      QueriesR15.oracles ++ QueriesR16.oracles ++ QueriesR17.oracles
+  /** For each exactly checked query, equivalent ANSI SQL runnable by
+    * DuckDB on the same parquet tables. Rows-only queries (seeded
+    * sampling, sketches, approximate indexes) have none. */
+  lazy val oracleSql: Map[String, String] =
+    QuerySpec.all.collect { case QuerySpec(name, _, Sql(text)) => name -> text }.toMap
 }

@@ -311,7 +311,7 @@ object LinkGraph {
     val idNullable = edges.schema.fields.exists(_.nullable)
     val part = new HashPartitioner(
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val level = Materialize.storageLevel(spark)
+    val level = Materialize.storageLevel
     // Every RDD persisted here until released; on the way out all but
     // the returned state go, on failure too.
     val held = scala.collection.mutable.LinkedHashSet.empty[RDD[_]]

@@ -28,14 +28,13 @@ object Materialize {
 
   val ConfKey = "spark.graft.checkpoint"
 
-  /** Storage level for `local` checkpoints; `disk` (DISK_ONLY) or
-    * `memory` (Spark's MEMORY_AND_DISK default). Disk is the default:
-    * checkpointed intermediates are read back exactly once per pass, so
-    * keeping them on local disk costs little, while holding them
-    * deserialized on the heap leaves the NEXT job to collect them —
+  /** Storage level of `local` checkpoints: DISK_ONLY. Checkpointed
+    * intermediates are read back exactly once per pass, so keeping them
+    * on local disk costs little, while holding them deserialized on the
+    * heap (MEMORY_AND_DISK) leaves the NEXT job to collect them —
     * measured as multi-second GC landing inside later benchmark runs of
     * the prefix-sum family (run-to-run spreads of 80-190%). */
-  val StorageConfKey = "spark.graft.checkpointStorage"
+  val storageLevel: StorageLevel = StorageLevel.DISK_ONLY
 
   def checkpoint(df: DataFrame): DataFrame = checkpoint(df, eager = true)
 
@@ -50,28 +49,18 @@ object Materialize {
     * barrier. */
   def checkpoint(df: DataFrame, eager: Boolean): DataFrame =
     if (reliable(df.sparkSession)) df.checkpoint(eager)
-    else df.localCheckpoint(eager, storageLevel(df.sparkSession))
+    else df.localCheckpoint(eager, storageLevel)
 
-  /** The RDD form, under the same two keys, for loops that keep their
-    * state as RDDs ([[LinkGraph.pageRankConverged]]). Lazy, as RDD
+  /** The RDD form, under the same [[ConfKey]] mode, for loops that keep
+    * their state as RDDs ([[LinkGraph.pageRankConverged]]). Lazy, as RDD
     * checkpoints are: `rdd` is persisted at [[storageLevel]] (unless it
     * already is) and pinned by the first action that computes it;
     * `reliable` then also writes it to the checkpoint directory. */
   def checkpoint[T](rdd: RDD[T], spark: SparkSession): RDD[T] = {
-    if (rdd.getStorageLevel == StorageLevel.NONE) rdd.persist(storageLevel(spark))
+    if (rdd.getStorageLevel == StorageLevel.NONE) rdd.persist(storageLevel)
     if (reliable(spark)) rdd.checkpoint() else rdd.localCheckpoint()
     rdd
   }
-
-  /** The level `local` checkpoints are kept at ([[StorageConfKey]]). */
-  def storageLevel(spark: SparkSession): StorageLevel =
-    spark.conf.get(StorageConfKey, "disk") match {
-      case "disk" => StorageLevel.DISK_ONLY
-      case "memory" => StorageLevel.MEMORY_AND_DISK
-      case other =>
-        throw new IllegalArgumentException(
-          s"$StorageConfKey must be 'disk' or 'memory', got '$other'")
-    }
 
   private def reliable(spark: SparkSession): Boolean =
     spark.conf.get(ConfKey, "local") match {

@@ -564,7 +564,7 @@ object Similarity {
     * 0.95 for cos = 0.45 (p_bit = 1 − 1.104/π = 0.649, band = 0.649⁴ =
     * 0.177, recall = 1 − (1−0.177)¹⁶); the earlier 8×6 shape measured
     * only ~0.44 pooled recall at sf0.01/sf0.1 — AND-amplification too
-    * aggressive for barely-over-threshold pairs. [[graft.QueriesR5]]'s
+    * aggressive for barely-over-threshold pairs. [[graft.queries.SimilarityQueries]]'s
     * q_srp_recall gates the pooled recall ≥ 0.8 in the driver. */
   def srpCosinePairs(
       df: DataFrame,

@@ -669,7 +669,7 @@ object TextAnalysis {
     * winner is deterministic), its count, and its fraction of all
     * tokens — the "fraction of tokens in the most common word" rule
     * that catches keyword-stuffed and template documents which
-    * distinct-ratio metrics ([[graft.QueriesR4]] q_repetition) dilute.
+    * distinct-ratio metrics ([[graft.queries.CurationQueries]] q_repetition) dilute.
     *
     * Entirely row-local — one fold over the distinct tokens per row
     * (O(n·distinct) comparisons inside codegen, no shuffle at any

@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
@@ -35,8 +37,9 @@ object Sources {
     val status = p.getFileSystem(conf).getFileStatus(p)
     if (status.isDirectory) spark.read.parquet(path)
     else {
-      val footer = new Footer(status.getPath,
-        ParquetFileReader.readFooter(conf, status, SKIP_ROW_GROUPS))
+      val options = HadoopReadOptions.builder(conf).withMetadataFilter(SKIP_ROW_GROUPS).build()
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf), options)
+      val footer = try new Footer(status.getPath, reader.getFooter) finally reader.close()
       val schema = ParquetFileFormat.readSchemaFromFooter(
         footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
       spark.read.schema(schema).parquet(path)

@@ -48,4 +48,17 @@ class ComplexitySpec extends AnyFunSuite {
     assert(Complexity.countOcc("join inner join", "join") == 2)
     assert(Complexity.countOcc("", "x") == 0)
   }
+
+  test("an alias containing 'join' counts as a join (keyword model, reference parity)") {
+    // The model counts keywords in the explain text, as the reference
+    // does, so a column alias that contains "join" inflates the
+    // multiplier of a plan with no join in it (SURVEY §4.3).
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions.col
+    val df = spark.read.parquet(s"${TestSpark.sf0001}/lineitem.parquet")
+      .select(col("l_quantity").as("joined_quantity_join"))
+    val (_, m) = Complexity.calculateFromPlan(
+      PlanFingerprint.extendedPlanText(df).toLowerCase, 1.0)
+    assert(m > 0.6, "keyword method inflates on the alias")
+  }
 }

@@ -1118,7 +1118,7 @@ class CrawlSpec extends AnyFunSuite {
   test("parseSitemapBodies: blocks, lastmod prefixes, index entries, dedup") {
     val s = spark
     import s.implicits._
-    val bodies = graft.QueriesR14.SitemapBodies
+    val bodies = queries.CrawlQueries.SitemapBodies
       .map { case (h, ls) => (h, ls.mkString("\n")) }
       .toDF("host", "body")
     val out = Crawl.parseSitemapBodies(bodies, "host", "body")

@@ -113,7 +113,7 @@ class MaterializeSpec extends AnyFunSuite {
     assert(cum.sameElements(expected))
   }
 
-  test("local checkpoints store DISK_ONLY by default, MEMORY_AND_DISK on opt-in") {
+  test("local checkpoints store DISK_ONLY") {
     // The checkpointed RDD is internal to the Dataset (df.rdd derives a
     // fresh unpersisted RDD), so read its level off the context's
     // persistent-RDD registry instead.
@@ -127,19 +127,10 @@ class MaterializeSpec extends AnyFunSuite {
       levels.head
     }
     val src = Seq(1, 2, 3).toDF("x")
-    // Default: blocks on local disk — checkpointed intermediates are
-    // read back once per pass; holding them deserialized on the heap
-    // leaves later jobs to GC them (the bench-spread root cause).
-    val dflt = levelOf(Materialize.checkpoint(src))
-    assert(dflt.contains("Disk") && !dflt.contains("Memory"), dflt)
-    spark.conf.set(Materialize.StorageConfKey, "memory")
-    try {
-      val mem = levelOf(Materialize.checkpoint(src))
-      assert(mem.contains("Memory"), mem)
-      spark.conf.set(Materialize.StorageConfKey, "ssd")
-      intercept[IllegalArgumentException] {
-        Materialize.checkpoint(src)
-      }
-    } finally spark.conf.unset(Materialize.StorageConfKey)
+    // Blocks on local disk — checkpointed intermediates are read back
+    // once per pass; holding them deserialized on the heap leaves later
+    // jobs to GC them (the bench-spread root cause).
+    val level = levelOf(Materialize.checkpoint(src))
+    assert(level.contains("Disk") && !level.contains("Memory"), level)
   }
 }

@@ -291,7 +291,7 @@ class QualityModelSpec extends AnyFunSuite {
   }
 
   test("recalibrate: calibrated values are monotone nondecreasing in bin") {
-    val docsScored = QueriesR14.calibrationScored(spark, TestSpark.sf001)
+    val docsScored = queries.CurationQueries.calibrationScored(spark, TestSpark.sf001)
     val fit = QualityModel.recalibrate(docsScored, "score", "label")
       .orderBy(col("bin")).collect()
     assert(fit.length >= 2)

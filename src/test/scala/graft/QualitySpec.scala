@@ -24,9 +24,9 @@ class QualitySpec extends AnyFunSuite {
 
   test("minhash recall and simhash completeness gates hold at sf0.001") {
     val sf = "/root/testdata/sf0.001"
-    val mh = QueriesR5.all("q_minhash_recall")(spark, sf).collect().head
+    val mh = SparkEntry.queries("q_minhash_recall")(spark, sf).collect().head
     assert(mh.getBoolean(1), s"minhash recall gate (n_exact=${mh.getLong(0)})")
-    val sh = QueriesR5.all("q_simhash_complete")(spark, sf).collect().head
+    val sh = SparkEntry.queries("q_simhash_complete")(spark, sf).collect().head
     assert(sh.getBoolean(0),
       "4x16 banding must find every hamming<=3 pair (pigeonhole)")
   }

@@ -2,19 +2,28 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Smoke coverage for the round-3 corpus widening: every QueriesExtra
-  * entry executes at sf0.001 and returns rows, and every entry carries an
-  * oracle (exactness is the driver's DuckDB gate; replicated locally by
+/** Smoke coverage for the reshaping, multi-set grouping, percentile,
+  * window, scalar-function and array queries of the relational corpus:
+  * each executes at sf0.001 and returns rows, and each carries an oracle
+  * (exactness is checked against DuckDB, locally by
   * tools/check_oracles.py). */
 class QueriesExtraSpec extends AnyFunSuite {
 
+  private val extra = Seq(
+    "q_argminmax", "q_array_fns", "q_collect_list", "q_conditional", "q_cross_join",
+    "q_date_fns", "q_explode", "q_full_outer", "q_grouped_topk", "q_grouping_sets",
+    "q_json", "q_outer_join", "q_percentile", "q_pivot", "q_regex",
+    "q_scalar_subquery", "q_sketch_distinct", "q_skew_join", "q_string_agg",
+    "q_string_fns", "q_unpivot", "q_window_funcs")
+
   test("every extra query has a matching oracle entry") {
-    assert(QueriesExtra.all.keySet == QueriesExtra.oracles.keySet)
+    assert(extra.forall(SparkEntry.queries.contains))
+    assert(extra.forall(SparkEntry.oracleSql.contains))
   }
 
-  QueriesExtra.all.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+  extra.foreach { name =>
     test(s"$name runs and returns rows") {
-      val n = fn(TestSpark.spark, TestSpark.sf0001).count()
+      val n = SparkEntry.queries(name)(TestSpark.spark, TestSpark.sf0001).count()
       assert(n > 0, s"$name returned no rows")
     }
   }
@@ -24,7 +33,7 @@ class QueriesExtraSpec extends AnyFunSuite {
     // across engines by design); pin the accuracy contract here instead.
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
-    val approx = Queries.all("q_approx_distinct")(spark, TestSpark.sf001)
+    val approx = SparkEntry.queries("q_approx_distinct")(spark, TestSpark.sf001)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val exact = spark.read.parquet(s"${TestSpark.sf001}/orders.parquet")
       .groupBy("o_orderstatus")

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Decontaminate
 
-/** Round-7 pipeline operators: decontamination, per-domain caps,
-  * deterministic stratified sampling. */
+/** Decontamination, per-domain caps and deterministic stratified sampling:
+  * the operators and their queries. */
 class QueriesR7Spec extends AnyFunSuite {
   private def spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
@@ -70,12 +70,12 @@ class QueriesR7Spec extends AnyFunSuite {
   }
 
   test("q_domain_cap keeps at most k rows per cell with deterministic ties") {
-    val out = QueriesR7.all("q_domain_cap")(spark, sf)
+    val out = SparkEntry.queries("q_domain_cap")(spark, sf)
     val byCell = out.groupBy("source", "lang").count().collect()
     assert(byCell.nonEmpty && byCell.forall(_.getLong(2) <= 3))
     // determinism across invocations (total order includes doc_id)
-    val again = QueriesR7.all("q_domain_cap")(spark, sf).collect().toSet
-    assert(QueriesR7.all("q_domain_cap")(spark, sf).collect().toSet == again)
+    val again = SparkEntry.queries("q_domain_cap")(spark, sf).collect().toSet
+    assert(SparkEntry.queries("q_domain_cap")(spark, sf).collect().toSet == again)
   }
 
   test("keepCanonical keeps exactly the best row of each cluster") {
@@ -99,12 +99,12 @@ class QueriesR7Spec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val expected = docs.groupBy("lang").count()
       .collect().map(r => r.getString(0) -> (r.getLong(1) + 9) / 10).toMap
-    val got = QueriesR7.all("q_stratified")(spark, sf)
+    val got = SparkEntry.queries("q_stratified")(spark, sf)
       .groupBy("lang").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == expected, s"per-stratum allocation: got $got expected $expected")
-    val a = QueriesR7.all("q_stratified")(spark, sf).collect().toSet
-    val b = QueriesR7.all("q_stratified")(spark, sf).collect().toSet
+    val a = SparkEntry.queries("q_stratified")(spark, sf).collect().toSet
+    val b = SparkEntry.queries("q_stratified")(spark, sf).collect().toSet
     assert(a == b, "hash-ranked selection is deterministic")
   }
 

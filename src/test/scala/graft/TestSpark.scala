@@ -4,10 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole test run (suites run serially). */
 object TestSpark {
-  lazy val warehouse: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-wh").toString
-    d
-  }
+  lazy val warehouse: String = java.nio.file.Files.createTempDirectory("graft-wh").toString
   lazy val cacheDir: String = {
     val d = java.nio.file.Files.createTempDirectory("graft-cache").toString
     CacheConfig.current = CacheConfig(sparkCacheDir = d + "/")
@@ -15,18 +12,7 @@ object TestSpark {
   }
   lazy val spark: SparkSession = {
     val _ = cacheDir // force config init before any caching call
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new graft.functions.GraftSparkExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    Sessions.local(4, warehouse)
   }
 
   /** Delete a catalog table's storage directory but keep its catalog
