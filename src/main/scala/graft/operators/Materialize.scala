@@ -5,10 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The materialization primitive behind the iterative/two-pass operators
-  * ([[Dedup.nearDupComponents]], [[Packing]], [[Splits]]): pins a
-  * DataFrame's contents so (a) loop plans don't grow with iterations and
-  * (b) both passes of a prefix-sum read the SAME sampled range
-  * partitioning.
+  * ([[Dedup.nearDupComponents]], [[Packing]], [[Splits]], the
+  * [[LinkGraph]] loops): pins a DataFrame's (or an RDD's) contents so
+  * (a) loop plans and lineages don't grow with iterations and (b) both
+  * passes of a prefix-sum read the SAME sampled range partitioning.
   *
   * `spark.graft.checkpoint` selects the storage:
   *
@@ -52,7 +52,8 @@ object Materialize {
     else df.localCheckpoint(eager, storageLevel)
 
   /** The RDD form, under the same [[ConfKey]] mode, for loops that keep
-    * their state as RDDs ([[LinkGraph.pageRankConverged]]). Lazy, as RDD
+    * their state as RDDs (the block loop every [[LinkGraph]] PageRank
+    * entry point runs). Lazy, as RDD
     * checkpoints are: `rdd` is persisted at [[storageLevel]] (unless it
     * already is) and pinned by the first action that computes it;
     * `reliable` then also writes it to the checkpoint directory. */

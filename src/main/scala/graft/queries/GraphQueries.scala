@@ -412,16 +412,14 @@ object GraphQueries {
       operators.LinkGraph.hits(
         QueryParts.linkEdges(s, d), "src", "dst", iterations = HitsIters)),
       Sql(hitsOracle(HitsIters))),
-    // --- PageRank through the CHECKPOINT discipline: 6 iterations
-    //     pinned every 2 — the oracle is the straight 6-iteration
-    //     unroll, so the cache/checkpoint layer's bit-transparency is
-    //     driver-gated cross-engine, not just spec-asserted (the
-    //     lineage doubles per iteration, so real iteration counts
-    //     REQUIRE the pinning; this proves it free of semantics). ---
+    // --- PageRank through the CHECKPOINT discipline: 6 iterations of
+    //     the block loop, each state pinned and the last checkpointed
+    //     — the oracle is the straight 6-iteration unroll, so the
+    //     checkpoint layer's bit-transparency is driver-gated
+    //     cross-engine, not just spec-asserted. ---
     QuerySpec("q_pagerank_pinned", ((s, d) =>
       operators.LinkGraph.pageRank(
-        QueryParts.linkEdges(s, d), "src", "dst", iterations = 6,
-        materializeEvery = 2)),
+        QueryParts.linkEdges(s, d), "src", "dst", iterations = 6)),
       // Checkpointing is bit-transparent: the pinned 6-iteration run
       // replays against the straight 6-iteration unroll.
       Sql(pageRankOracle(6))),
@@ -447,15 +445,11 @@ object GraphQueries {
     //     warm-started from it) — the patch itself must be invisible
     //     in the values. ---
     QuerySpec("q_pagerank_delta", { (s, d) =>
-      // The prior ranks are MATERIALIZED before the delta run — the
-      // production shape (last release's converged ranks are a table
-      // read back from the cache, never a live lineage). Left lazy,
-      // the delta run's two rank references per iteration re-execute
-      // the whole prior pageRank up to 4x inside one action (measured
-      // ~8 s vs ~5 s at sf0.1); value-transparent either way.
-      val prior = operators.Materialize.checkpoint(
-        operators.LinkGraph.pageRank(
-          prevEdges(s, d), "src", "dst", iterations = 2))
+      // pageRank is eager: the prior is already the pinned ranks of
+      // its last iteration, read once by the delta run's adjacency
+      // build.
+      val prior = operators.LinkGraph.pageRank(
+        prevEdges(s, d), "src", "dst", iterations = 2)
       operators.LinkGraph.pageRankDelta(
         prevEdges(s, d), addedEdges(s, d), removedEdges(s, d),
         "src", "dst", prior, iterations = 2)

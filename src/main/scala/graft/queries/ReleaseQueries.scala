@@ -350,7 +350,7 @@ object ReleaseQueries {
       // even-doc_id half (previous release stand-in) and the released
       // scores, per-bin terms rounded then micro-folded — the same
       // arithmetic as q_calibration_ece / q_psi.
-      Sql(s"""WITH m AS (
+      Sql(s"""WITH m AS MATERIALIZED (
          |${releaseOracle}
          |), tot AS (SELECT CAST(count(*) AS BIGINT) n_docs_in FROM documents),
          |agg AS (SELECT CAST(count(*) AS BIGINT) n_docs_out,

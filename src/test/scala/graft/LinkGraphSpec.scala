@@ -8,11 +8,64 @@ import org.apache.spark.sql.DataFrame
 import graft.operators.{LinkGraph, Materialize}
 
 /** Fixed-point PageRank semantics (hand-computed iteration, dangling
-  * mass, mass conservation, partitioning bit-stability) and the degree
-  * / link-locality report. */
+  * mass, mass conservation, partitioning bit-stability, a driver-side
+  * reference) and the degree / link-locality report. */
 class LinkGraphSpec extends AnyFunSuite {
 
   private def spark = TestSpark.spark
+
+  /** The scaladoc formulas of [[LinkGraph.pageRank]] and
+    * [[LinkGraph.personalizedPageRank]] in plain Scala over an edge
+    * list, independent of Spark. None is the null endpoint: one more
+    * vertex, always dangling, whose out-links carry nothing; a link to
+    * it counts in its source's degree and its share is dropped. */
+  private object Reference {
+    type V = Option[Long]
+    private val (scale, num, den) = (1000000000L, 85L, 100L)
+
+    private class Graph(edges: Seq[(V, V)]) {
+      val verts: Seq[V] = edges.flatMap(e => Seq(e._1, e._2)).distinct
+      private val outdeg: Map[Long, Long] =
+        edges.collect { case (Some(u), _) => u }
+          .groupMapReduce(identity)(_ => 1L)(_ + _)
+      def insum(r: Map[V, Long]): Map[V, Long] =
+        edges.collect { case (Some(u), Some(v)) => (Some(v): V) -> r(Some(u)) / outdeg(u) }
+          .groupMapReduce(_._1)(_._2)(_ + _)
+      def dang(r: Map[V, Long]): Long =
+        verts.filter(_.forall(!outdeg.contains(_))).map(r).sum
+    }
+
+    /** `k` iterations from `initial` (by id; other vertices at the
+      * uniform start). */
+    def pageRank(edges: Seq[(V, V)], k: Int,
+        initial: Map[Long, Long] = Map.empty): Map[V, Long] = {
+      val g = new Graph(edges)
+      val n = g.verts.size
+      val init = scale / n
+      val base = (den - num) * init / den
+      val r0 = g.verts.map(v => v -> v.flatMap(initial.get).getOrElse(init)).toMap
+      (1 to k).foldLeft(r0) { (r, _) =>
+        val (in, d) = (g.insum(r), g.dang(r))
+        g.verts.map(v => v -> (base + num * (in.getOrElse(v, 0L) + d / n) / den)).toMap
+      }
+    }
+
+    /** `k` personalized iterations; S = the non-null `seeds` in the graph. */
+    def personalized(edges: Seq[(V, V)], seeds: Seq[V], k: Int): Map[V, Long] = {
+      val g = new Graph(edges)
+      val inS = g.verts.filter(v => v.isDefined && seeds.contains(v)).toSet
+      val s = inS.size.toLong
+      val init = scale / s
+      val base = (den - num) * init / den
+      def seed(v: V) = if (inS(v)) 1L else 0L
+      val r0 = g.verts.map(v => v -> seed(v) * init).toMap
+      (1 to k).foldLeft(r0) { (r, _) =>
+        val (in, d) = (g.insum(r), g.dang(r))
+        g.verts.map(v => v -> (seed(v) * (base + num * (d / s) / den) +
+          num * in.getOrElse(v, 0L) / den)).toMap
+      }
+    }
+  }
 
   /** 1 -> 2, 2 -> {1, 3}; vertex 3 dangling. */
   private def triangle = {
@@ -114,26 +167,16 @@ class LinkGraphSpec extends AnyFunSuite {
       (2L, "aa", 1L, 1L), (2L, "zz", 1L, 2L)))
   }
 
-  test("pageRank materializeEvery: bit-identical ranks, plan depth bounded") {
-    // The checkpoint discipline is a PHYSICAL decision only: fixed-
-    // point Longs make the materialized run provably equal to the
-    // straight one, value for value.
-    val straight = rankMap(LinkGraph.pageRank(
-      triangle, "src", "dst", 7, materializeEvery = 0))
-    val pinned = LinkGraph.pageRank(
-      triangle, "src", "dst", 7, materializeEvery = 2)
-    assert(rankMap(pinned) == straight,
-      "materialization must not change a single rank unit")
-    // And it is WHY the option exists: the pinned plan's analyzed
-    // depth stays bounded by the window since the last checkpoint
-    // instead of growing with the full iteration count.
-    val unpinnedDepth = LinkGraph.pageRank(
-      triangle, "src", "dst", 7, materializeEvery = 0)
-      .queryExecution.analyzed.treeString.linesIterator.size
-    val pinnedDepth = pinned.queryExecution.analyzed.treeString
-      .linesIterator.size
-    assert(pinnedDepth < unpinnedDepth / 2,
-      s"pinned plan should be far shallower: $pinnedDepth vs $unpinnedDepth")
+  test("pageRank: plan and lineage the same size at any iteration count") {
+    // The loop pins every state and checkpoints the last, so the result
+    // reads one pin: neither its plan nor its RDD lineage grows with
+    // the iterations that produced it.
+    def size(df: DataFrame) = (
+      df.queryExecution.analyzed.treeString.linesIterator.size,
+      df.rdd.toDebugString.linesIterator.size)
+    val one = LinkGraph.pageRank(triangle, "src", "dst", 1)
+    val seven = LinkGraph.pageRank(triangle, "src", "dst", 7)
+    assert(size(seven) == size(one), s"${size(seven)} vs ${size(one)}")
   }
 
   test("pageRankConverged: stops at the exact fixed point") {
@@ -143,8 +186,8 @@ class LinkGraphSpec extends AnyFunSuite {
     // The converged state equals a straight run of the same length
     // (warm-start exactness), and one more iteration is the identity
     // — the definition of a fixed point in fixed-point arithmetic.
-    assert(m == rankMap(LinkGraph.pageRank(
-      triangle, "src", "dst", k, materializeEvery = 4)), s"k=$k")
+    assert(m == rankMap(LinkGraph.pageRank(triangle, "src", "dst", k)),
+      s"k=$k")
     assert(m == rankMap(LinkGraph.pageRank(
       triangle, "src", "dst", 1, initial = Some(conv))),
       "fixed point must be stable under one more iteration")
@@ -181,20 +224,6 @@ class LinkGraphSpec extends AnyFunSuite {
     // Vertex 4 lost its only out-edge but gained an in-edge: it must
     // still be in the result (the vertex set is the patched graph's).
     assert(viaDelta.contains(4L))
-  }
-
-  test("hits: bit-identical across materialization cadences") {
-    val a = LinkGraph.hits(triangle, "src", "dst", 4, materializeEvery = 0)
-    val b = LinkGraph.hits(triangle, "src", "dst", 4, materializeEvery = 1)
-    val c = LinkGraph.hits(triangle, "src", "dst", 4, materializeEvery = 2)
-    // cadence > iterations: NO iteration ever pins (1..3 % 4 != 0), so
-    // the statics must stay lazy too — and values still agree.
-    val d = LinkGraph.hits(triangle, "src", "dst", 3, materializeEvery = 4)
-    val dRef = LinkGraph.hits(triangle, "src", "dst", 3, materializeEvery = 0)
-    def m(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(m(a) == m(b) && m(b) == m(c))
-    assert(m(d) == m(dRef))
   }
 
   test("pageRankConverged: never overruns maxIterations (clamped last segment)") {
@@ -281,21 +310,25 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(authMass > 999999990L && authMass <= 1000000000L, s"auth $authMass")
   }
 
-  test("pageRank: the only driver action is the vertex count") {
-    // Plan sanity: with materialization OFF, ranks is a lazy frame —
-    // building k iterations must not run per-iteration jobs (the
-    // dangling total is a broadcast cross join, not a collect), so
-    // construction cost is the vertex count alone, independent of k.
-    // (The materializeEvery default deliberately trades this laziness
-    // for bounded lineage past 4 iterations — its eager checkpoint
-    // jobs are the feature, covered by the bit-identity test above.)
-    val (df, oneIter) = TestSpark.jobsDuring(
-      LinkGraph.pageRank(triangle, "src", "dst", 1, materializeEvery = 0))
-    val (_, sixIter) = TestSpark.jobsDuring(
-      LinkGraph.pageRank(triangle, "src", "dst", 6, materializeEvery = 0))
-    assert(sixIter == oneIter,
-      s"construction jobs must not scale with iterations: 1-iter=$oneIter 6-iter=$sixIter")
-    assert(df.columns.toSeq == Seq("id", "rank_fp"))
+  test("reference: reproduces the hand-computed PageRank and PPR iterations") {
+    // The driver-side reference the shape test below checks against,
+    // anchored to the hand computations of the first tests.
+    val t: Seq[(Option[Long], Option[Long])] =
+      Seq((1L, 2L), (2L, 1L), (2L, 3L)).map { case (u, v) => (Some(u), Some(v)) }
+    assert(Reference.pageRank(t, 1) ==
+      Map(Some(1L) -> 286111109L, Some(2L) -> 427777776L, Some(3L) -> 286111109L))
+    assert(Reference.personalized(t, Seq(Some(1L)), 1) ==
+      Map(Some(1L) -> 150000000L, Some(2L) -> 850000000L, Some(3L) -> 0L))
+  }
+
+  test("pageRank warm-start: prior rows for one id add up, null ids and ranks match nothing") {
+    val s = spark
+    import s.implicits._
+    val split = Seq((Some(1L), Some(300L)), (Some(1L), Some(477L)),
+      (None, Some(5L)), (Some(2L), None)).toDF("id", "rank_fp")
+    val whole = Seq((1L, 777L)).toDF("id", "rank_fp")
+    assert(rankMap(LinkGraph.pageRank(triangle, "src", "dst", 2, initial = Some(split))) ==
+      rankMap(LinkGraph.pageRank(triangle, "src", "dst", 2, initial = Some(whole))))
   }
 
   /** Ranks by id, with the null vertex under None. */
@@ -318,31 +351,46 @@ class LinkGraphSpec extends AnyFunSuite {
   test("pageRankConverged == pageRank(k) on every graph shape and partitioning") {
     val s = spark
     import s.implicits._
+    def some(es: Seq[(Long, Long)]) = es.map { case (u, v) => (Some(u), Some(v)) }
     // Each graph with its pinned iteration count at tolFp = 0,
     // segment = 4 (the star and the doubled edge end in an integer
     // cycle, so they run to maxIterations).
-    val graphs = Seq(
-      ("triangle", triangle, 40),
-      ("star into a sink", (0L to 8L).map(u => (u, 9L)).toDF("src", "dst"),
-        64),
+    val graphs: Seq[(String, Seq[(Option[Long], Option[Long])], Int)] = Seq(
+      ("triangle", some(Seq((1L, 2L), (2L, 1L), (2L, 3L))), 40),
+      ("star into a sink", some((0L to 8L).map(u => (u, 9L))), 64),
       // 1->2 doubled (twice the weight), 2->2 a self-loop, 4 no in-link.
       ("duplicate edge and self-loop",
-        Seq((1L, 2L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 1L), (4L, 3L))
-          .toDF("src", "dst"), 64),
+        some(Seq((1L, 2L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 1L), (4L, 3L))),
+        64),
       // The null endpoint is one more vertex, dangling: 3's link to it
       // counts in 3's out-degree, its share of rank is dropped, and the
       // null -> 1 link carries nothing.
       ("null endpoints",
         Seq((Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(2L), Some(3L)),
-          (Some(3L), None), (None, Some(1L))).toDF("src", "dst"), 44))
-    for ((name, g, expectK) <- graphs) {
-      val straight = ranksOf(LinkGraph.pageRank(g, "src", "dst", expectK))
+          (Some(3L), None), (None, Some(1L))), 44))
+    for ((name, edges, expectK) <- graphs) {
+      val g = edges.toDF("src", "dst")
+      // A warm start with a dead row, a null id and a null rank; seeds
+      // with a phantom and a null id.
+      val (a, b) = (edges.head._1, edges.head._2)
+      val prior = Seq((a, Some(777L)), (Some(99L), Some(123L)),
+        (None, Some(5L)), (b, None)).toDF("id", "rank_fp")
+      val seeds = Seq(a, Some(99L), None)
       for ((parts, input) <- Seq("1" -> g, "7" -> g, "4" -> g.repartition(7)))
         withConf("spark.sql.shuffle.partitions", parts) {
-          val (conv, k) = converged(input)
           val where = s"$name, $parts shuffle partitions"
+          val (conv, k) = converged(input)
           assert(k == expectK, where)
-          assert(ranksOf(conv) == straight, where)
+          assert(ranksOf(conv) == Reference.pageRank(edges, expectK), where)
+          for (i <- Seq(1, 4, expectK))
+            assert(ranksOf(LinkGraph.pageRank(input, "src", "dst", i)) ==
+              Reference.pageRank(edges, i), s"$where, pageRank($i)")
+          assert(ranksOf(LinkGraph.pageRank(input, "src", "dst", 3,
+              initial = Some(prior))) ==
+            Reference.pageRank(edges, 3, Map(a.get -> 777L)), s"$where, warm")
+          assert(ranksOf(LinkGraph.personalizedPageRank(input, "src", "dst",
+              seeds.toDF("id"), 3)) ==
+            Reference.personalized(edges, seeds, 3), s"$where, PPR")
         }
     }
   }
@@ -359,48 +407,91 @@ class LinkGraphSpec extends AnyFunSuite {
     import s.implicits._
     val sc = spark.sparkContext
     val pinsBefore = sc.getPersistentRDDs.keySet
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val seeds = Seq(1L).toDF("id")
+    val prior = Seq((1L, 1L)).toDF("id", "rank_fp")
+    def delta(edges: DataFrame, iterations: Int, scale: Long) =
+      LinkGraph.pageRankDelta(edges, empty, empty, "src", "dst", prior,
+        iterations, scale = scale)
     // scale = 1e18: num * (insum + dang div n) passes Long.MaxValue in
-    // the first iteration.
-    val e = intercept[Exception](
-      LinkGraph.pageRankConverged(triangle, "src", "dst", 0L,
-        scale = 1000000000000000000L))
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+    // the first iteration (for PPR with one seed, already the teleport
+    // base (den - num) * scale does).
+    val big = 1000000000000000000L
+    for (overflow <- Seq[() => Any](
+        () => LinkGraph.pageRankConverged(triangle, "src", "dst", 0L, scale = big),
+        () => LinkGraph.pageRank(triangle, "src", "dst", 2, scale = big),
+        () => delta(triangle, 2, big),
+        () => LinkGraph.personalizedPageRank(triangle, "src", "dst", seeds, 2,
+          scale = big))) {
+      val e = intercept[Exception](overflow())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+    }
     intercept[IllegalArgumentException](converged(triangle, tolFp = -1L))
     intercept[IllegalArgumentException](converged(triangle, segment = 0))
     intercept[IllegalArgumentException](
       LinkGraph.pageRankConverged(triangle, "src", "dst", 0L,
         maxIterations = 3, segment = 4))
+    intercept[IllegalArgumentException](converged(empty))
     intercept[IllegalArgumentException](
-      converged(Seq.empty[(Long, Long)].toDF("src", "dst")))
+      LinkGraph.pageRank(triangle, "src", "dst", 0))
+    intercept[IllegalArgumentException](
+      LinkGraph.pageRank(triangle, "src", "dst", 2, dampingNum = 101L))
+    intercept[IllegalArgumentException](
+      LinkGraph.pageRank(empty, "src", "dst", 2))
+    intercept[IllegalArgumentException](delta(triangle, 0, 1000000000L))
+    intercept[IllegalArgumentException](delta(empty, 2, 1000000000L))
+    intercept[IllegalArgumentException](
+      LinkGraph.personalizedPageRank(triangle, "src", "dst", seeds, 0))
+    intercept[IllegalArgumentException](
+      LinkGraph.personalizedPageRank(triangle, "src", "dst", seeds, 2,
+        dampingNum = -1L))
+    intercept[IllegalArgumentException](
+      LinkGraph.personalizedPageRank(triangle, "src", "dst",
+        Seq(99L).toDF("id"), 2))
     assert(sc.getPersistentRDDs.keySet -- pinsBefore == Set.empty)
   }
 
   test("pageRankConverged: jobs bounded by the iterations, one pin left") {
+    val s = spark
+    import s.implicits._
     val sc = spark.sparkContext
-    val pinsBefore = sc.getPersistentRDDs.keySet
-    // Pins held while the loop runs, sampled at every job start: the
-    // adjacency, the segment start, the current and the next state.
-    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sampler = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        peak.accumulateAndGet(
-          (sc.getPersistentRDDs.keySet -- pinsBefore).size,
-          (a: Int, b: Int) => math.max(a, b))
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val prior = Seq((1L, 500000000L)).toDF("id", "rank_fp")
+    // Every entry point runs the same loop: (name, run -> (ranks, k)).
+    val runs = Seq[(String, () => (DataFrame, Int))](
+      "pageRankConverged" -> (() => converged(triangle)),
+      "pageRank" -> (() => (LinkGraph.pageRank(triangle, "src", "dst", 6), 6)),
+      "pageRankDelta" -> (() => (LinkGraph.pageRankDelta(
+        triangle, none, none, "src", "dst", prior, 3), 3)),
+      "personalizedPageRank" -> (() => (LinkGraph.personalizedPageRank(
+        triangle, "src", "dst", Seq(1L).toDF("id"), 5), 5)))
+    for ((name, run) <- runs) {
+      val pinsBefore = sc.getPersistentRDDs.keySet
+      // Pins held while the loop runs, sampled at every job start: the
+      // adjacency, the segment start, the current and the next state.
+      val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+      val sampler = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          peak.accumulateAndGet(
+            (sc.getPersistentRDDs.keySet -- pinsBefore).size,
+            (a: Int, b: Int) => math.max(a, b))
+      }
+      sc.addSparkListener(sampler)
+      val ((ranks, k), jobs) =
+        try TestSpark.jobsDuring(run())
+        finally sc.removeSparkListener(sampler)
+      // One job builds the adjacency, then one per iteration.
+      assert(jobs <= k + 8, s"$name: $jobs jobs for $k iterations")
+      assert(peak.get <= 4,
+        s"$name: ${peak.get} pins held at once over $k iterations")
+      // The adjacency and every superseded state are released; what
+      // remains is the pin the returned frame reads.
+      val left = sc.getPersistentRDDs.keySet -- pinsBefore
+      assert(left.size <= 1, s"$name: pins left behind: $left")
+      assert(ranksOf(ranks).size == 3, name)
     }
-    sc.addSparkListener(sampler)
-    val ((conv, k), jobs) =
-      try TestSpark.jobsDuring(converged(triangle))
-      finally sc.removeSparkListener(sampler)
-    // One job builds the adjacency, then one per iteration.
-    assert(jobs <= k + 8, s"$jobs jobs for $k iterations")
-    assert(peak.get <= 4, s"${peak.get} pins held at once over $k iterations")
-    // The adjacency and every superseded state are released; what
-    // remains is the pin the returned frame reads.
-    val left = sc.getPersistentRDDs.keySet -- pinsBefore
-    assert(left.size <= 1, s"pins left behind: $left")
-    assert(ranksOf(conv).size == 3)
   }
 
   test("pageRankConverged: reliable checkpoints give the same ranks and count as local") {

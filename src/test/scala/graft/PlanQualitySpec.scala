@@ -429,12 +429,15 @@ class PlanQualitySpec extends AnyFunSuite {
       "paragraph dedup must shuffle only the digest df count")
   }
 
-  test("pagerank: partial-agg contributions, dangling mass broadcast, no cartesian") {
+  test("pagerank: the result is one scan of the loop's pinned ranks, no exchange, no cartesian") {
+    // The iterations run on the co-partitioned block loop (contributions
+    // combined map-side by reduceByKey, the dangling total a driver
+    // literal); the returned frame only reads the last state's pin.
     val p = q("q_pagerank").queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"),
-      s"the 1-row dangling total must broadcast, not go cartesian:\n${p.take(2000)}")
-    assert(p.contains("partial"),
-      s"per-destination contribution sums must partial-aggregate map-side:\n${p.take(2000)}")
+    assert(p.contains("Scan ExistingRDD"),
+      s"the ranks must be read from the loop's pinned state:\n${p.take(2000)}")
+    assert(!p.contains("Exchange") && !p.contains("CartesianProduct"),
+      s"nothing is left to shuffle or cross-join after the loop:\n${p.take(2000)}")
     assert(!p.contains("Window"),
       s"pagerank has no per-vertex ordering — a window would be a planner bug:\n${p.take(2000)}")
   }

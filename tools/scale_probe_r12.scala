@@ -1,9 +1,6 @@
-// Round-12 probe: (a) the PageRank plan-growth knee -- lineage DOUBLES
-// per iteration (ranks is referenced twice: contribution sum +
-// dangling mass), so unpinned Catalyst time is ~2^k and
-// materializeEvery bounds it; (b) 1x/10x wall-clock ratios for the
-// round-12 operators (gated frontier, mirror-aware URL dedup, anchor
-// BM25) on DENSE id spaces at BOTH scales -- fixing the r11b probe
+// Round-12 probe: 1x/10x wall-clock ratios for the round-12 operators
+// (gated frontier, mirror-aware URL dedup, anchor BM25, PageRank) on
+// DENSE id spaces at BOTH scales -- fixing the r11b probe
 // flaw where 10x ids sat in sparse bands (offsets of i*10M) while dst
 // wrapped mod 6M, so ~90% of sources could never be destinations and
 // the two scales had qualitatively different graphs. Here ids are
@@ -37,28 +34,7 @@ def time(f: => Unit): Double = {
   val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
 }
 
-// ---- (a) plan-growth knee: Catalyst time to produce the physical
-// plan, unpinned k = 4..12 on a TINY graph (the cost is driver-side
-// plan size, not data), vs pinned every 4. Pinned construction runs
-// its eager checkpoints, so its time includes executing the pinned
-// prefix -- still milliseconds on 100 edges, which is the point.
-val tiny = edges(100L).cache(); tiny.count()
-for (k <- Seq(4, 8, 10, 12)) {
-  val t = time {
-    LinkGraph.pageRank(tiny, "src", "dst", k, materializeEvery = 0)
-      .queryExecution.executedPlan
-  }
-  println(f"PROBE pagerank_plan_unpinned_k$k%-3d $t%8.2fs")
-}
-for (k <- Seq(12, 32)) {
-  val t = time {
-    LinkGraph.pageRank(tiny, "src", "dst", k, materializeEvery = 4)
-      .queryExecution.executedPlan
-  }
-  println(f"PROBE pagerank_plan_pinned_k$k%-3d   $t%8.2fs")
-}
-
-// ---- (b) 1x/10x operator ratios on dense ids ----
+// ---- 1x/10x operator ratios on dense ids ----
 val e1 = edges(N1).cache(); e1.count()
 val e10 = edges(N1 * 10).cache(); e10.count()
 val i1 = ids(N1).cache(); i1.count()
@@ -125,9 +101,8 @@ def ops(e: DataFrame, d: DataFrame, n: Long): Seq[(String, () => Unit)] = Seq(
     Retrieval.bm25WithAnchors(corpus(d), "doc_id", "text",
       anchorEdges(e), "dst", "anchor", Seq("spark", "window", "vector"),
       anchorWeight = 1.5))),
-  "pagerank_8it_pinned4" -> (() => run(
-    LinkGraph.pageRank(e, "src", "dst", iterations = 8,
-      materializeEvery = 4))))
+  "pagerank_8it" -> (() => run(
+    LinkGraph.pageRank(e, "src", "dst", iterations = 8))))
 
 def all1 = ops(e1, i1, N1)
 def all10 = ops(e10, i10, N1 * 10)

@@ -1,9 +1,7 @@
-// Round-13 probe: AUTO checkpoint cadence for the REST of the rank
-// family -- hits (4^k unpinned growth: two half-steps, each
-// referencing its input twice) -- and the pageRankConverged loop to
-// its exact fixed point. Same dense-id graph synthesis as the r12
-// probe (ids 0..N-1, modulus at the actual id count) at 5k and 200k
-// vertices -- the two sides of the pageRank cadence crossover.
+// Round-13 probe: hits (every half-step pinned before its renorm
+// total) and the pageRankConverged loop to its exact fixed point.
+// Same dense-id graph synthesis as the r12 probe (ids 0..N-1, modulus
+// at the actual id count) at 5k and 200k vertices.
 // Run via spark-shell with compiled classes (see .claude/skills/verify);
 // results land as rows in SCALE.md.
 import org.apache.spark.sql.functions._
@@ -30,13 +28,13 @@ def time(f: => Unit): Double = {
 def minOf2(f: => Unit): Double = { val a = time(f); val b = time(f); math.min(a, b) }
 
 // Warm the class graph / codegen once so no config is charged for it.
-run(LinkGraph.hits(edges(5000L), "src", "dst", 2, materializeEvery = 1))
+run(LinkGraph.hits(edges(5000L), "src", "dst", 2))
 
 println("== hits, 4 iterations ==")
-for (n <- Seq(5000L, 200000L); c <- Seq(1, 2, 4)) {
+for (n <- Seq(5000L, 200000L)) {
   val e = edges(n)
-  val t = minOf2(run(LinkGraph.hits(e, "src", "dst", 4, materializeEvery = c)))
-  println(f"HITS n=$n%d cadence=$c%d t=$t%.2f s")
+  val t = minOf2(run(LinkGraph.hits(e, "src", "dst", 4)))
+  println(f"HITS n=$n%d t=$t%.2f s")
 }
 
 println("== pageRankConverged (tolFp=0, segment=4) ==")
