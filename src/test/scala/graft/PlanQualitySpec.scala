@@ -429,7 +429,7 @@ class PlanQualitySpec extends AnyFunSuite {
       "paragraph dedup must shuffle only the digest df count")
   }
 
-  test("pagerank: the result is one scan of the loop's pinned ranks, no exchange, no cartesian") {
+  test("pagerank: one scan of the loop's pinned ranks, no exchange, no cartesian") {
     // The iterations run on the co-partitioned block loop (contributions
     // combined map-side by reduceByKey, the dangling total a driver
     // literal); the returned frame only reads the last state's pin.
