@@ -181,7 +181,6 @@ object Bench {
           tiny()
         }))
     }
-    val controlsOn = !sys.env.get("SPARK_GRAFT_CONTROLS").contains("0")
     val controlSamples =
       scala.collection.mutable.LinkedHashMap.empty[
         String, scala.collection.mutable.ArrayBuffer[Double]]
@@ -202,7 +201,7 @@ object Bench {
     // per-exec seconds append to the sample list. reps is sized from
     // the first point's warmup exec and FROZEN, so every point
     // measures the same quantity.
-    def controlPoint(): Unit = if (controlsOn) controlPlans.foreach {
+    def controlPoint(): Unit = controlPlans.foreach {
       case (name, mk) =>
         try {
           val t0w = System.nanoTime()
@@ -364,14 +363,12 @@ object Bench {
     // isolated re-measure (q_bm25_batch 2.71 in-sweep vs 1.38 isolated,
     // q_embed_srp 2.17 vs 1.77, same build). A real deployment never
     // runs 200 unrelated queries through one driver lifetime either.
-    // Stop and rebuild the session every RECYCLE query groups: class
+    // Stop and rebuild the session every 40 query groups: class
     // JIT and the codegen cache survive (same JVM), so the per-query
     // untimed warmup still absorbs what a fresh session re-pays.
-    // SPARK_GRAFT_RECYCLE tunes the cadence (0 disables — A/B hook).
-    val recycleEvery = sys.env.get("SPARK_GRAFT_RECYCLE")
-      .flatMap(_.toIntOption).getOrElse(40)
+    val recycleEvery = 40
     var groupsSinceRecycle = 0
-    def maybeRecycle(): Unit = if (recycleEvery > 0) {
+    def maybeRecycle(): Unit = {
       groupsSinceRecycle += 1
       if (groupsSinceRecycle >= recycleEvery) {
         groupsSinceRecycle = 0
@@ -440,9 +437,8 @@ object Bench {
       // on the embed family), while the storage blocks are what caused
       // the 100%+ outlier runs and unpersist(blocking) frees them
       // directly. Group-level settle() keeps its GC for cross-query
-      // isolation. SPARK_GRAFT_RUN_CLEAN=0 disables (A/B hook).
-      val runClean = !sys.env.get("SPARK_GRAFT_RUN_CLEAN").contains("0")
-      def dropRunBlocks(): Unit = if (runClean) {
+      // isolation.
+      def dropRunBlocks(): Unit = {
         try spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = true))
         catch { case NonFatal(_) => () }
@@ -468,10 +464,8 @@ object Bench {
       // kept sample is protocol-uniform (settling only some runs made
       // the sample bimodal: ~1.05 s unsettled vs ~1.4 s settled on
       // q_pack_continue).
-      // SPARK_GRAFT_DRAIN=0 disables (A/B hook, like RUN_CLEAN).
-      val drainOn = !sys.env.get("SPARK_GRAFT_DRAIN").contains("0")
       var drainPerRun = false
-      def drainDebt(): Unit = if (drainPerRun && drainOn) {
+      def drainDebt(): Unit = if (drainPerRun) {
         try spark.catalog.clearCache() catch { case NonFatal(_) => () }
         System.gc()
         try Thread.sleep(150) catch { case _: InterruptedException => () }

@@ -8,6 +8,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, SubqueryAlias}
 
 /** Cache materialization and lookup.
   *
@@ -15,8 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * database plus its metadata sidecar — reference
   * `dbfs_spark_cache/core_caching.py` (`write_dbfs_cache` `:474-516`,
   * `read_dbfs_cache_if_exist` `:409-471`, `_write_standard_cache`
-  * `:64-115`). Every reader goes through [[lookup]] and every writer
-  * through [[write]]; both decide with the one hit check [[isLive]].
+  * `:64-115`). Every standard entry's key comes from [[Fingerprint]],
+  * which refuses frames it cannot identify; every reader goes through
+  * [[lookup]] and every writer through [[write]], and both decide with
+  * the one hit check [[isLive]].
   * Metadata goes through Hadoop `FileSystem` so any scheme (file://,
   * s3a://, abfss://) works unchanged.
   *
@@ -175,40 +178,45 @@ object CacheIO {
     catch { case NonFatal(_) => df }
   }
 
-  /** [[lookup]] of `df`'s fingerprint; the plan text and sources may be
-    * passed in when the caller already has them. None on a miss, and for
-    * a plan that cannot be rendered (it has no fingerprint). */
+  /** [[lookup]] of `df`'s [[Fingerprint]]; the plan text and source
+    * lines may be passed in when the caller already has them. None on a
+    * miss, and for a frame the fingerprint refuses. */
   def readCacheIfExist(
       df: DataFrame,
       queryPlan: Option[String] = None,
-      inputDirModDatetime: Option[ListMap[String, String]] = None): Option[DataFrame] = {
-    val plan = queryPlan.orElse(PlanFingerprint.queryPlan(df)).getOrElse(return None)
-    val sources = inputDirModDatetime.getOrElse(Freshness.inputDirModTimes(df))
-    lookup(df.sparkSession, CacheKey(sources, plan))
-  }
+      inputDirModDatetime: Option[ListMap[String, String]] = None): Option[DataFrame] =
+    Fingerprint.of(df.queryExecution.analyzed,
+        queryPlan.orElse(PlanFingerprint.queryPlan(df)), inputDirModDatetime)
+      .toOption.flatMap(fp => lookup(df.sparkSession, fp.key))
 
-  /** [[write]] `df` under its own fingerprint (reference
+  /** [[write]] `df` under its own [[Fingerprint]] (reference
     * `core_caching.py:474-516`). With `replace` the caller's lineage is
     * replaced by a plain table scan, so downstream plans hash against
     * the cache table. Throws IllegalArgumentException, writing nothing,
-    * when the plan cannot be rendered. */
+    * for a frame the fingerprint refuses. */
   def writeCache(df: DataFrame, replace: Boolean = true): DataFrame = {
-    val plan = PlanFingerprint.getQueryPlan(df)
-    val out = write(df, CacheKey(Freshness.inputDirModTimes(df), plan))
+    val out = write(df, Fingerprint.required(df).key)
     if (replace) out else df
   }
 
-  /** If `df` is nothing but a scan of one of our cache tables (standard
-    * 32-hex or `data_*`), return that table's hash name. Such a plan IS
-    * the cache — re-caching it would materialize a second copy under a
-    * new fingerprint (reference recognizes this via the `get_table_hash`
-    * cascade, `core_caching.py:543-552`). */
-  def existingCacheScan(df: DataFrame, plan: String): Option[String] = {
-    val db = CacheConfig.current.cacheDatabase
-    Seq("data_", "").view
-      .flatMap(p => PlanFingerprint.findCatalogTablePattern(plan, db, p))
-      .collectFirst { case t if DirectData.isPureScanOf(df, t) => t }
-  }
+  /** The hash of the entry `df` already is, if any: a direct-data frame's
+    * registry tag, or the name of the cache table (standard 32-hex or
+    * `data_*`) that `df` is nothing but a scan of. Such a frame IS the
+    * cache — re-caching it would materialize a second copy under a new
+    * fingerprint. Only a *pure* scan reuses the table's hash; any
+    * Project/Filter/Join on top must re-hash (reference `get_table_hash`
+    * cascade, `core_caching.py:543-552`). `plan` is `df`'s rendered plan. */
+  def storedHash(df: DataFrame, plan: String): Option[String] =
+    DirectData.taggedHash(df).orElse {
+      def strip(p: LogicalPlan): LogicalPlan = p match {
+        case SubqueryAlias(_, child) => strip(child)
+        case other => other
+      }
+      val db = CacheConfig.current.cacheDatabase
+      if (!strip(df.queryExecution.analyzed).isInstanceOf[LeafNode]) None
+      else Seq("data_", "").view.flatMap(PlanFingerprint.findCatalogTablePattern(plan, db, _))
+        .headOption
+    }
 
   /** A cache hit returns the stored table as-is; if the caller asked for
     * a partitioned/bucketed layout the stored table doesn't have, the
@@ -242,16 +250,13 @@ object CacheIO {
     catch { case NonFatal(_) => false }
 
   /** Hash cascade for a DataFrame (reference `core_caching.py:527-571`):
-    * direct-data registry tag, then a pure scan of a cache table
-    * ([[existingCacheScan]]), then a cache-table hash extracted from the
-    * metadata text, else the [[CacheKey]] hash. Throws
-    * IllegalArgumentException when the plan cannot be rendered: such a
-    * DataFrame has no hash. */
+    * the entry it already is ([[storedHash]]), then a cache-table hash
+    * extracted from the metadata text, else its [[Fingerprint]]'s hash.
+    * Throws IllegalArgumentException for a frame the fingerprint refuses:
+    * such a DataFrame has no hash. */
   def tableHash(df: DataFrame): String = {
-    val plan = PlanFingerprint.getQueryPlan(df)
-    DirectData.taggedHash(df).orElse(existingCacheScan(df, plan)).getOrElse {
-      val key = CacheKey(Freshness.inputDirModTimes(df), plan)
-      PlanFingerprint.getHashFromMetadata(key.metadataTxt).getOrElse(key.hash)
-    }
+    val fp = Fingerprint.required(df)
+    storedHash(df, fp.plan).orElse(PlanFingerprint.getHashFromMetadata(fp.key.metadataTxt))
+      .getOrElse(fp.key.hash)
   }
 }

@@ -15,8 +15,9 @@ final case class CacheKey(hash: String, metadataTxt: String) {
 
 object CacheKey {
   /** The standard entry for a plan over its sources:
-    * `MD5(CacheMetadata.render(sources, plan))`. */
-  def apply(sources: ListMap[String, String], plan: String): CacheKey = {
+    * `MD5(CacheMetadata.render(sources, plan))`. Only [[Fingerprint]],
+    * which refuses what it cannot identify, builds one. */
+  private[graft] def apply(sources: ListMap[String, String], plan: String): CacheKey = {
     val txt = CacheMetadata.render(sources, plan)
     CacheKey(PlanFingerprint.md5Hex(txt), txt)
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.DataFrame
 
 /** Plan-derived compute-cost model.
@@ -64,9 +66,10 @@ object Complexity {
 
   /** (complexity, multiplier, totalSizeGb) for a DataFrame (reference
     * `qce.py:202-257`): zero input size still yields a plan multiplier;
-    * an unreadable plan degrades to multiplier 1.0. */
+    * an unreadable plan degrades to multiplier 1.0, unlistable sources to
+    * size 0. */
   def estimate(df: DataFrame): (Double, Double, Double) =
-    estimate(df, Freshness.snapshot(df))
+    estimate(df, Freshness.snapshot(df).getOrElse(SourceSnapshot(ListMap.empty, 0L)))
 
   /** [[estimate]] with the input size taken from the decision's source
     * snapshot: the summed lengths Spark's FileIndex already holds, where

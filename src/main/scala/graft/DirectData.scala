@@ -2,7 +2,7 @@ package graft
 
 import java.time.{LocalDateTime, ZoneOffset}
 
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 
@@ -37,20 +37,6 @@ object DirectData {
     * object came from [[createCachedDataFrame]]. */
   def taggedHash(df: DataFrame): Option[String] =
     Option(registry.get(df.queryExecution.logical))
-
-  /** True when the analyzed plan is nothing but a scan of `tableId` —
-    * the reference only lets *pure* scans of a `data_*` table reuse its
-    * hash; any Project/Filter/Join on top must re-hash
-    * (`core_caching.py:543-552`, integration notebook `:852-1049`). */
-  def isPureScanOf(df: DataFrame, tableId: String): Boolean = {
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case SubqueryAlias(_, child) => strip(child)
-      case other => other
-    }
-    val core = strip(df.queryExecution.analyzed)
-    core.isInstanceOf[LeafNode] &&
-    df.queryExecution.analyzed.toString.contains(tableId)
-  }
 
   // --- deterministic content hashing -------------------------------------
 

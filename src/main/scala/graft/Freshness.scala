@@ -61,12 +61,7 @@ object Freshness {
       .ofInstant(Instant.ofEpochMilli(millis), ZoneOffset.UTC)
       .format(TsFormat)
 
-  /** The source lines of `df`'s fingerprint; see the `LogicalPlan`
-    * overload. */
-  def inputDirModTimes(df: DataFrame): ListMap[String, String] =
-    snapshot(df).freshness
-
-  /** Source lines of a plan's fingerprint:
+  /** Source lines of `df`'s fingerprint:
     *  - per input directory, the newest mtime of its scanned files, in
     *    sorted directory order (reference parity, `core_caching.py:212-297`);
     *  - then [[InputFilesDigestKey]] with the digest of every scanned file.
@@ -76,14 +71,20 @@ object Freshness {
     *    data, or a read of cache or `data_` tables only — cache-on-cache
     *    reads must not invalidate themselves);
     *  - `Map(SchemaChangedPlaceholder -> now)`: analysis-time schema change.
-    */
-  def inputDirModTimes(plan: LogicalPlan): ListMap[String, String] =
-    snapshot(plan).freshness
+    *
+    * Throws IllegalArgumentException when the sources cannot be listed:
+    * such a DataFrame has no fingerprint ([[snapshot]]). */
+  def inputDirModTimes(df: DataFrame): ListMap[String, String] =
+    snapshot(df).getOrElse(throw new IllegalArgumentException(
+      "input sources cannot be listed, so the DataFrame has no cache fingerprint")).freshness
 
-  def snapshot(df: DataFrame): SourceSnapshot = snapshot(df.queryExecution.analyzed)
+  def snapshot(df: DataFrame): Option[SourceSnapshot] = snapshot(df.queryExecution.analyzed)
 
-  def snapshot(plan: LogicalPlan): SourceSnapshot =
-    inputFilesSafe(scannedFiles(plan)) match {
+  /** The plan's [[SourceSnapshot]], or None when its file lists cannot be
+    * read: an entry keyed without them would never be invalidated by a
+    * file change, so [[Fingerprint]] refuses the plan. */
+  def snapshot(plan: LogicalPlan): Option[SourceSnapshot] =
+    inputFilesSafe(scannedFiles(plan)).map {
       case Left(special) => SourceSnapshot(special, 0L)
       case Right(relations) =>
         val sources = relations.collect { case (false, files) => files }.flatten
@@ -121,19 +122,22 @@ object Freshness {
     * (`core_caching.py:258-269`): a Delta-style "schema changed since
     * analysis" error maps to `Left(Map(SchemaChangedPlaceholder → now))`
     * — a freshness value no cache entry can ever match, forcing
-    * invalidation — and any other failure maps to `Left(empty)` (treat
-    * as unknown source). Extracted so the Delta branch is testable in a
+    * invalidation — and any other failure to None (logged): no snapshot,
+    * where the reference treats the source as unknown and keys the entry
+    * on the plan alone. Extracted so the Delta branch is testable in a
     * build with no Delta jar (`FreshnessSpec` pins all three outcomes);
     * the error-code match is on the message substring, exactly what
     * `DELTA_SCHEMA_CHANGE_SINCE_ANALYSIS` carries on a real cluster. */
-  private[graft] def inputFilesSafe[T](fetch: => T): Either[ListMap[String, String], T] =
-    try Right(fetch)
+  private[graft] def inputFilesSafe[T](fetch: => T): Option[Either[ListMap[String, String], T]] =
+    try Some(Right(fetch))
     catch {
       case NonFatal(e) if Option(e.getMessage).exists(_.contains("SCHEMA_CHANGE")) =>
-        Left(ListMap(
+        Some(Left(ListMap(
           SchemaChangedPlaceholder -> LocalDateTime
             .now(ZoneOffset.UTC)
-            .format(TsFormat)))
-      case NonFatal(_) => Left(ListMap.empty)
+            .format(TsFormat))))
+      case NonFatal(e) =>
+        PlanFingerprint.log(s"Input sources cannot be listed: ${e.getMessage}")
+        None
     }
 }

@@ -5,6 +5,7 @@ import java.security.MessageDigest
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.ExtendedMode
 
 /** Query-plan fingerprinting.
@@ -93,9 +94,8 @@ object PlanFingerprint {
     })
   }
 
-  /** Apply the fingerprint cleaning to arbitrary plan text (also used when
-    * fingerprinting logical-plan subtrees for auto-substitution). */
-  private[graft] def cleanPlanText(raw: String): String = {
+  /** Apply the fingerprint cleaning to rendered plan text. */
+  private def cleanPlanText(raw: String): String = {
     // The replacer's return value is a replacement TEMPLATE: a literal
     // `$` in the captured class name (legal in Scala object/inner-class
     // toStrings like `Foo$@1a2b3c`) would throw and leave every such
@@ -125,14 +125,18 @@ object PlanFingerprint {
     * the plan, so two unrenderable plans would share one entry. Here such
     * a plan has no fingerprint and is uncacheable.
     */
-  def queryPlan(df: DataFrame): Option[String] =
+  def queryPlan(df: DataFrame): Option[String] = render(df.queryExecution.analyzed)
+
+  /** [[queryPlan]] of an analyzed plan or subtree: the one plan render of
+    * the cache ([[Fingerprint]]). */
+  def render(plan: LogicalPlan): Option[String] =
     renderSafe {
       // `toString` truncates node field lists at
       // spark.sql.debug.maxToStringFields (default 25): two distinct
       // wide plans sharing a 25-column prefix would render as
       // `... N more fields` and hash EQUAL — a silent wrong cache hit.
       // Render with an explicit non-truncating maxFields instead.
-      df.queryExecution.analyzed.treeString(
+      plan.treeString(
         verbose = true, addSuffix = false, maxFields = Int.MaxValue,
         printOperatorId = false)
     }

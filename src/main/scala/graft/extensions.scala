@@ -27,17 +27,6 @@ object extensions {
   def isServerlessCluster(): Boolean =
     sys.env.getOrElse("DATABRICKS_RUNTIME_VERSION", "").startsWith("client.")
 
-  /** Plans the cache refuses: in-memory/RDD-backed sources whose content
-    * can't be fingerprinted from files (reference
-    * `dataframe_extensions.py:47-49`, README.md:203; `LocalTableScan`
-    * flagged in `integration_test_notebook.py:1103-1106`). Checked
-    * against the analyzed-plan fingerprint text, where these sources
-    * print as LocalRelation / LogicalRDD / ExternalRDD. */
-  private def isUncacheableSource(plan: String): Boolean =
-    plan.contains("Scan ExistingRDD") || plan.contains("ExternalRDD") ||
-      plan.contains("LocalRelation") || plan.contains("LocalTableScan") ||
-      plan.contains("LogicalRDD")
-
   implicit class RichDataFrame(private val df: DataFrame) extends AnyVal {
 
     /** Main entry: plan guard -> cache lookup -> cost-model threshold veto
@@ -56,23 +45,20 @@ object extensions {
           CacheConfig.current.defaultMultiplierThreshold,
         partitionBy: Seq[String] = Nil,
         bucketBy: Option[(Int, Seq[String])] = None): DataFrame = {
-      // No fingerprint, no cache: an unrenderable plan passes through.
-      val plan = PlanFingerprint.queryPlan(df).getOrElse(return df)
-      if (isUncacheableSource(plan)) return df
-      // A pure direct-data cache read is already materialized — bypass
-      // (reference dataframe_extensions.py:54-56).
-      if (DirectData.taggedHash(df).isDefined) return df
-      // Likewise a plan that is already a bare scan of a cache table:
-      // re-caching would write a duplicate copy under a new hash.
-      if (CacheIO.existingCacheScan(df, plan).isDefined) {
+      // No fingerprint, no cache: a frame the fingerprint refuses (an
+      // unrenderable plan, in-memory data) passes through. Its one source
+      // snapshot serves the key, the lookup and, on a miss, the cost
+      // model's input size.
+      val fp = Fingerprint.of(df).getOrElse(return df)
+      // A frame that already is an entry (a direct-data read, or a bare
+      // scan of a cache table) is returned as-is: re-caching it would
+      // write a duplicate copy under a new hash (reference
+      // dataframe_extensions.py:54-56).
+      if (CacheIO.storedHash(df, fp.plan).isDefined) {
         PlanFingerprint.log("Already cache-backed; returning as-is.")
         return df
       }
-
-      // One source snapshot serves the fingerprint, the lookup and, on a
-      // miss, the cost model's input size.
-      val sources = Freshness.snapshot(df)
-      val key = CacheKey(sources.freshness, plan)
+      val key = fp.key
       CacheIO.lookup(df.sparkSession, key) match {
         case Some(hit) =>
           PlanFingerprint.log("Returning existing cache.")
@@ -82,7 +68,7 @@ object extensions {
         case None => ()
       }
 
-      val (complexity, multiplier, _) = Complexity.estimate(df, sources)
+      val (complexity, multiplier, _) = Complexity.estimate(df, fp.snapshot)
       val skipComplexity = dbfsCacheComplexityThreshold.exists(t =>
         t > 0 && complexity < t)
       val skipMultiplier = dbfsCacheMultiplierThreshold.exists(t =>
@@ -157,7 +143,9 @@ object extensions {
   /** Batch-persist Spark-cached DataFrames to the persistent cache, e.g.
     * before cluster shutdown (reference `caching.py:21-175`).
     * Pre-filters by complexity when thresholds are set; skips `data_*`
-    * entries (already persistent); `replace=false` keeps callers' lineage.
+    * entries (already persistent) and frames the [[Fingerprint]] refuses;
+    * keeps callers' lineage. Each frame is fingerprinted once: one plan
+    * render and one source snapshot key, size and write it.
     */
   def backupSparkCachedToDbfs(
       specificDfs: Seq[DataFrame],
@@ -167,21 +155,22 @@ object extensions {
       processInReverseOrder: Boolean = true): Seq[DataFrame] = {
     val ordered =
       if (processInReverseOrder) specificDfs.reverse else specificDfs
-    val eligible = ordered.filter { d =>
-      val h = try CacheIO.tableHash(d) catch { case NonFatal(_) => "" }
-      if (h.startsWith("data_")) false
-      else if (minComplexityThreshold.isEmpty && minMultiplierThreshold.isEmpty) true
-      else
-        try {
-          val (value, mult, _) = Complexity.estimate(d)
-          val multOk = minMultiplierThreshold.forall(mult >= _)
-          val valueOk = minComplexityThreshold.forall(value > _)
-          multOk && valueOk
-        } catch { case NonFatal(_) => true } // inconclusive => include
+    val eligible = ordered.flatMap { d =>
+      Fingerprint.of(d).toOption.filter { fp =>
+        if (CacheIO.storedHash(d, fp.plan).exists(_.startsWith("data_"))) false
+        else if (minComplexityThreshold.isEmpty && minMultiplierThreshold.isEmpty) true
+        else
+          try {
+            val (value, mult, _) = Complexity.estimate(d, fp.snapshot)
+            val multOk = minMultiplierThreshold.forall(mult >= _)
+            val valueOk = minComplexityThreshold.forall(value > _)
+            multOk && valueOk
+          } catch { case NonFatal(_) => true } // inconclusive => include
+      }.map(d -> _)
     }
-    eligible.flatMap { d =>
+    eligible.flatMap { case (d, fp) =>
       try {
-        CacheIO.writeCache(d, replace = false)
+        CacheIO.write(d, fp.key)
         if (unpersistAfterBackup) d.unpersist()
         Some(d)
       } catch {

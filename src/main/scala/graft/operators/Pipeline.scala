@@ -71,9 +71,10 @@ object Pipeline {
     * checkpointed intermediates print as LogicalRDD, which the cache
     * layer (correctly) refuses as unfingerprintable session-transient
     * lineage. Instead each stage is keyed on the RAW corpus
-    * fingerprint — its query plan plus its input-dir mod-times, the
-    * same (plan, sources) pair every standard entry hashes — extended
-    * with a stage descriptor carrying the release parameters. Corpus
+    * [[graft.Fingerprint]] — the same (plan, sources) identity every
+    * standard entry hashes, salted with a stage descriptor carrying the
+    * release parameters. A corpus the fingerprint refuses (in-memory
+    * rows) is computed every time and never stored. Corpus
     * file changes invalidate through the mod-times; parameter changes
     * through the descriptor; and the reference's own hash cascade uses
     * the same metadata-text fallback for unfingerprintable plans
@@ -105,13 +106,12 @@ object Pipeline {
       // Overridable only so specs can pin the invalidation contract
       // (new version ⇒ old entries miss ⇒ stages recompute).
       version: Int = ReleasePipelineVersion): DataFrame = {
-    // An unrenderable corpus plan has no fingerprint: every stage computes.
-    val rawPlan = graft.PlanFingerprint.queryPlan(docs)
-    val inputInfo = graft.Freshness.inputDirModTimes(docs)
+    // A corpus the fingerprint refuses (in-memory rows, an unrenderable
+    // plan) has no identity: every stage computes and nothing is written.
+    val corpus = graft.Fingerprint.of(docs).toOption
     def stage(descriptor: String)(compute: => DataFrame): DataFrame =
-      rawPlan.fold(compute) { raw =>
-        val key = graft.CacheKey(inputInfo,
-          s"$raw\n-- graft.release v$version stage: $descriptor")
+      corpus.fold(compute) { fp =>
+        val key = fp.salted(s"-- graft.release v$version stage: $descriptor")
         graft.CacheIO.lookup(docs.sparkSession, key)
           .getOrElse(graft.CacheIO.write(compute, key))
       }

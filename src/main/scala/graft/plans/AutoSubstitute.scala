@@ -8,9 +8,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.{CacheConfig, CacheIO, CacheKey, CacheMetadata, Freshness, PlanFingerprint}
+import graft.{CacheConfig, CacheIO, CacheMetadata, Fingerprint, PlanFingerprint}
 
 /** Transparent cache substitution — the Catalyst-rule variant of the
   * cache lookup (SURVEY §4.2's "optional advanced" path).
@@ -28,11 +27,15 @@ import graft.{CacheConfig, CacheIO, CacheKey, CacheMetadata, Freshness, PlanFing
   *
   * Cost control: subtrees are pre-filtered against an in-memory index of
   * plan-text hashes harvested from the cache metadata dir — non-matching
-  * subtrees cost one string render + MD5, no I/O. A matching subtree is
-  * fingerprinted from the file lists its relations' FileIndexes already
-  * hold ([[graft.Freshness.inputDirModTimes]]), so it lists no directory
-  * either; only [[graft.CacheIO.lookup]], the hit check `cacheToDbfs`
-  * uses too, touches storage.
+  * subtrees cost one plan render + MD5, no I/O. The render is the
+  * untruncated one the index holds ([[graft.PlanFingerprint.render]]),
+  * so subtrees over sources of any width match. A matching subtree takes
+  * its identity from [[graft.Fingerprint]] with that render: it is
+  * refused when `cacheToDbfs` would refuse it (in-memory or RDD leaves,
+  * say), and keyed from the file lists its relations' FileIndexes
+  * already hold, so it lists no directory either; only
+  * [[graft.CacheIO.lookup]], the hit check `cacheToDbfs` uses too,
+  * touches storage.
   *
   * Gate: `spark.graft.autoSubstitute` via `CacheConfig.autoSubstitute`
   * (default off — parity with the reference requires API-layer-only
@@ -77,15 +80,6 @@ object AutoSubstitute {
     }
   }
 
-  /** Whether every leaf of a subtree is a file-backed relation:
-    * catalog/local/stream relations have other freshness semantics, so
-    * those subtrees are left to the API layer. */
-  private def fileBacked(plan: LogicalPlan): Boolean =
-    plan.collectLeaves().forall {
-      case LogicalRelation(_: HadoopFsRelation, _, _, _, _) => true
-      case _ => false
-    }
-
   final case class SubstituteCachedPlans(spark: SparkSession)
       extends Rule[LogicalPlan] {
 
@@ -101,13 +95,12 @@ object AutoSubstitute {
     }
 
     private def trySubstitute(sub: LogicalPlan): Option[LogicalPlan] = {
-      val planText = PlanFingerprint.cleanPlanText(sub.toString)
+      val planText = PlanFingerprint.render(sub).getOrElse(return None)
       // Never rewrite plans that already read cache tables (prevents
       // cache-on-cache re-entrancy; such plans need no substitution).
       if (planText.contains(CacheConfig.current.cacheDatabase + ".")) return None
       if (!index.contains(PlanFingerprint.md5Hex(planText))) return None
-      if (!fileBacked(sub)) return None
-      val key = CacheKey(Freshness.inputDirModTimes(sub), planText)
+      val key = Fingerprint.of(sub, Some(planText), None).getOrElse(return None).key
       val replacement =
         CacheIO.lookup(spark, key).getOrElse(return None).queryExecution.analyzed
       if (replacement.output.size != sub.output.size) return None

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Structured-Streaming operators over the `events` schema — a
   * beyond-parity extension (the reference has no streaming surface; this
@@ -27,13 +27,6 @@ object Streaming {
   /** Per-user running aggregate maintained by [[runningUserStats]]. */
   final case class UserStat(
       user_id: Long, n_events: Long, total_value: Double, last_type: String)
-
-  /** Open a file stream over an events directory (parquet). Schema is
-    * pinned — streaming sources cannot infer it. */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
-      .parquet(dir)
 
   /** Watermarked tumbling-window counts per event type. Late data beyond
     * `watermark` is dropped and its window state reclaimed — without the
@@ -814,21 +807,5 @@ object Streaming {
       Materialize.checkpoint(
         SubstringDedup.hotLineDigests(census, textCol, maxDf, sep)),
       sep)
-  }
-
-  /** Run a streaming DataFrame to completion against an in-memory sink
-    * and return the sink table (test/backfill helper). */
-  def runToMemory(
-      streaming: DataFrame,
-      queryName: String,
-      outputMode: OutputMode = OutputMode.Update()): DataFrame = {
-    val q = streaming.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(outputMode)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    streaming.sparkSession.table(queryName)
   }
 }

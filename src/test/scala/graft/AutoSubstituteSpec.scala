@@ -38,6 +38,25 @@ class AutoSubstituteSpec extends AnyFunSuite {
       s"subtree must be served from the cache table:\n$planText")
     assert(result.map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSet
       == expected.map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSet)
+
+    // A source wider than spark.sql.debug.maxToStringFields (25): the
+    // subtree's render must not truncate, or it never matches the entry.
+    val d = java.nio.file.Files.createTempDirectory("graft-autosub-wide").toString + "/w"
+    spark.range(0, 50, 1, 1).select((0 until 30).map(i => (col("id") + i).as(s"c$i")): _*)
+      .write.parquet(d)
+    def wide(): DataFrame = spark.read.parquet(d).filter(col("c0") > 5)
+    val wideExpected = wide().orderBy("c0").collect().toSeq
+    wide().cacheToDbfs(
+      overridePreferSparkCache = true,
+      dbfsCacheComplexityThreshold = None,
+      dbfsCacheMultiplierThreshold = None)
+    val (widePlan, wideResult) = withAutoSub {
+      val q = wide().orderBy("c0")
+      (q.queryExecution.analyzed.toString, q.collect().toSeq)
+    }
+    assert(widePlan.contains(CacheConfig.current.cacheDatabase + "."),
+      s"a wide subtree must be served from the cache table:\n$widePlan")
+    assert(wideResult == wideExpected)
   }
 
   test("two distinct cached subtrees substitute inside one join") {

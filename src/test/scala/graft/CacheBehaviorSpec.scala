@@ -174,6 +174,56 @@ class CacheBehaviorSpec extends AnyFunSuite {
     val out = cacheIt(local)
     // Returned as-is: no cache table was created for it.
     assert(out.queryExecution.logical eq local.queryExecution.logical)
+
+    // Every entry point refuses in-memory and RDD leaves, in a subquery
+    // too, and writes nothing for them.
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${CacheConfig.current.cacheDatabase}")
+    def nTables = spark.catalog.listTables(CacheConfig.current.cacheDatabase)
+      .filter(!_.isTemporary).count()
+    val n0 = nTables
+    local.createOrReplaceTempView("graft_local_v")
+    ordersAgg().createOrReplaceTempView("graft_orders_v")
+    val refused = Seq(
+      local,
+      spark.sparkContext.parallelize(Seq((3, "c"))).toDF("id", "v"),
+      spark.createDataFrame(local.rdd, local.schema),
+      ordersAgg().join(local, col("n") === col("id")),
+      spark.sql("SELECT * FROM graft_orders_v WHERE n IN (SELECT id FROM graft_local_v)"))
+    refused.foreach { df =>
+      assert(cacheIt(df) eq df, "cacheToDbfs must return the DataFrame untouched")
+      assert(CacheIO.readCacheIfExist(df).isEmpty)
+      intercept[IllegalArgumentException](CacheIO.tableHash(df))
+      intercept[IllegalArgumentException](CacheIO.writeCache(df))
+      assert(backupSparkCachedToDbfs(Seq(df)).isEmpty)
+    }
+    // Two in-memory frames with one schema render one plan text: keyed on
+    // it, one frame's backup would be served for the other's rows.
+    val dfA = Seq((1, "x"), (2, "y")).toDF("a", "b")
+    val dfB = Seq((3, "z")).toDF("a", "b")
+    backupSparkCachedToDbfs(Seq(dfA.cache()))
+    assert(CacheIO.readCacheIfExist(dfB).isEmpty, "dfB must not be served dfA's rows")
+    dfA.unpersist()
+    // The resumable release over two in-memory corpora with one schema
+    // stores nothing and returns each corpus's own manifest.
+    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+      .select("doc_id", "text").orderBy("doc_id").limit(40).collect().toSeq
+    val corpora = docs.grouped(20).toSeq
+      .map(rows => spark.createDataFrame(new java.util.ArrayList(
+        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), docs.head.schema))
+    corpora.foreach { corpus =>
+      val ids = corpus.collect().map(_.get(0)).toSet
+      val got = operators.Pipeline.releaseResumable(corpus, "doc_id", "text",
+        windowLen = 256L, bpeRounds = 2).collect().map(_.getAs[Any]("doc_id")).toSet
+      assert(got.nonEmpty && got.subsetOf(ids), s"a manifest of another corpus: $got")
+    }
+    spark.catalog.dropTempView("graft_local_v")
+    spark.catalog.dropTempView("graft_orders_v")
+    assert(nTables == n0, "nothing may be written for refused frames")
+    // The refusal reads the plan's leaves, not its text: a file-only
+    // query whose literal reads 'LocalRelation' caches.
+    val literal = ordersAgg().filter(col("o_orderstatus") =!= "LocalRelation")
+    assert(!(cacheIt(literal) eq literal), "a file-only query must cache")
+    assert(CacheIO.readCacheIfExist(literal).isDefined)
   }
 
   test("threshold veto: huge threshold skips caching, 0/None caches") {

@@ -4,7 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.immutable.ListMap
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extensions._
@@ -82,25 +87,49 @@ class FreshnessSpec extends AnyFunSuite {
     assert(Freshness.inputDirModTimes(df).isEmpty)
   }
 
-  test("Delta schema-change errors force invalidation; other errors mean unknown source") {
+  test("Delta schema-change errors force invalidation; other errors refuse the frame") {
     // The reference's Delta branch (core_caching.py:258-269), pinned
     // without a Delta jar: the real error carries the
     // DELTA_SCHEMA_CHANGE_SINCE_ANALYSIS code in its message.
     val delta = Freshness.inputFilesSafe(throw new RuntimeException(
       "[DELTA_SCHEMA_CHANGE_SINCE_ANALYSIS] The schema of your Delta " +
         "table has changed in an incompatible way"))
-    assert(delta.isLeft)
-    assert(delta.swap.toOption.get.keySet ==
+    assert(delta.exists(_.isLeft))
+    assert(delta.get.swap.toOption.get.keySet ==
       Set(Freshness.SchemaChangedPlaceholder),
       "schema change must map to the invalidation placeholder")
-    // Any other inputFiles failure: unknown source, empty map (no
-    // placeholder, no throw).
+    // Any other failure: no snapshot at all (not an empty source map,
+    // which would key the entry on the plan alone).
     val other = Freshness.inputFilesSafe(
       throw new RuntimeException("FileNotFoundException: gone"))
-    assert(other == Left(scala.collection.immutable.ListMap.empty))
+    assert(other.isEmpty)
     // Success passes the fetched value through untouched.
-    assert(Freshness.inputFilesSafe(Array("f1", "f2")) == Right(Array("f1", "f2")) ||
-      Freshness.inputFilesSafe(Array("f1", "f2")).toOption.get.toList == List("f1", "f2"))
+    assert(Freshness.inputFilesSafe(Array("f1", "f2")).get.toOption.get.toList == List("f1", "f2"))
+
+    // End to end: a relation whose FileIndex throws has no fingerprint.
+    // No entry is written for it, and an entry keyed on its plan alone
+    // (what an empty source map would key) is not served.
+    val d = Files.createTempDirectory("graft-flaky").toString + "/t"
+    spark.range(0, 10, 1, 1).write.parquet(d)
+    val rel = spark.read.parquet(d).queryExecution.analyzed.collectFirst {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h
+    }.get
+    val index = new FreshnessSpec.FlakyIndex(rel.location)
+    val df = Bridge.ofRows(spark, LogicalRelation(rel.copy(location = index)(spark)))
+      .filter(col("id") > 3)
+    CacheIO.write(df, CacheKey(ListMap.empty[String, String], PlanFingerprint.getQueryPlan(df)))
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${CacheConfig.current.cacheDatabase}")
+    def nTables = spark.catalog.listTables(CacheConfig.current.cacheDatabase).count()
+    val n0 = nTables
+    index.broken = true
+    assert(Freshness.snapshot(df).isEmpty)
+    intercept[IllegalArgumentException](Freshness.inputDirModTimes(df))
+    assert(df.cacheToDbfs(overridePreferSparkCache = true,
+      dbfsCacheComplexityThreshold = None, dbfsCacheMultiplierThreshold = None) eq df,
+      "a frame whose sources cannot be listed passes through")
+    assert(CacheIO.readCacheIfExist(df).isEmpty, "the plan-only entry must not be served")
+    intercept[IllegalArgumentException](CacheIO.writeCache(df))
+    assert(nTables == n0, "nothing may be written for it")
   }
 
   test("the snapshot is the file list the DataFrame scans, as Spark listed it") {
@@ -113,17 +142,34 @@ class FreshnessSpec extends AnyFunSuite {
     spark.range(0, 100, 1, 2).write.parquet(d)
     val held = spark.read.parquet(d)
     val m0 = Freshness.inputDirModTimes(held)
-    val bytes0 = Freshness.snapshot(held).totalBytes
+    val bytes0 = Freshness.snapshot(held).get.totalBytes
     assert(bytes0 > 0)
     spark.range(0, 50, 1, 1).write.mode("append").parquet(d)
     assert(Freshness.inputDirModTimes(held) == m0,
       "a held DataFrame keeps the files it was created with")
     val reread = spark.read.parquet(d)
     assert(Freshness.inputDirModTimes(reread) != m0, "a re-read sees the new file")
-    assert(Freshness.snapshot(reread).totalBytes > bytes0)
+    assert(Freshness.snapshot(reread).get.totalBytes > bytes0)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
     assert(Freshness.inputDirModTimes(held) == m0, "the snapshot lists no directory")
     assert(Complexity.estimate(held)._3 == bytes0 / (1024.0 * 1024 * 1024),
       "the cost model sizes inputs from the same snapshot")
+  }
+}
+
+object FreshnessSpec {
+  /** A FileIndex that fails every listing once `broken` is set. */
+  final class FlakyIndex(inner: FileIndex) extends FileIndex {
+    @volatile var broken = false
+    override def rootPaths: Seq[Path] = inner.rootPaths
+    override def listFiles(
+        partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      if (broken) throw new java.io.IOException("listing failed")
+      else inner.listFiles(partitionFilters, dataFilters)
+    override def inputFiles: Array[String] = inner.inputFiles
+    override def refresh(): Unit = inner.refresh()
+    override def sizeInBytes: Long = inner.sizeInBytes
+    override def partitionSchema: StructType = inner.partitionSchema
   }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{ModelCache, Similarity}
 
 /** The fitted-model cache behind IVF: correct keying (no false sharing
-  * across inputs or params) and the opt-out switch. The ANN
+  * across inputs or params, no key for in-memory inputs). The ANN
   * euclidean-LSH path no longer appears here — it fits nothing
   * ([[graft.functions.EuclidLshBuckets]] derives planes from the
   * seed), which AnnSpec pins directly. */
@@ -42,15 +42,6 @@ class ModelCacheSpec extends AnyFunSuite {
     ivf(embs, seed = 42L, k = 5).count() // k is post-fit; same model
     assert(ModelCache.size == 1,
       s"same corpus+IVF params must share one model, cached ${ModelCache.size}")
-  }
-
-  test("spark.graft.modelCache=false bypasses the cache") {
-    ModelCache.clear()
-    spark.conf.set(ModelCache.ConfKey, "false")
-    try {
-      ivf(embs, seed = 42L).count()
-      assert(ModelCache.size == 0, "opt-out must not populate the cache")
-    } finally spark.conf.unset(ModelCache.ConfKey)
   }
 
   test("a different input path keys a different model") {
